@@ -47,6 +47,28 @@ package graft.functions
   * Spark's own `Round` expression over adversarial inputs: exact-tie
   * neighbourhoods at every scale, ±ulp walks, subnormals, ±0, NaN,
   * ±Infinity, and uniform random sweeps per magnitude band.
+  *
+  * '''The cast.''' Spark's `CAST(d AS DECIMAL(p, s))` takes the same
+  * shortest-repr D (`BigDecimal.valueOf(d)`), rescales it to s with
+  * HALF_UP and keeps it if the rescaled value has at most p digits.
+  * Its unscaled value is therefore the very integer r that [[round]]
+  * decides, and [[unscaled]] recovers it from the double `round`
+  * returns: `q = round(d, s)` is r/10^s correctly rounded, so q·10^s
+  * differs from r by at most |r|·2⁻⁵³ (q's rounding) plus ½ulp of the
+  * product; below 2^51 each term is ≤ ¼ and `Math.round` returns r
+  * exactly. Ambiguous ties are no exception: `round` already took the
+  * reference path for them. NaN, ±Infinity, |r| ≥ 2^51 and r with
+  * more than p digits get no fast answer, and the caller runs Spark's
+  * own `Cast` (null, or the ANSI error, exactly as Spark decides).
+  *
+  * '''The sum.''' An exact decimal sum needs nothing but integer
+  * addition of unscaled values at the common scale s: Σ(rᵢ·10⁻ˢ) =
+  * (Σrᵢ)·10⁻ˢ with no rounding anywhere. Spark folds wide sums through
+  * `Decimal` objects; [[graft.functions.expressions.ExactDecimalSum]]
+  * adds the same integers into a two's-complement (hi, lo) long pair.
+  * A result of at most 38 digits is below 10^38 < 2^127, so the pair
+  * holds every sum Spark can return; a running value that would wrap
+  * is marked overflowed, and the final value is built once per group.
   */
 object FastRound {
 
@@ -58,6 +80,28 @@ object FastRound {
   /** Largest scale the fast/slow split supports; the rewrite rule only
     * fires for scales in [0, MaxScale]. */
   val MaxScale: Int = 15
+
+  /** [[unscaled]]'s answer when it has none. No decided value can be
+    * this: every fast answer is below 2^51 in magnitude. */
+  val NoFast: Long = Long.MinValue
+
+  /** 2^51: below it `Math.round(round(d, s)·10^s)` is exact. */
+  private val UnscaledLimit = 2251799813685248.0
+
+  /** 10^p as a long, p ∈ [0, 15]. */
+  private val PowL: Array[Long] = Array.tabulate(16)(p => math.pow(10, p).toLong)
+
+  /** The unscaled value of `CAST(d AS DECIMAL(p, s))` (s ≤ [[MaxScale]]),
+    * or [[NoFast]] when Spark's own cast must decide: NaN, ±Infinity,
+    * magnitudes of 2^51 and beyond, and results wider than p digits. */
+  def unscaled(d: Double, s: Int, p: Int): Long = {
+    // checked before rounding too: a huge d would only pay `slow`
+    if (!(Math.abs(d) * Pow(s) < UnscaledLimit)) return NoFast // and NaN
+    val y = round(d, s) * Pow(s)
+    if (!(Math.abs(y) < UnscaledLimit)) return NoFast
+    val k = Math.round(y)
+    if (p < PowL.length && Math.abs(k) >= PowL(p)) NoFast else k
+  }
 
   def round(d: Double, s: Int): Double = {
     if (java.lang.Double.isNaN(d) || java.lang.Double.isInfinite(d)) return d

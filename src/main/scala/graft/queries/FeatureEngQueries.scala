@@ -48,9 +48,14 @@ object FeatureEngQueries {
     val nD = col("n").cast("double")
     def corrOf(a: String, b: String): Column = {
       val sab = col(s"s_$a$b")
-      round((nD * sab - col(s"s_$a") * col(s"s_$b")) /
+      val r = (nD * sab - col(s"s_$a") * col(s"s_$b")) /
         sqrt((nD * col(s"s_$a$a") - col(s"s_$a") * col(s"s_$a")) *
-             (nD * col(s"s_$b$b") - col(s"s_$b") * col(s"s_$b"))), 6)
+             (nD * col(s"s_$b$b") - col(s"s_$b") * col(s"s_$b")))
+      // a negative r that rounds to zero is -0.0 in the oracle (DuckDB
+      // rounds in binary and keeps the sign); Spark's round goes
+      // through BigDecimal, which has no signed zero
+      val rounded = round(r, 6)
+      when(rounded === 0.0 && r < 0.0, lit(-0.0)).otherwise(rounded)
     }
     val names = Map("q" -> "quantity", "d" -> "discount",
       "e" -> "extendedprice", "x" -> "tax")

@@ -89,7 +89,8 @@ class PlanSpec extends GraftSpecBase {
   test("q_agg_group is a 2-phase hash aggregate inside codegen") {
     val df = AggQueries.aggGroup(spark, sf)
     val p = plan(df)
-    assert(p.contains("partial_sum"), p.take(2000)) // map-side combine
+    // map-side combine (its wide double→decimal sums run exact)
+    assert(p.contains("partial_exact_decimal_sum"), p.take(2000))
     assert(p.contains("HashAggregate"), p.take(2000))
     df.collect() // finalize AQE so codegen spans materialize
     // codegen stages print as "*(n) Operator" in the final plan
@@ -139,7 +140,8 @@ class PlanSpec extends GraftSpecBase {
 
   test("q_stats_ext computes moments via partial-aggregable sums (no sort)") {
     val p = plan(MoreRelQueries.statsExt(spark, sf))
-    assert(p.contains("partial_sum"), p.take(3000))
+    // the moments are wide double→decimal sums, run exact
+    assert(p.contains("partial_exact_decimal_sum"), p.take(3000))
     assert(!p.contains("Window"), p.take(3000))
   }
 
@@ -207,5 +209,62 @@ class PlanSpec extends GraftSpecBase {
     assert(p.contains("BroadcastHashJoin"), p.take(4000))
     assert(!p.contains("CartesianProduct"), p.take(4000))
     assert(p.contains("PushedFilters: [IsNotNull"), p.take(4000))
+  }
+
+  /** Spark `Sum`s of an Aggregate, wider than 18 digits, whose input is
+    * a double→decimal cast of scale ≤ 15 (Spark's, or the fast
+    * kernel's), followed through the aliases anywhere in `plans` — the
+    * sums the FastRound rule must have made exact. (Sums in window
+    * frames and wider scales are not its.) */
+  private def wideDoubleCastSums(
+      plans: Seq[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan])
+      : Seq[org.apache.spark.sql.catalyst.expressions.aggregate.Sum] = {
+    import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, Cast, Expression}
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Sum
+    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+    import org.apache.spark.sql.types.{DecimalType, DoubleType}
+    val defs = plans.flatMap(_.flatMap(_.expressions.flatMap(_.collect {
+      case a: Alias => a.exprId -> a.child }))).toMap
+    def fromDoubleCast(e: Expression, depth: Int): Boolean = e match {
+      case c: Cast => c.child.dataType == DoubleType && (c.dataType match {
+        case d: DecimalType => d.scale <= graft.functions.FastRound.MaxScale
+        case _ => false
+      })
+      case _: graft.functions.expressions.FastDecimalCast => true
+      case a: Attribute if depth < 16 =>
+        defs.get(a.exprId).exists(fromDoubleCast(_, depth + 1))
+      case _ => false
+    }
+    plans.flatMap(_.collect { case a: Aggregate => a }.flatMap(_.aggregateExpressions
+        .flatMap(_.collect {
+      case s: Sum if (s.dataType match {
+            case d: DecimalType => d.precision > 18
+            case _ => false
+          }) && fromDoubleCast(s.child, 0) => s
+    })))
+  }
+
+  private def exactSumCount(
+      plans: Seq[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]): Int =
+    plans.map(_.collect { case n => n.expressions.map(_.collect {
+      case e: graft.functions.expressions.ExactDecimalSum => e }.size).sum }.sum).sum
+
+  test("q_quantile_reg, q_feature_corr: wide double→decimal sums run exact") {
+    for ((name, sums) <- Seq("q_quantile_reg" -> 1, "q_feature_corr" -> 14)) {
+      val df = SparkEntry.queries(name)(spark, sf)
+      df.queryExecution.executedPlan // registers the checkpointed interiors
+      val plans = graft.plans.CheckpointRegistry.expand(df.queryExecution.optimizedPlan)
+      assert(exactSumCount(plans) == sums,
+        s"$name: expected $sums exact_decimal_sum\n${plans.mkString("\n")}")
+      val slow = wideDoubleCastSums(plans)
+      assert(slow.isEmpty, s"$name still sums through Spark's Sum: ${slow.mkString(", ")}")
+    }
+  }
+
+  test("no graded query leaves a wide double→decimal sum to Spark's Sum") {
+    val offenders = GradedPlans.logicalExpanded.flatMap { case (name, plans) =>
+      wideDoubleCastSums(plans).map(s => s"$name: $s")
+    }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 }
