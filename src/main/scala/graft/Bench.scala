@@ -6,8 +6,8 @@ import scala.util.control.NonFatal
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line.
   *
   * Setup choices that matter for the number:
-  *  - local[32] / shuffle.partitions=32 by default (the container has
-  *    32 executor threads — env-overridable);
+  *  - the session comes from [[openSession]] (the shared
+  *    [[GraftSession]] factory at the bench posture, env-overridable);
   *  - the 10 base tables are read once and persisted before timing:
   *    every engine in this comparison scans the same ~100 MB, so the
   *    bench measures operator compute, not repeated cold reads (the
@@ -290,6 +290,65 @@ object Bench {
     // (postings self-join + norms — q_tfidf_cosine's capped twin)
     "q_dfcap_cosine")
 
+  /** Concurrent query streams of the timed suite. 14 measured fastest
+    * on the 32-core container (8→20.6 s, 14→18.8 s, 20→21.6 s,
+    * 24→25.9 s at sf0.1): enough oversubscription to fill the
+    * driver-phase gaps each query pays, not so much that shuffle
+    * stages thrash the core budget. */
+  private def streams: Int =
+    sys.env.getOrElse("SPARK_GRAFT_STREAMS", "14").toInt
+
+  /** The bench posture, shared with [[Profile]] so its per-query
+    * numbers are bench-identical.
+    *
+    * Shuffle partitions are sized to the DATA (textbook ~10-100 MB per
+    * partition: the suite's shuffles are single-digit MB, so 4, not
+    * core count), and AQE is off: at sf0.1 on 32 cores its per-stage
+    * re-planning and >16-way task scheduling cost more than they save
+    * (72 s → 54 s total). Both are data-size tunings; at 100 TB they
+    * go back up (AQE on, partitions ≈ 2-3× cores) — see BASELINE.md.
+    *
+    * The bucketed catalog is the default layout: it measured faster
+    * than parquet at full concurrency once buckets ≈ cores/streams
+    * (BASELINE.md round-11 addendum), and it is the layout a 100 TB
+    * deployment reads; SPARK_GRAFT_LAYOUT=off times raw parquet.
+    * Bucket count divides the concurrency budget rather than adding
+    * to it: at 14 streams an N-bucket table gives every query an
+    * N-task scan stage (sf0.1 / 16 cores: 8 and 16 buckets ran ~2.3×
+    * slower than parquet, 2 buckets matched it), so the default is
+    * max(1, cores / streams). */
+  def openSession(sfDir: String, logLevel: String = "WARN"): GraftSession =
+    GraftSession.open(sfDir,
+      GraftSession.Posture.fromEnv(maxCores = 16, shuffle = _ => 4,
+        aqe = Some(false), logLevel = logLevel),
+      layout = Some("bench"),
+      buckets = cores => math.max(1, cores / streams))
+
+  /** One-time warm read and cache of the shared inputs (not timed). */
+  def persistTables(spark: SparkSession, queryDir: String): Unit =
+    Tables.names.foreach { n =>
+      try {
+        val df = if (n == "events") Tables.events(spark, queryDir)
+                 else Tables.table(spark, queryDir, n)
+        df.persist().count()
+      } catch { case NonFatal(_) => }
+    }
+
+  /** Drain the listener bus so every task/stage-end event of the work
+    * just run is counted. The bus API is private[spark]: reflection,
+    * best effort. */
+  private[graft] def drainListenerBus(spark: SparkSession): Unit =
+    try {
+      val bus = spark.sparkContext.getClass
+        .getMethod("listenerBus").invoke(spark.sparkContext)
+      bus.getClass.getMethods
+        .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount <= 1)
+        .foreach { m =>
+          if (m.getParameterCount == 0) m.invoke(bus)
+          else m.invoke(bus, java.lang.Long.valueOf(10000L))
+        }
+    } catch { case NonFatal(_) => }
+
   def main(args: Array[String]): Unit = {
     // canary + loadavg BEFORE Spark spins up: measures what the HOST
     // is doing around this run, not our own 32 threads.
@@ -310,99 +369,13 @@ object Bench {
     val canaryMtPre = canaryMtSec()
     val canaryMemPre = canaryMemSec()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(16, Runtime.getRuntime.availableProcessors()).toString)
-    // Shuffle partitions sized to the DATA (textbook ~10-100 MB per
-    // partition: the suite's shuffles are single-digit MB, so 4, not
-    // core count). At 100 TB the same sizing rule yields thousands of
-    // partitions — this is a per-deployment dial, not architecture.
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "4")
-    val aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "false")
-    // Round-12 (verdict item 4): the bucketed catalog IS the default
-    // bench posture — it measured faster than parquet at full
-    // concurrency once buckets ≈ cores/streams (73.79 s best sf0.1,
-    // beating every parquet run in the same windows; BASELINE.md
-    // round-11 addendum), and it is the storage layout a 100 TB
-    // deployment actually reads. SPARK_GRAFT_LAYOUT=<prefix> still
-    // overrides the prefix; SPARK_GRAFT_LAYOUT=off (or empty) times
-    // the raw-parquet A/B leg. Run-private warehouse, deleted on
-    // exit; the artifact self-describes via its `layout` key.
-    val layoutPrefix = sys.env.get("SPARK_GRAFT_LAYOUT") match {
-      case Some("") | Some("off") => None
-      case Some(p) => Some(p)
-      case None => Some("bench")
-    }
-    val ownWarehouse: Option[String] = layoutPrefix.map(_ =>
-      java.nio.file.Files.createTempDirectory("graft-wh").toString)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      // Measured at sf0.1 (32-core container): the bench's shuffles are
-      // a few MB each, so AQE's per-stage re-planning rounds and >16-way
-      // task scheduling cost more than they save (72 s → 54 s total).
-      // These are DATA-SIZE tunings, not architecture: on a real
-      // cluster at 100 TB both go back up (AQE on, partitions ≈ 2-3×
-      // cores) — see BASELINE.md.
-      .config("spark.sql.adaptive.enabled", aqe)
-      // Round-12 (guide §1.2 step 3): the JVM-wide whole-stage-codegen
-      // class cache holds 100 entries by default — a 548-query suite
-      // compiles ~1500 distinct codegen units, so the warm pass's
-      // compilations are all evicted again before the timed passes,
-      // which then re-pay janino compilation per stage per pass, under
-      // 14-stream CPU contention. Sized to hold the whole suite; NOT a
-      // result cache (it memoizes compiled bytecode keyed on generated
-      // source — every pass still computes from the tables). The same
-      // dial applies verbatim to any multi-tenant job-server or
-      // repeated-ETL deployment at cluster scale.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    ownWarehouse.foreach(builder.config("spark.sql.warehouse.dir", _))
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val queryDir = layoutPrefix match {
-      case Some(p) =>
-        // per-query scan parallelism x CONCURRENCY must ~ cores: at
-        // 14 concurrent streams an N-bucket table gives every query
-        // an N-task scan stage, and N x streams runnable tasks thrash
-        // the scheduler (measured at sf0.1 / 16 cores: 8- and
-        // 16-bucket catalogs ran the suite ~2.3x slower than parquet;
-        // 2 buckets matched it at 89.6 s — while SOLO a 16-bucket
-        // scan is FASTER, 1.3 vs 2.8 s on q_cte_recursive: bucket
-        // count divides the concurrency budget, it does not add to
-        // it). Default = max(1, cores / streams);
-        // SPARK_GRAFT_LAYOUT_BUCKETS overrides.
-        val layoutBuckets = sys.env.get("SPARK_GRAFT_LAYOUT_BUCKETS")
-          .map(_.toInt).getOrElse(math.max(1, cpus.toInt /
-            sys.env.getOrElse("SPARK_GRAFT_STREAMS", "14").toInt))
-        graft.plans.Layout.writeGradedCatalog(spark, sfDir, p,
-          buckets = layoutBuckets)
-        s"catalog:$p"
-      case None => sfDir
-    }
-    // the per-query scoped release (below) unpersists each query's
-    // local checkpoints AFTER consumption — by design, so the RDD
-    // classes' "lineage … cannot be recomputed after unpersisting"
-    // WARN per released frame is expected noise, not a hazard
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd", org.apache.logging.log4j.Level.ERROR)
-    // one-time warm read + cache of the shared inputs (not timed)
-    Tables.names.foreach { n =>
-      try {
-        val df = if (n == "events") Tables.events(spark, queryDir)
-                 else Tables.table(spark, queryDir, n)
-        df.persist().count()
-      } catch { case NonFatal(_) => }
-    }
+    val gs = openSession(sfDir)
+    val spark = gs.spark
+    val queryDir = gs.queryDir
+    persistTables(spark, queryDir)
     // time the oracle-graded surface (capability rows — seeded ML
     // models, sketches — are correctness-declared but not part of the
-    // comparable bench total)
-    // 14 concurrent streams measured fastest on the 32-core container
-    // (8→20.6 s, 14→18.8 s, 20→21.6 s, 24→25.9 s at sf0.1): enough
-    // oversubscription to fill the driver-phase gaps each query pays,
-    // not so much that shuffle stages thrash the core budget.
-    val streams = sys.env.getOrElse("SPARK_GRAFT_STREAMS", "14").toInt
+    // comparable bench total), over `streams` concurrent streams
     val warmup = sys.env.getOrElse("SPARK_GRAFT_WARMUP", "true").toBoolean
     val heavyFirst = Bench.heavyFirstList.zipWithIndex.toMap
     // optional comma-separated subset (profiling aid: combined with
@@ -548,20 +521,8 @@ object Bench {
       sweepToFloor()
       val cAfter = canarySec()
       // listener events are asynchronous: drain the bus so this pass's
-      // task-end metrics are all counted before the delta is taken.
-      // The bus API is private[spark] → best-effort reflection; the
-      // ~1.2 s bracket canary above already covers the common case.
-      try {
-        val bus = spark.sparkContext.getClass
-          .getMethod("listenerBus").invoke(spark.sparkContext)
-        bus.getClass.getMethods
-          .find(m => m.getName == "waitUntilEmpty" &&
-            m.getParameterCount <= 1)
-          .foreach { m =>
-            if (m.getParameterCount == 0) m.invoke(bus)
-            else m.invoke(bus, java.lang.Long.valueOf(10000L))
-          }
-      } catch { case NonFatal(_) => }
+      // task-end metrics are all counted before the delta is taken
+      drainListenerBus(spark)
       val p = Pass(v, failed.asScala.toSeq.distinct.sorted,
         entries.map { case (k, _) =>
           k -> times.getOrDefault(k, -1.0) }.toMap,
@@ -691,7 +652,7 @@ object Bench {
     // marks a catalog-layout run (absent on default runs — the driver
     // artifact is unchanged; extra keys are tailparse-tolerated)
     val layoutJson =
-      layoutPrefix.map(pfx => s""","layout":"$pfx"""").getOrElse("")
+      gs.layout.map(pfx => s""","layout":"$pfx"""").getOrElse("")
     val head = s""""metric":"total","value":${fmt(total)},"unit":"sec","value_norm":${fmt(valueNorm)},"qsum":${fmt(qsum)},"attested":$isAttested,"passes":$passesJson,"contended":$contended,"waited":$waitedSec,"qn":${allTimes.size},"failed":$failedJson,"canary_pre":${fmt(canaryPre)},"canary_post":${fmt(canaryPost)},"canary_end":${fmt(canaryEnd)},"canary_mt_pre":${fmt(canaryMtPre)},"canary_mt_end":${fmt(canaryMtEnd)},"canary_mem_pre":${fmt(canaryMemPre)},"canary_mem_end":${fmt(canaryMemEnd)},"ext_cpu":${fmt(best.extCpu)},"ext_cpu_max":${fmt(passes.map(_.extCpu).max)},"spill_mem":${best.spillMemB},"spill_disk":${best.spillDiskB},"load0":${fmt(load0)},"load1":${fmt(load1)},"solo_max":${fmt(soloMax)},"solo_failed":$soloFailedJson,"sf":"$sfDir"$layoutJson"""
     // Full per-query detail, written to a file (and printed on its own
     // earlier line for humans).
@@ -720,8 +681,7 @@ object Bench {
       if (used + s.length + 1 <= budget) { parts += s; used += s.length + 1 }
     }
     val compactQs = parts.mkString("{", ",", "}")
-    try spark.stop()
-    finally ownWarehouse.foreach(graft.plans.Layout.deleteTree)
+    gs.close()
     // printed AFTER spark.stop(), as the very last stdout lines: the
     // driver parses the tail of stdout, and anything after the JSON
     // (shutdown noise, sbt's "[success]" epilogue — suppressed in

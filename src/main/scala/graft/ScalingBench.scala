@@ -179,21 +179,10 @@ object ScalingBench {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(defaultQueries)
 
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS",
-        math.min(16, Runtime.getRuntime.availableProcessors()).toString)}]")
-      // cluster-realism posture (see scaladoc): the exponent should
-      // include AQE's re-planning as shuffles grow past the 1× size
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32"))
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd", org.apache.logging.log4j.Level.ERROR)
+    // cluster-realism posture (see scaladoc): the exponent should
+    // include AQE's re-planning as shuffles grow past the 1× size
+    val spark = GraftSession.session(GraftSession.Posture.fromEnv(
+      maxCores = 16, shuffle = _ => 32, aqe = Some(true)))
 
     val entries = wanted.flatMap { n =>
       SparkEntry.queries.get(n) match {

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,53 +8,25 @@ object Verify {
     // optional: run only the named queries (dev loop; the driver
     // always calls with two args = full run)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    // Round-11 (verdict item 1): SPARK_GRAFT_LAYOUT=<prefix> runs the
-    // WHOLE graded surface over the production Layout — the fixtures
-    // are first written through Layout.writeGradedCatalog (facts
-    // bucketed by dominant join key, events date-partitioned +
-    // user-bucketed) into a run-private warehouse, then every query
-    // executes against the `catalog:<prefix>` dir. The driver's DuckDB
-    // compare (which reads the raw parquet) then certifies the storage
-    // layout changes no value anywhere on all 531 graded entries.
-    val layoutPrefix = sys.env.get("SPARK_GRAFT_LAYOUT").filter(_.nonEmpty)
-    val ownWarehouse: Option[String] = layoutPrefix.map(_ =>
-      java.nio.file.Files.createTempDirectory("graft-wh").toString)
-    // Round-11 continuation (partition-invariance certification): the
-    // sweep's answers must not depend on the PHYSICAL plan shape — a
-    // 1000-executor cluster partitions both scans and shuffles
-    // completely differently from local[32]. These dials let the same
-    // sweep run under a hostile shape (e.g. SPARK_GRAFT_SHUFFLE=5,
-    // SPARK_GRAFT_MAXPART=262144 + zero open-cost so every scan
-    // splinters, SPARK_GRAFT_AQE=false so nothing re-coalesces) and the
-    // driver-identical hash gate then certifies value-equality. Any
-    // divergence found this way is a real 100 TB bug (tie-broken by
-    // partition order) that sf-local runs can never see.
-    val shuffle = sys.env.get("SPARK_GRAFT_SHUFFLE")
-      .filter(_.nonEmpty).getOrElse(cpus)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      // codegen class cache sized to the whole surface (round-12, same
-      // rationale as Bench: the 100-entry default evicts every unit on
-      // a 548-query sweep, re-paying janino per query; compiled-code
-      // memoization, not result caching)
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    sys.env.get("SPARK_GRAFT_MAXPART").filter(_.nonEmpty).foreach { b =>
-      builder.config("spark.sql.files.maxPartitionBytes", b)
-      // default 4 MB open-cost re-glues small files into one split,
-      // defeating the point of a tiny maxPartitionBytes at sf0.01
-      builder.config("spark.sql.files.openCostInBytes", "0")
-    }
-    sys.env.get("SPARK_GRAFT_AQE").filter(_.nonEmpty).foreach(
-      builder.config("spark.sql.adaptive.enabled", _))
-    ownWarehouse.foreach(builder.config("spark.sql.warehouse.dir", _))
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // SPARK_GRAFT_LAYOUT=<prefix> runs the WHOLE graded surface over
+    // the production Layout (facts bucketed by dominant join key,
+    // events date-partitioned + user-bucketed); the driver's DuckDB
+    // compare, which reads the raw parquet, then certifies the storage
+    // layout changes no value. Buckets default to the core count: Verify
+    // runs ONE query at a time, so per-query scan parallelism should
+    // fill the machine (Bench divides cores by its stream count).
+    // The SHUFFLE/MAXPART/AQE dials let the same sweep run under a
+    // hostile physical shape (e.g. SPARK_GRAFT_SHUFFLE=5,
+    // SPARK_GRAFT_MAXPART=262144 so every scan splinters,
+    // SPARK_GRAFT_AQE=false so nothing re-coalesces): answers must not
+    // depend on partitioning, and any divergence found this way is a
+    // real 100 TB bug that sf-local runs can never see.
+    val gs = GraftSession.open(sfDir,
+      GraftSession.Posture.fromEnv(maxCores = 32, shuffle = cores => cores,
+        aqe = None),
+      layout = None, buckets = cores => cores)
+    val spark = gs.spark
+    val queryDir = gs.queryDir
     // Round-10 (verdict item 3): surface-wide certification dial for
     // the RELIABLE-checkpoint mode (CacheOps.truncated switches every
     // localCheckpoint site to recoverable checkpoint files when the
@@ -82,28 +53,7 @@ object Verify {
         spark.sparkContext.setCheckpointDir(dir)
         if (supplied.isEmpty) Some(dir) else None
       } else None
-    // scoped release unpersists checkpoints after each query is dumped
-    // — the RDD classes' per-frame "cannot be recomputed" WARN is
-    // expected (post-consumption by construction), so keep stderr clean
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd", org.apache.logging.log4j.Level.ERROR)
     new java.io.File(outDir).mkdirs()
-    // materialize the catalog fixtures once, then point every query at
-    // them; without the dial, queries read the raw parquet as before
-    val queryDir = layoutPrefix match {
-      case Some(p) =>
-        // bucket count ~ session cores here: Verify/Explain run ONE
-        // query at a time, so per-query scan parallelism should fill
-        // the machine (the BENCH divides cores by its stream count
-        // instead — see Bench.scala: bucket count divides the
-        // concurrency budget). SPARK_GRAFT_LAYOUT_BUCKETS overrides.
-        val layoutBuckets = sys.env.getOrElse(
-          "SPARK_GRAFT_LAYOUT_BUCKETS", cpus.toString).toInt
-        graft.plans.Layout.writeGradedCatalog(spark, sfDir, p,
-          buckets = layoutBuckets)
-        s"catalog:$p"
-      case None => sfDir
-    }
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
@@ -132,19 +82,15 @@ object Verify {
     } + "\""
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    try {
-      Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-      spark.stop()
-    } finally {
-      // cleanup of the SELF-created checkpoint temp dir on EVERY
-      // in-process exit path, exceptional included (round-10 second
-      // review: a throwing writeString/stop must not leak
-      // data-proportional checkpoint files to /tmp — only a hard
-      // SIGKILL leaks now, and the OS owns /tmp)
-      ownCkptDir.foreach(graft.plans.Layout.deleteTree)
-      // the layout run's warehouse is run-private by construction
-      // (createTempDirectory above) — same lifecycle as the ckpt dir
-      ownWarehouse.foreach(graft.plans.Layout.deleteTree)
+    // stop the session (which deletes a layout run's warehouse), then
+    // the SELF-created checkpoint temp dir, on EVERY in-process exit
+    // path, exceptional included (round-10 second review: a throwing
+    // writeString/stop must not leak data-proportional checkpoint
+    // files to /tmp — only a hard SIGKILL leaks now)
+    try Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    finally {
+      try gs.close()
+      finally ownCkptDir.foreach(graft.plans.Layout.deleteTree)
     }
   }
 }

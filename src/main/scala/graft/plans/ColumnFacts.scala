@@ -31,9 +31,8 @@ import org.apache.spark.sql.types._
   *    entry the data contradicts REJECTS instead of accepting
   *    (ScaleRulesSpec pins both directions).
   *
-  * Loaded once per JVM by the gate suites (GraftSpecBase) and the dev
-  * probe (ScaleProbe) from the same fixture dir the graded plans are
-  * built against. Product mains (Verify/Bench) never load it — the
+  * Loaded once per JVM by the gate suites (GraftSpecBase) from the
+  * same fixture dir the graded plans are built against. Product mains (Verify/Bench) never load it — the
   * proofs then fall back to the structural origin check plus the name
   * vocabulary, which only the build-failing gates rely on anyway.
   */

@@ -58,7 +58,7 @@ object Layout {
 
   /** Materialize ALL graded fixtures from `sfDir` through the
     * production layout into the session catalog as
-    * `<prefix>_<table>` — the write path behind Verify's
+    * `<prefix>_<table>` — the write path behind [[graft.GraftSession]]'s
     * `SPARK_GRAFT_LAYOUT` dial (round-11, verdict item 1: run the
     * WHOLE graded surface over the storage layout it would read at
     * 100 TB, not just LayoutGradedSpec's 5-query subset).
@@ -106,8 +106,8 @@ object Layout {
     * warehouses, checkpoint temp dirs, orphaned test tables). Does NOT
     * follow symlinks out of the tree — a link inside the directory is
     * removed, its target untouched. The single shared implementation
-    * (round-11 review: Verify, Explain and the test base each carried
-    * their own copy, and only one had the symlink guard). */
+    * (round-11 review: three callers each carried their own copy, and
+    * only one had the symlink guard). */
   def deleteTree(dir: String): Unit = {
     def rm(f: java.io.File): Unit = {
       if (!java.nio.file.Files.isSymbolicLink(f.toPath))

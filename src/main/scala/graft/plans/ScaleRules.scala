@@ -6,13 +6,12 @@ import org.apache.spark.sql.execution.SparkPlan
 
 /** Single source of truth for the scale-gate vocabulary and the
   * contraction / row-bound proofs (round-7: previously GradedPlans on
-  * the test side owned the canonical copy and graft.ScaleProbe carried
-  * a hand-synced mirror that had drifted — the dev probe silently
+  * the test side owned the canonical copy and a main-side dev probe
+  * carried a hand-synced mirror that had drifted — the probe silently
   * under-flagged the alias-funnel class the round-6 promotion was
-  * built to catch). Both the build-failing gate suites
-  * (GlobalWindowSpec / GlobalJoinSpec / GlobalFunnelSpec via
-  * GradedPlans) and the main-side dev probe now consume THIS object,
-  * so a vocabulary promotion lands in every consumer at once.
+  * built to catch). The build-failing gate suites (GlobalWindowSpec /
+  * GlobalJoinSpec / GlobalFunnelSpec via GradedPlans) consume THIS
+  * object, so a vocabulary promotion lands in every consumer at once.
   *
   * Scale model these proofs encode: the graded fixtures are
   * TPC-H-shaped (spec-constant domains: 25 nations, 5 regions, 5
@@ -100,16 +99,6 @@ object ScaleRules {
     "tok", "token", "term", "doc_id", "user_id", "u", "node",
     "l_partkey", "p_partkey", "o_custkey", "c_custkey",
     "o_orderkey", "l_orderkey", "event_id", "vec_id")
-
-  /** Calendar-bounded names: |domain| is fixed by the time horizon,
-    * not the corpus — a window/join/sort keyed ONLY by these over
-    * uncontracted facts still funnels ~n/|days| per task as the
-    * corpus grows at fixed horizon. Probed separately (ScaleProbe
-    * SPARK_GRAFT_PROBE_CAL=1) because the graded gates treat calendar
-    * domains as bounded contexts, not partition keys. */
-  val calendarNames: Set[String] = Set(
-    "day", "d", "week", "wk", "dow", "wd", "month", "hour", "day0",
-    "o_orderdate", "l_shipdate", "ts_day")
 
   /** True when every row reaching this subtree's output passed
     * through a row-contracting operator (aggregate, limit, rank

@@ -4,9 +4,9 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
 /** Per-table base-scan census over optimized LOGICAL plans — the
-  * round-8 promotion of Explain's dev census (which found 9 queries
+  * round-8 promotion of the dev census (which found 9 queries
   * silently re-reading fact tables up to 7× in round 7) to shared,
-  * gate-grade logic: [[graft.Explain]] prints it, GlobalScanSpec
+  * gate-grade logic: [[graft.Profile]] prints it, GlobalScanSpec
   * fails the build on it.
   *
   * Counting basis and why:

@@ -122,7 +122,6 @@ object CausalDesignQueries {
     * operator's last-in-sort-order rule = greatest control custkey
     * (mirrored verbatim in the oracle's window ORDER BY). */
   def psmAtt(s: SparkSession, d: String): DataFrame = {
-    graft.GraftExtensions.register(s)
     val cust = scoredUnits(s, d)
     val t = cust.filter(col("treated"))
       .select(col("c_custkey").as("t_key"), col("c_nationkey").as("t_nat"),

@@ -214,7 +214,6 @@ object JoinQueries {
     * the shape that survives dense keys at 100 TB. Inner-filtered to
     * match the oracle. */
   def joinAsofCustom(s: SparkSession, d: String): DataFrame = {
-    graft.GraftExtensions.register(s)
     val e = events(s, d)
     val p = e.filter(col("event_type") === "purchase")
       .select(col("event_id").as("p_id"), col("user_id"), col("ts2").as("p_ts"))
@@ -328,7 +327,6 @@ object JoinQueries {
     * the shape that survives many-interval dimensions at 100 TB. */
   def joinRangeCustom(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    graft.GraftExtensions.register(s)
     val years = (1995 to 2001).map(y => (y, s"$y-01-01", s"${y + 1}-01-01"))
       .toDF("yr", "d_start_s", "d_end_s")
       .select(col("yr"), to_timestamp(col("d_start_s")).as("d_start"),

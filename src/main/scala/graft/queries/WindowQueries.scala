@@ -87,7 +87,6 @@ object WindowQueries {
     * Decimal sums make both differences exact, so the values are
     * bit-identical to the window form's. */
   def winRangeFrame(s: SparkSession, d: String): DataFrame = {
-    graft.GraftExtensions.register(s) // AsOfJoinStrategy for this session
     val cum = graft.operators.PrefixOps.runningSums(
       events(s, d).select(col("event_type"), col("event_id"), col("value")),
       col("event_id"), Seq(col("event_id")),

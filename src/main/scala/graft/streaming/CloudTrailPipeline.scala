@@ -263,6 +263,25 @@ object CloudTrailPipeline {
   case class SessionState(nEvents: Long, start: Long, lastTs: Long)
   case class SessionOut(userId: Long, nEvents: Long, durationMs: Long)
 
+  /** The session machine's step, shared by both operator APIs below:
+    * folds one key's new events, sorted by time, into its open session.
+    * An event less than `gapMs` after the last one extends the session;
+    * a longer gap closes it and opens a new one. Returns the sessions
+    * closed, oldest first, and the open session after the last event
+    * (`state` itself when there are no events). */
+  def sessionStep(state: Option[SessionState], sorted: Seq[UserEvent],
+      gapMs: Long): (Seq[SessionState], Option[SessionState]) =
+    sorted.foldLeft((Vector.empty[SessionState], state)) {
+      case ((closed, Some(s)), e) if e.ts.getTime - s.lastTs < gapMs =>
+        (closed, Some(s.copy(nEvents = s.nEvents + 1, lastTs = e.ts.getTime)))
+      case ((closed, cur), e) =>
+        val t = e.ts.getTime
+        (closed ++ cur, Some(SessionState(1, t, t)))
+    }
+
+  private def summary(userId: Long, s: SessionState): SessionOut =
+    SessionOut(userId, s.nEvents, s.lastTs - s.start)
+
   /** flatMapGroupsWithState session machine: emits a session summary
     * when a user is silent past the gap. State is per-key and
     * WATERMARK-bounded (EventTimeTimeout): sessions close when event
@@ -282,7 +301,7 @@ object CloudTrailPipeline {
           if (state.hasTimedOut) {
             val s = state.get
             state.remove()
-            Iterator(SessionOut(userId, s.nEvents, s.lastTs - s.start))
+            Iterator(summary(userId, s))
           } else {
             val sorted = rows.toSeq.sortBy(_.ts.getTime)
             // No new rows (e.g. a timeout-check batch for another key):
@@ -290,27 +309,14 @@ object CloudTrailPipeline {
             // push it out forever and busy-loop the micro-batch engine.
             if (sorted.isEmpty) Iterator.empty
             else {
-              var closed = List.empty[SessionOut]
-              var cur = state.getOption
-              sorted.foreach { e =>
-                val t = e.ts.getTime
-                cur match {
-                  case Some(s) if t - s.lastTs < gapMs =>
-                    cur = Some(s.copy(nEvents = s.nEvents + 1, lastTs = t))
-                  case Some(s) =>
-                    closed ::= SessionOut(userId, s.nEvents, s.lastTs - s.start)
-                    cur = Some(SessionState(1, t, t))
-                  case None =>
-                    cur = Some(SessionState(1, t, t))
-                }
-              }
+              val (closed, cur) = sessionStep(state.getOption, sorted, gapMs)
               cur.foreach { s =>
                 state.update(s)
                 // must be strictly past the current watermark
                 state.setTimeoutTimestamp(
                   math.max(state.getCurrentWatermarkMs() + 1, s.lastTs + gapMs))
               }
-              closed.reverseIterator
+              closed.iterator.map(summary(userId, _))
             }
           }
       }
@@ -342,26 +348,14 @@ object CloudTrailPipeline {
       val sorted = rows.toSeq.sortBy(_.ts.getTime)
       if (sorted.isEmpty) Iterator.empty
       else {
-        var closed = List.empty[SessionOut]
-        var cur = if (state.exists()) Some(state.get()) else None
-        sorted.foreach { e =>
-          val t = e.ts.getTime
-          cur match {
-            case Some(s) if t - s.lastTs < gapMs =>
-              cur = Some(s.copy(nEvents = s.nEvents + 1, lastTs = t))
-            case Some(s) =>
-              closed ::= SessionOut(userId, s.nEvents, s.lastTs - s.start)
-              cur = Some(SessionState(1, t, t))
-            case None =>
-              cur = Some(SessionState(1, t, t))
-          }
-        }
+        val (closed, cur) = sessionStep(
+          if (state.exists()) Some(state.get()) else None, sorted, gapMs)
         cur.foreach { s =>
           state.update(s)
           getHandle.registerTimer(
             math.max(timers.getCurrentWatermarkInMs() + 1, s.lastTs + gapMs))
         }
-        closed.reverseIterator
+        closed.iterator.map(summary(userId, _))
       }
     }
 
@@ -371,7 +365,7 @@ object CloudTrailPipeline {
           state.get().lastTs + gapMs <= expired.getExpiryTimeInMs) {
         val s = state.get()
         state.clear()
-        Iterator(SessionOut(userId, s.nEvents, s.lastTs - s.start))
+        Iterator(summary(userId, s))
       } else Iterator.empty // stale timer for a superseded session
   }
 

@@ -20,7 +20,6 @@ class AsOfJoinSpec extends GraftSpecBase {
       col("ts2").as("s_ts"))
 
   private def asofDf = {
-    GraftExtensions.register(spark)
     AsOfJoinPlan.asof(purchases, signups,
       leftKeys = Seq(col("p_user")), rightKeys = Seq(col("s_user")),
       leftTime = col("p_ts"), rightTime = col("s_ts"),
@@ -49,7 +48,6 @@ class AsOfJoinSpec extends GraftSpecBase {
   }
 
   test("as-of plan is a co-partitioned merge scan, no pair blow-up") {
-    GraftExtensions.register(spark)
     // round-robin inputs do NOT satisfy the key distribution →
     // EnsureRequirements must insert one hash exchange per side
     val out = AsOfJoinPlan.asof(purchases.repartition(4), signups.repartition(4),
@@ -94,7 +92,6 @@ class AsOfJoinSpec extends GraftSpecBase {
 
   test("as-of exec: randomized trials vs a driver-side reference (ties, empty right, skew)") {
     import spark.implicits._
-    GraftExtensions.register(spark)
     val rnd = new scala.util.Random(11)
     for (trial <- 1 to 5) {
       val nL = Seq(1, 17, 60, 100, 40)(trial - 1)

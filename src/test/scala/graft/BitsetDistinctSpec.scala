@@ -49,7 +49,6 @@ class BitsetDistinctSpec extends GraftSpecBase {
   }
 
   test("SQL registration: bitset_distinct works through spark.sql") {
-    GraftExtensions.register(spark)
     Seq(("a", 3L), ("a", 3L), ("a", 9L)).toDF("g", "k")
       .createOrReplaceTempView("v_bsd_in")
     val got = spark.sql(
@@ -69,7 +68,6 @@ class BitsetDistinctSpec extends GraftSpecBase {
   }
 
   test("SQL path: foldable NULL maxId raises IllegalArgument, not NPE") {
-    GraftExtensions.register(spark)
     Seq(("a", 3L)).toDF("g", "k").createOrReplaceTempView("v_bsd_null")
     val e = intercept[Exception] {
       spark.sql("SELECT g, bitset_distinct(k, CAST(NULL AS INT)) " +

@@ -230,6 +230,12 @@ class ExactDecimalSpec extends GraftSpecBase {
       classOf[org.apache.spark.sql.SparkSession]).invoke(ext, spark)
       .asInstanceOf[Seq[AnyRef]]
     assert(injected.contains(graft.plans.FastRoundRewrite))
+    // `apply` injects the same ordered lists `register` installs
+    assert(injected == GraftExtensions.optimizerRules)
+    val strategies = ext.getClass.getMethod("buildPlannerStrategies",
+      classOf[org.apache.spark.sql.SparkSession]).invoke(ext, spark)
+      .asInstanceOf[Seq[AnyRef]]
+    assert(strategies == GraftExtensions.strategies)
     GraftExtensions.register(spark)
     assert(spark.experimental.extraOptimizations.contains(graft.plans.FastRoundRewrite))
   }

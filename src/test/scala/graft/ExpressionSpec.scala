@@ -61,7 +61,6 @@ class ExpressionSpec extends GraftSpecBase {
   }
 
   test("jaro_winkler is registered as a SQL function and codegen agrees with eval") {
-    GraftExtensions.register(spark)
     val got = spark.sql(
       "SELECT round(jaro_winkler('martha', 'marhta'), 10)").collect()(0).getDouble(0)
     assert(math.abs(got - 0.9611111111) < 1e-9)
@@ -89,7 +88,6 @@ class ExpressionSpec extends GraftSpecBase {
   }
 
   test("VecDotRewrite rule substitutes the codegen kernel for the declarative fold") {
-    GraftExtensions.register(spark)
     val e = Tables.embeddings(spark, sf)
     def declarative = e.select(aggregate(
       zip_with(col("embedding"), col("embedding"),
@@ -132,7 +130,6 @@ class ExpressionSpec extends GraftSpecBase {
   }
 
   test("kmv_distinct is registered as a SQL function") {
-    GraftExtensions.register(spark)
     Tables.lineitem(spark, sf).createOrReplaceTempView("li_kmv")
     val r = spark.sql(
       "SELECT kmv_distinct(CAST(l_orderkey AS STRING), 256) FROM li_kmv")
@@ -141,7 +138,6 @@ class ExpressionSpec extends GraftSpecBase {
   }
 
   test("ngram_shingles is registered as a SQL generator") {
-    GraftExtensions.register(spark)
     Tables.documents(spark, sf).createOrReplaceTempView("docs_ng")
     val n = spark.sql(
       """SELECT doc_id, s.shingle

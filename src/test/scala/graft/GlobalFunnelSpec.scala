@@ -26,7 +26,9 @@ import org.apache.spark.sql.execution.joins.{ShuffledHashJoinExec, SortMergeJoin
   *     key populates ≤|domain| ranges — a presentation `orderBy` on
   *     `event_type` alone serializes ~n/|domain| per task.
   *
-  * The round-6 sweep (graft.ScaleProbe) found ZERO genuine offenders
+  * The round-6 sweep (a main-side dev probe, since retired; its
+  * codegen-fallback audit lives on in graft.Profile) found ZERO
+  * genuine offenders
   * across all graded plans — these gates lock that in. The one
   * allowlisted sort is a proof-machinery blind spot, not a funnel:
   * lazy `localCheckpoint` plants an RDD-scan leaf the structural

@@ -6,7 +6,8 @@ import graft.plans.ScanCensus
 
 /** Round-8 whole-surface gate: the FileScan census, promoted from a
   * by-hand dev tool (round-7 found 9 queries silently re-reading fact
-  * tables N-fold by running graft.Explain manually — and the round-8
+  * tables N-fold by running the census by hand, now graft.Profile's
+  * census pass — and the round-8
   * rootPath-exact recount found the true tail reached 96 scans in one
   * plan, hidden from the old plan-string census by Spark's Location
   * truncation) to a build-failing gate, the funnel-class pattern.

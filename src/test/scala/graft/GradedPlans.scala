@@ -14,9 +14,9 @@ import graft.plans.ScaleRules
   *
   * The bounded-name vocabulary and the contraction / row-bound proofs
   * moved to the MAIN-side [[graft.plans.ScaleRules]] in round 7
-  * (verdict item: single source of truth — graft.ScaleProbe carried a
-  * hand-synced mirror that had drifted behind the round-6 alias
-  * promotion). The forwarders below keep the gate suites' call sites
+  * (verdict item: single source of truth — a main-side dev probe,
+  * since retired, carried a hand-synced mirror that had drifted
+  * behind the round-6 alias promotion). The forwarders below keep the gate suites' call sites
   * unchanged; [[VocabularySyncSpec]] pins the delegation.
   *
   * A query that fails to BUILD here throws, which fails whichever

@@ -57,7 +57,6 @@ class HistFixedSpec extends GraftSpecBase {
   }
 
   test("SQL registration: hist_fixed works through spark.sql") {
-    GraftExtensions.register(spark)
     Seq(("a", 3.0), ("a", 7.0)).toDF("g", "x")
       .createOrReplaceTempView("v_hist_in")
     val got = spark.sql(

@@ -121,7 +121,6 @@ class LayoutSpec extends GraftSpecBase {
   }
 
   test("vec_dot SQL function registers and matches the Column API") {
-    GraftExtensions.register(spark)
     Tables.embeddings(spark, sf).limit(10).createOrReplaceTempView("emb_t")
     val viaSql = spark.sql(
       """SELECT vec_id, vec_dot(embedding, embedding) AS d

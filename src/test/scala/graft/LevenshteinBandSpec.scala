@@ -23,7 +23,6 @@ class LevenshteinBandSpec extends GraftSpecBase {
   // plan assertions run on the parquet-backed table: a local fixture
   // constant-folds to LocalRelation before the rewrite is observable
   test("lev(a,b) <= k rewrites to the banded form in the optimized plan") {
-    GraftExtensions.register(spark)
     val docs = Tables.documents(spark, sf)
     val df = docs.filter(expr("levenshtein(text, 'the quick fox') <= 3"))
     val opt = df.queryExecution.optimizedPlan.toString
@@ -34,7 +33,6 @@ class LevenshteinBandSpec extends GraftSpecBase {
   }
 
   test("strict < and mirrored spellings rewrite and agree with unbounded") {
-    GraftExtensions.register(spark)
     val docs = Tables.documents(spark, sf)
     val variants = Seq(
       "levenshtein(text, 'abc') < 4" -> "Some(3)) >= 0",
@@ -54,7 +52,6 @@ class LevenshteinBandSpec extends GraftSpecBase {
   }
 
   test("foldable non-literal thresholds (arithmetic, cast constants) rewrite too") {
-    GraftExtensions.register(spark)
     val docs = Tables.documents(spark, sf)
     // 50 + 10 folds to 60; CAST(3 AS INT) from a smallint-ish literal
     val arith = docs.filter(expr("levenshtein(text, 'abc') <= 50 + 10"))
@@ -67,7 +64,6 @@ class LevenshteinBandSpec extends GraftSpecBase {
   }
 
   test("boundary semantics: k=0 keeps only equal strings; k<0 untouched") {
-    GraftExtensions.register(spark)
     val eq = fixture.filter(expr("levenshtein(a, b) <= 0"))
     assert(eq.count() == 1)
     // negative threshold: rule leaves the predicate alone (matches 0 rows)
@@ -76,7 +72,6 @@ class LevenshteinBandSpec extends GraftSpecBase {
   }
 
   test("kill switch restores the unbounded plan") {
-    GraftExtensions.register(spark)
     spark.conf.set("spark.graft.levenshtein.band.rewrite", "false")
     try {
       val df = Tables.documents(spark, sf)

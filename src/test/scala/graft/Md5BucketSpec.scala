@@ -46,7 +46,6 @@ class Md5BucketSpec extends GraftSpecBase {
   }
 
   test("md5_bucket is registered as a SQL function and buckets are balanced-ish") {
-    GraftExtensions.register(spark)
     val dist = spark.sql(
       """SELECT md5_bucket(CAST(id AS STRING), 10) AS b, count(*) AS n
         |FROM range(10000) GROUP BY 1 ORDER BY 1""".stripMargin).collect()

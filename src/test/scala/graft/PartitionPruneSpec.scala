@@ -31,7 +31,6 @@ class PartitionPruneSpec extends GraftSpecBase {
   private lazy val written: Unit = {
     Tables.names.foreach(n => resetCatalogTable(s"${prefix}_$n"))
     Layout.writeGradedCatalog(spark, sf, prefix, buckets = 2)
-    GraftExtensions.register(spark)
   }
 
   /** All events FileSourceScanExec nodes of a query's executed plan. */

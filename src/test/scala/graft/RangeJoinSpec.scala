@@ -20,7 +20,6 @@ class RangeJoinSpec extends GraftSpecBase {
   }
 
   test("plans as RangeJoinExec, not BroadcastNestedLoopJoin") {
-    GraftExtensions.register(spark)
     val df = RangeJoinPlan.pointInRange(ordersDF, yearsDF,
       col("o_orderdate"), col("d_start"), col("d_end"))
     val plan = df.queryExecution.executedPlan.toString
@@ -32,7 +31,6 @@ class RangeJoinSpec extends GraftSpecBase {
   }
 
   test("equivalent to the compositional non-equi join") {
-    GraftExtensions.register(spark)
     val custom = RangeJoinPlan.pointInRange(ordersDF, yearsDF,
         col("o_orderdate"), col("d_start"), col("d_end"))
       .select(col("o_orderkey"), col("yr"))
@@ -46,7 +44,6 @@ class RangeJoinSpec extends GraftSpecBase {
 
   test("overlapping intervals: every containing interval matches") {
     import spark.implicits._
-    GraftExtensions.register(spark)
     val points = Seq(1L, 5L, 10L, 15L, 25L, 40L).toDF("p")
     val ivals = Seq(
       (100L, 0L, 10L),   // [0,10)
@@ -71,7 +68,6 @@ class RangeJoinSpec extends GraftSpecBase {
 
   test("NULL points and NULL-bound intervals match nothing (SQL UNKNOWN semantics)") {
     import spark.implicits._
-    GraftExtensions.register(spark)
     val points = Seq[Option[Long]](Some(1L), None, Some(10L), None, Some(25L))
       .toDF("p")
     val ivals = Seq[(Long, Option[Long], Option[Long])](
@@ -93,7 +89,6 @@ class RangeJoinSpec extends GraftSpecBase {
   }
 
   test("filter pushdown: left-side predicate reaches the scan") {
-    GraftExtensions.register(spark)
     val df = RangeJoinPlan.pointInRange(ordersDF, yearsDF,
         col("o_orderdate"), col("d_start"), col("d_end"))
       .filter(col("o_totalprice") > 100000.0 && col("yr") >= 1998)
@@ -119,7 +114,6 @@ class RangeJoinSpec extends GraftSpecBase {
 
   test("range exec: randomized trials vs a driver-side reference (dups, empties, degenerate intervals)") {
     import spark.implicits._
-    GraftExtensions.register(spark)
     val rnd = new scala.util.Random(23)
     for (trial <- 1 to 5) {
       val nP = Seq(1, 25, 80, 0, 50)(trial - 1)   // incl. EMPTY points

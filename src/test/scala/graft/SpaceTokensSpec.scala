@@ -30,7 +30,6 @@ class SpaceTokensSpec extends GraftSpecBase {
   }
 
   test("SQL registration and codegen-vs-interpreted agreement") {
-    GraftExtensions.register(spark)
     val s = spark
     import s.implicits._
     val viaSql = Seq("a b c", "", " x ").toDF("t")

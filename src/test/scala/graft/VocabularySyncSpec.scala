@@ -2,23 +2,20 @@ package graft
 
 import graft.plans.ScaleRules
 
-/** Round-7 ADVICE item: the dev probe's vocabulary had drifted behind
-  * the gates' canonical copy (it lacked the round-6 promoted aliases),
-  * silently under-flagging exactly the alias-funnel class the
-  * promotion was built to catch. Both sides now FORWARD to
-  * [[graft.plans.ScaleRules]]; these tests pin that delegation so a
-  * future "just add the name here" edit to either consumer fails the
+/** Round-7 ADVICE item: a second copy of the bounded-name vocabulary
+  * had drifted behind the gates' canonical copy (it lacked the round-6
+  * promoted aliases), silently under-flagging exactly the alias-funnel
+  * class the promotion was built to catch. The gates' test-side names
+  * now FORWARD to [[graft.plans.ScaleRules]]; these tests pin that
+  * delegation so a future "just add the name here" edit fails the
   * build instead of re-opening the drift.
   */
 class VocabularySyncSpec extends GraftSpecBase {
 
-  test("ScaleProbe and GradedPlans share the canonical bounded-name vocabulary") {
-    assert(ScaleProbe.lowCardNames == GradedPlans.lowCardNames)
-    assert(ScaleProbe.lowCardNames eq ScaleRules.lowCardNames)
+  test("GradedPlans forwards to the canonical ScaleRules vocabulary") {
     assert(GradedPlans.lowCardNames eq ScaleRules.lowCardNames)
     assert(GradedPlans.boundedAliasNames eq ScaleRules.boundedAliasNames)
     assert(GradedPlans.growingNames eq ScaleRules.growingNames)
-    assert(ScaleProbe.calendarNames eq ScaleRules.calendarNames)
   }
 
   test("the round-7 verdict aliases are in the funnel vocabulary") {
