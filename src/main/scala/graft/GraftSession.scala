@@ -79,6 +79,14 @@ object GraftSession {
     // WARN per released frame is expected, not a hazard
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.rdd", org.apache.logging.log4j.Level.ERROR)
+    // when a plan's metric accumulators are garbage-collected while its
+    // tasks still report, the scheduler logs a stack trace per
+    // accumulator and task; job failures still reach the caller as
+    // exceptions
+    Seq("org.apache.spark.scheduler.DAGScheduler",
+      "org.apache.spark.util.AccumulatorContext").foreach(
+      org.apache.logging.log4j.core.config.Configurator.setLevel(
+        _, org.apache.logging.log4j.Level.OFF))
     GraftExtensions.register(spark)
     spark
   }

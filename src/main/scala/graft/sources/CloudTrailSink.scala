@@ -1,119 +1,43 @@
 package graft.sources
 
-import java.util
+import org.apache.spark.sql.{DataFrame, SQLContext, SaveMode}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.sources.{BaseRelation, CreatableRelationProvider, DataSourceRegister}
+import org.apache.spark.sql.types.{StringType, StructType}
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.write._
-import org.apache.spark.sql.sources.DataSourceRegister
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import graft.streaming.CloudTrailPipeline
+import graft.streaming.CloudTrailPipeline.RecordSink
 
-import graft.streaming.CloudTrailPipeline.{RecordSink, drainPartition}
-
-/** DataSourceV2 batch WRITE surface for the reference's record sink
-  * (SURVEY.md §2-A A8–A9): `df.write.format("cloudtrail-sink")
-  * .option("sinkClass", …).save()` drains `(partitionKey, data)`
-  * rows through a [[RecordSink]] in ≤500-record calls with the
-  * partial-failure retry loop — the batch backfill companion to the
-  * streaming pipeline's `foreachBatch` route (both share
-  * [[drainPartition]], so the wire semantics are tested once).
+/** Batch write surface for the reference's record sink (SURVEY.md
+  * §2-A A8–A9): `df.write.format("cloudtrail-sink").option("sinkClass",
+  * …).save()` delivers `(partitionKey, data)` rows through
+  * [[CloudTrailPipeline.deliver]], the streaming pipeline's own
+  * ≤500-record drain with partial-failure retry.
   *
-  * Sink binding: `sinkClass` names a no-arg-constructible
-  * [[RecordSink]] implementation (the Kinesis connector boundary is
-  * environment-blocked offline — SURVEY.md §8.4 — so the trait IS
-  * the contract; a wire connector drops in without touching this
-  * file).
-  *
-  * Delivery semantics: per-task at-least-once into an idempotent
-  * sink (task retry replays its partition; [[BatchWrite.commit]] has
-  * nothing left to do — the reference's Lambda makes the same
-  * trade). A task fails after `maxRetries` exhausted partial
-  * failures, failing the job.
-  */
-class CloudTrailSink extends TableProvider with DataSourceRegister {
+  * `sinkClass` names a no-arg-constructible [[RecordSink]] (the
+  * Kinesis connector boundary is environment-blocked offline — SURVEY.md
+  * §8.4 — so the trait is the contract). Delivery is per-task
+  * at-least-once into an idempotent sink: a task retry replays its
+  * partition, and a task whose retries run out fails the job. */
+class CloudTrailSink extends CreatableRelationProvider with DataSourceRegister {
   override def shortName(): String = "cloudtrail-sink"
-  override def supportsExternalMetadata(): Boolean = true
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    CloudTrailSink.wireSchema
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table =
-    new CloudTrailSinkTable(properties)
-}
-
-object CloudTrailSink {
-  /** The wire shape: a partition key and an opaque payload. */
-  val wireSchema: StructType = StructType(Seq(
-    StructField("partitionKey", StringType),
-    StructField("data", StringType)))
-}
-
-final class CloudTrailSinkTable(properties: util.Map[String, String])
-    extends Table with SupportsWrite {
-  override def name(): String = "cloudtrail-sink"
-  override def schema(): StructType = CloudTrailSink.wireSchema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_WRITE, TableCapability.TRUNCATE)
-
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
-    val cols = info.schema().fieldNames.toSeq
-    require(cols == Seq("partitionKey", "data"),
+  override def createRelation(ctx: SQLContext, mode: SaveMode,
+      params: Map[String, String], data: DataFrame): BaseRelation = {
+    val wire = Seq("partitionKey", "data")
+    val cols = data.schema.fieldNames.toSeq
+    require(cols.sorted == wire.sorted,
       s"cloudtrail-sink expects (partitionKey, data) string columns, got $cols")
-    val sinkClass = Option(info.options.get("sinkClass")).getOrElse(
-      throw new IllegalArgumentException(
-        "cloudtrail-sink requires option sinkClass: a no-arg " +
-          "RecordSink implementation"))
-    new WriteBuilder {
-      override def build(): Write = new Write {
-        override def toBatch: BatchWrite = new CloudTrailBatchWrite(sinkClass)
-      }
+    val sinkClass = params.getOrElse("sinkClass", throw new IllegalArgumentException(
+      "cloudtrail-sink requires option sinkClass: a no-arg RecordSink implementation"))
+    val sink = Class.forName(sinkClass).getDeclaredConstructor()
+      .newInstance().asInstanceOf[RecordSink]
+    // by name and cast to string, as a V2 append resolves its input
+    CloudTrailPipeline.deliver(
+      data.select(wire.map(c => col(c).cast(StringType)): _*), sink)
+    new BaseRelation {
+      override def sqlContext: SQLContext = ctx
+      override def schema: StructType = data.schema
     }
   }
 }
-
-final class CloudTrailBatchWrite(sinkClass: String) extends BatchWrite {
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    CloudTrailWriterFactory(sinkClass)
-  override def commit(messages: Array[WriterCommitMessage]): Unit = ()
-  override def abort(messages: Array[WriterCommitMessage]): Unit = ()
-}
-
-final case class CloudTrailWriterFactory(sinkClass: String)
-    extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new CloudTrailDataWriter(
-      Class.forName(sinkClass).getDeclaredConstructor()
-        .newInstance().asInstanceOf[RecordSink])
-}
-
-/** Buffers up to MaxBatch rows and drains each full buffer through
-  * the shared retry loop; commit flushes the tail. */
-final class CloudTrailDataWriter(sink: RecordSink)
-    extends DataWriter[InternalRow] {
-  private val buf = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-  private var sent = 0L
-
-  override def write(row: InternalRow): Unit = {
-    buf += ((if (row.isNullAt(0)) null else row.getUTF8String(0).toString,
-      if (row.isNullAt(1)) null else row.getUTF8String(1).toString))
-    if (buf.size >= RecordSink.MaxBatch) flush()
-  }
-
-  private def flush(): Unit = {
-    sent += drainPartition(buf.iterator, sink)
-    buf.clear()
-  }
-
-  override def commit(): WriterCommitMessage = {
-    flush()
-    CloudTrailCommit(sent)
-  }
-
-  override def abort(): Unit = buf.clear()
-  override def close(): Unit = ()
-}
-
-final case class CloudTrailCommit(records: Long) extends WriterCommitMessage

@@ -1,181 +1,36 @@
 package graft.sources
 
-import java.io.{BufferedReader, InputStreamReader}
-import java.util
-import java.util.zip.GZIPInputStream
-
-import scala.collection.JavaConverters._
-
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.DataSourceRegister
-import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Row, SQLContext}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.sources.{BaseRelation, DataSourceRegister, PrunedScan, RelationProvider}
+import org.apache.spark.sql.types.StructType
 
 import graft.streaming.CloudTrailPipeline
 
-/** DataSourceV2 batch connector for the reference's input format —
-  * gzipped JSON envelope files, each line `{"Records": [record…]}`
-  * (the CloudTrail S3 delivery layout; SURVEY.md §2-A A2–A6) —
-  * exposed as `spark.read.format("cloudtrail").load(dir)`.
-  *
-  * Why a V2 source and not `spark.read.text` + `decodeEnvelopes`:
-  * both paths exist (the streaming pipeline uses the text route, the
-  * idiomatic choice for structured streaming); this connector is the
-  * BATCH surface, and carries the two things only a source can do:
-  *  - **partition planning**: one input partition per delivery file —
-  *    the unit the upstream processes per Lambda invocation — so a
-  *    100 TB backfill parallelizes across executors exactly like the
-  *    reference's per-object fan-out, with no driver-side gunzip;
-  *  - **column pruning** (`SupportsPushDownRequiredColumns`): the
-  *    reader materializes ONLY requested fields — `select(eventName)`
-  *    never converts the other 14, and `.explain` shows the pruned
-  *    ReadSchema.
-  *
-  * Decode semantics mirror [[CloudTrailPipeline.decodeEnvelopes]]
-  * (equivalence-tested): malformed lines and envelopes without
-  * `Records` are skipped (the reference's log-and-skip, A10);
-  * open-ended payloads stay raw JSON strings.
-  */
-class CloudTrailSource extends TableProvider with DataSourceRegister {
+/** `spark.read.format("cloudtrail").load(dir)`: the reference's input
+  * format — gzipped JSON envelope files, each line `{"Records":
+  * [record…]}` (SURVEY.md §2-A A2–A6) — as a relation over the
+  * stream's own decoder, [[CloudTrailPipeline.decodeEnvelopes]] on
+  * `spark.read.text`. Spark's text source packs the small delivery
+  * files into partitions; the scan keeps the top-level columns the
+  * query asks for. */
+class CloudTrailSource extends RelationProvider with DataSourceRegister {
   override def shortName(): String = "cloudtrail"
-  override def supportsExternalMetadata(): Boolean = true
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    CloudTrailPipeline.recordSchema
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table =
-    new CloudTrailTable(properties.get("path"))
+  override def createRelation(ctx: SQLContext,
+      params: Map[String, String]): BaseRelation =
+    CloudTrailRelation(params("path"))(ctx)
 }
 
-final class CloudTrailTable(path: String) extends Table with SupportsRead {
-  override def name(): String = s"cloudtrail($path)"
-  override def schema(): StructType = CloudTrailPipeline.recordSchema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ)
+final case class CloudTrailRelation(path: String)(
+    @transient val sqlContext: SQLContext) extends BaseRelation with PrunedScan {
+  override def schema: StructType = CloudTrailPipeline.recordSchema
+  override def needConversion: Boolean = false
 
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new CloudTrailScanBuilder(
-      Option(path).getOrElse(options.get("path")))
-}
-
-final class CloudTrailScanBuilder(path: String)
-    extends ScanBuilder with SupportsPushDownRequiredColumns {
-  private var required: StructType = CloudTrailPipeline.recordSchema
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    // empty projections (count(*)) keep one cheap field so each
-    // record still yields exactly one row
-    required =
-      if (requiredSchema.fields.isEmpty)
-        StructType(CloudTrailPipeline.recordSchema.fields.take(1))
-      else requiredSchema
-
-  override def build(): Scan = CloudTrailScan(path, required)
-}
-
-final case class CloudTrailScan(path: String, required: StructType)
-    extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-
-  /** One partition per delivery file — the reference's unit of work. */
-  override def planInputPartitions(): Array[InputPartition] = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(new Configuration())
-    val files =
-      if (fs.getFileStatus(p).isDirectory)
-        fs.listStatus(p).filter(_.isFile).map(_.getPath)
-          .filter(f => f.getName.endsWith(".json.gz") ||
-            f.getName.endsWith(".json"))
-      else Array(p)
-    files.sortBy(_.toString)
-      .map(f => CloudTrailInputPartition(f.toString): InputPartition)
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    CloudTrailReaderFactory(required.fields.map(_.name))
-}
-
-final case class CloudTrailInputPartition(file: String) extends InputPartition
-
-final case class CloudTrailReaderFactory(fields: Array[String])
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new CloudTrailPartitionReader(
-      partition.asInstanceOf[CloudTrailInputPartition].file, fields)
-}
-
-/** Streams one envelope file: gunzip → lines → Jackson parse →
-  * Records[] fan-out → projected InternalRows. Only the `fields`
-  * requested by the pruned schema are converted. */
-final class CloudTrailPartitionReader(file: String, fields: Array[String])
-    extends PartitionReader[InternalRow] {
-
-  private val mapper = new ObjectMapper()
-  private val in = {
-    val p = new Path(file)
-    val raw = p.getFileSystem(new Configuration()).open(p)
-    val stream = if (file.endsWith(".gz")) new GZIPInputStream(raw) else raw
-    new BufferedReader(new InputStreamReader(stream, "UTF-8"))
-  }
-  private var records: Iterator[JsonNode] = Iterator.empty
-  private var current: JsonNode = _
-
-  override def next(): Boolean = {
-    while (!records.hasNext) {
-      val line = in.readLine()
-      if (line == null) return false
-      if (line.trim.nonEmpty) {
-        val env =
-          try mapper.readTree(line)
-          catch { case _: Exception => null } // log-and-skip (A10)
-        if (env != null && env.hasNonNull("Records") &&
-            env.get("Records").isArray)
-          records = env.get("Records").elements().asScala
-      }
-    }
-    current = records.next()
-    true
-  }
-
-  override def get(): InternalRow =
-    new GenericInternalRow(
-      fields.map(f => convert(current, f): Any))
-
-  private def str(n: JsonNode): AnyRef =
-    if (n == null || n.isNull || n.isMissingNode) null
-    else if (n.isTextual) UTF8String.fromString(n.asText())
-    else UTF8String.fromString(n.toString) // raw JSON pass-through
-
-  private def convert(rec: JsonNode, field: String): AnyRef = field match {
-    case "eventTime" =>
-      val n = rec.get("eventTime")
-      if (n == null || n.isNull) null
-      else {
-        val i = java.time.Instant.parse(n.asText())
-        java.lang.Long.valueOf(i.getEpochSecond * 1000000L + i.getNano / 1000L)
-      }
-    case "readOnly" =>
-      val n = rec.get("readOnly")
-      if (n == null || n.isNull) null
-      else java.lang.Boolean.valueOf(n.asBoolean())
-    case "userIdentity" =>
-      val n = rec.get("userIdentity")
-      if (n == null || n.isNull) null
-      else new GenericInternalRow(Array[Any](
-        str(n.get("type")), str(n.get("principalId")), str(n.get("arn")),
-        str(n.get("accountId")), str(n.get("accessKeyId"))))
-    case other => str(rec.get(other))
-  }
-
-  override def close(): Unit = in.close()
+  /** Rows are the decoder's own internal rows (`needConversion` false). */
+  override def buildScan(cols: Array[String]): RDD[Row] =
+    CloudTrailPipeline.decodeEnvelopes(sqlContext.sparkSession.read.text(path))
+      .select(cols.toIndexedSeq.map(col): _*)
+      .queryExecution.toRdd.asInstanceOf[RDD[Row]]
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, ExpiredTimerInfo, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, StreamingQuery, TTLConfig, TimeMode, TimerValues, ValueState}
 import org.apache.spark.sql.types._
@@ -18,18 +18,22 @@ import org.apache.spark.sql.types._
   *  - trigger decode (A1) → file-source listing + offset log;
   *  - S3 GET + gunzip (A2–A3) → executor-side text source (`.gz`
   *    decompressed transparently by the Hadoop codec; gzip is
-  *    non-splittable so 1 file = 1 task, matching the reference's
-  *    file-at-a-time unit);
-  *  - envelope parse (A4) → `from_json` with an explicit
-  *    [[envelopeSchema]] (PERMISSIVE; bad JSON → null → dead-letter,
-  *    mirroring the reference's log-and-skip);
-  *  - record fan-out (A5) → `explode`;
+  *    non-splittable, so a file is never split across tasks, and the
+  *    source packs small files into one task);
+  *  - envelope parse (A4) → [[decodeEnvelopes]]: `from_json` with an
+  *    explicit [[envelopeSchema]] (PERMISSIVE; bad JSON → null →
+  *    dead-letter, mirroring the reference's log-and-skip);
+  *  - record fan-out (A5) → `inline`;
   *  - projection / partition key (A6–A7) → `to_json(struct(...))` +
   *    `eventID` key;
   *  - batched sink + retry (A8–A9) → [[RecordSink]] via
-  *    `foreachBatch` + `foreachPartition` with `grouped(500)` and
-  *    bounded exponential retry;
+  *    `foreachBatch` + [[deliver]] (`foreachPartition` +
+  *    [[drainPartition]]: `grouped(500)` and bounded exponential
+  *    retry), the same path as the batch `format("cloudtrail-sink")`;
   *  - redelivery dedup → `dropDuplicatesWithinWatermark("eventID")`.
+  *
+  * The batch `spark.read.format("cloudtrail")` is [[decodeEnvelopes]]
+  * over `spark.read.text`, so stream and batch share one decoder.
   *
   * Scale: parallelism = files × partitions (the reference's "many
   * Lambda instances" becomes executor tasks); state (dedup,
@@ -69,18 +73,23 @@ object CloudTrailPipeline {
   val envelopeSchema: StructType =
     StructType(Seq(StructField("Records", ArrayType(recordSchema))))
 
-  /** A4–A6: one JSON envelope line → N typed records (+ source file).
-    * Null envelopes (malformed JSON) are routed out by [[deadLetters]]
-    * rather than poisoning the stream (A10). */
-  def decodeEnvelopes(raw: DataFrame): DataFrame = {
+  /** A4–A6: one JSON envelope line → N typed records. `inline` emits
+    * nothing for a null envelope (malformed JSON) or a null `Records`;
+    * [[deadLetters]] routes those lines out rather than poisoning the
+    * stream (A10). A field that does not convert (a non-ISO
+    * `eventTime`) is null in its record alone.
+    *
+    * Each line is parsed once. A filter before the fan-out would have
+    * the optimizer copy `from_json` into each predicate, and so would
+    * `explode` + `r.*` under a query that reads only some fields: the
+    * optimizer moves the field access into `explode`'s input and infers
+    * a not-null, non-empty filter on it (5 parses a line for
+    * `select("eventName")`). `inline` is left alone by both rules. */
+  def decodeEnvelopes(raw: DataFrame): DataFrame =
     raw
-      .select(col("value").as("raw_json"),
-        from_json(col("value"), envelopeSchema,
-          Map("mode" -> "PERMISSIVE")).as("env"))
-      .filter(col("env").isNotNull && col("env.Records").isNotNull)
-      .select(explode(col("env.Records")).as("r"))
-      .select(col("r.*"))
-  }
+      .select(from_json(col("value"), envelopeSchema,
+        Map("mode" -> "PERMISSIVE")).as("env"))
+      .select(inline(col("env.Records")))
 
   // -------------------------------------------------------------
   // A1 trigger decode — BOTH notification shapes (SURVEY.md §3.2).
@@ -206,6 +215,15 @@ object CloudTrailPipeline {
     sent
   }
 
+  /** A8–A9 over a frame of `(partitionKey, data)` entries: each
+    * partition drains through [[drainPartition]]. The stream's
+    * `foreachBatch` and `format("cloudtrail-sink")` both deliver here. */
+  def deliver(entries: DataFrame, sink: RecordSink): Unit =
+    entries.foreachPartition { it: Iterator[Row] =>
+      drainPartition(it.map(r => (r.getString(0), r.getString(1))), sink)
+      ()
+    }
+
   /** Full pipeline: gzip JSON landing dir → decode → dedup →
     * batched/retrying sink via foreachBatch, checkpointed.
     *
@@ -244,13 +262,7 @@ object CloudTrailPipeline {
     entries.writeStream
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.foreachPartition { it: Iterator[org.apache.spark.sql.Row] =>
-          drainPartition(
-            it.map(r => (r.getString(0), r.getString(1))), sink)
-          ()
-        }
-      }
+      .foreachBatch { (batch: DataFrame, _: Long) => deliver(batch, sink) }
       .start()
   }
 

@@ -6,15 +6,14 @@ import org.apache.spark.sql.streaming.StreamingQueryListener._
 
 /** Typed pipeline configuration (reference operator A12: the Go
   * Lambda read `CT_*` environment variables for stream name, region
-  * and debug — SURVEY.md §2-A). One immutable read at startup; no
-  * config lookups on the hot path. */
+  * and debug — SURVEY.md §2-A). Only what [[CloudTrailPipeline.run]]
+  * reads is kept: the sink is passed to `run`, and the dedup watermark
+  * is `dedup`'s constant. One immutable read at startup; no config
+  * lookups on the hot path. */
 case class PipelineConfig(
     inPath: String,
     checkpoint: String,
-    sinkName: String,
     maxFilesPerTrigger: Int,
-    watermark: String,
-    debug: Boolean,
     /** State-store provider class for the stateful operators
       * (dedup-within-watermark, sessionization). None = Spark's
       * default in-memory HDFS-backed store; the 100 TB posture is
@@ -41,11 +40,8 @@ object PipelineConfig {
     PipelineConfig(
       inPath = env.getOrElse("GRAFT_CT_IN_PATH", "/tmp/cloudtrail/landing"),
       checkpoint = env.getOrElse("GRAFT_CT_CHECKPOINT", "/tmp/cloudtrail/chk"),
-      sinkName = env.getOrElse("GRAFT_CT_SINK", "default"),
       maxFilesPerTrigger =
         env.getOrElse("GRAFT_CT_MAX_FILES_PER_TRIGGER", "100").toInt,
-      watermark = env.getOrElse("GRAFT_CT_WATERMARK", "10 minutes"),
-      debug = env.getOrElse("GRAFT_CT_DEBUG", "false").toBoolean,
       stateStoreProvider = env.get("GRAFT_CT_STATE_STORE").map {
         case "rocksdb" => RocksDbProvider
         case other => other
