@@ -61,4 +61,14 @@ object Determinism {
 
   /** Round a float expression for output (D2). */
   def r4(c: Column): Column = round(c, 4)
+
+  /** `digits` hex chars of the md5 hex string SQL expression `m`, from
+    * 1-based position `start`, as an integer: positional
+    * `instr`/`substr` arithmetic, the same SQL text in Spark and DuckDB.
+    * Six digits are 24 bits; twelve are the SQL twin of
+    * KmvDistinct.hash48. */
+  def hexval(m: String, start: Int = 1, digits: Int = 6): String =
+    (0 until digits).map(j =>
+      s"(instr('0123456789abcdef', substr($m, ${start + j}, 1)) - 1) * ${math.pow(16, digits - 1 - j).toLong}"
+    ).mkString("(", " + ", ")")
 }

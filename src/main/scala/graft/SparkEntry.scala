@@ -1,182 +1,83 @@
 package graft
 import org.apache.spark.sql.{SparkSession, DataFrame}
 import graft.queries._
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
+/** The graded entry points: the flagship query and the query and oracle
+  * registries (SURVEY.md §7). */
 object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     JoinQueries.joinStar(spark, "/root/testdata/sf0.001")
-  // Flat Seq + reduce instead of one 100+-term `++` expression: the
-  // left-deep operator tree blew scalac's typer stack once the
-  // registry passed ~115 families.
-  private val registries: Seq[Map[String, (SparkSession, String) => DataFrame]] = Seq(
-    AggQueries.queries, JoinQueries.queries, ScanQueries.queries,
-    SortSetQueries.queries, WindowQueries.queries, ScalarQueries.queries,
-    SemiStructQueries.queries, TextQueries.queries, SimQueries.queries,
-    UdxQueries.queries, DedupQueries.queries, TextAnalysisQueries.queries,
-    CapabilityQueries.queries, RelExtraQueries.queries,
-    MoreRelQueries.queries, PipelineQueries.queries,
-    WideSurfaceQueries.queries, StatsMlQueries.queries,
-    FunctionalQueries.queries, CorpusSimQueries.queries,
-    IrGraphQueries.queries, RobustQueries.queries, MlEvalQueries.queries,
-    GraphQueries.queries, BizSeriesQueries.queries, LlmPipeQueries.queries,
-    AnalyticsExtraQueries.queries, GovernanceQueries.queries,
-    DriftQueries.queries, EncodingSeqQueries.queries,
-    CalendarPathQueries.queries, BinaryArrayQueries.queries,
-    RobustStatsQueries.queries, AttributionQueries.queries,
-    TwapGroupingQueries.queries, SourceTermQueries.queries,
-    DistributionQueries.queries, InferenceQueries.queries,
-    ChurnZipfQueries.queries, HitsFunnelQueries.queries,
-    BasketQueries.queries, OrderStatsQueries.queries,
-    InfoStatsQueries.queries, MixSampleQueries.queries,
-    IntervalQueries.queries, EvalExtraQueries.queries,
-    CleanTextQueries.queries, StatEngQueries.queries,
-    SeasonalQueries.queries, OverlapSeriesQueries.queries,
-    SeqEconQueries.queries, RiskStatsQueries.queries,
-    ExperimentQueries.queries, VectorStatsQueries.queries,
-    TemporalRelQueries.queries, NonParamQueries.queries,
-    DerivedAnalyticsQueries.queries, StatTestQueries.queries,
-    EmbOpsQueries.queries, SketchExactQueries.queries,
-    GraphFeatureQueries.queries, ForecastQueries.queries,
-    HygieneQueries.queries, RetrievalQueries.queries,
-    SeriesShapeQueries.queries, TextExtraQueries.queries,
-    FeatureEngQueries.queries, PathAgreementQueries.queries,
-    CorpusDriftQueries.queries, MonitorQueries.queries,
-    NormalityQueries.queries, FilterFunnelQueries.queries,
-    ProcessMiningQueries.queries, KmeansStepQueries.queries,
-    SqlSurfaceQueries.queries, DedupLshQueries.queries,
-    ProductAnalyticsQueries.queries, DispersionQueries.queries,
-    StratifiedQueries.queries, RakingQueries.queries,
-    ClusterEvalQueries.queries, MlEvalExtraQueries.queries,
-    ExactHllQueries.queries, GeoCellQueries.queries, CdcMergeQueries.queries,
-    ShapleyQueries.queries, RankTestQueries.queries,
-    SeriesDiagQueries.queries, MultivarQueries.queries,
-    ClassMetricsQueries.queries, EncodingEconQueries.queries,
-    TextGraphQueries.queries, VarTestQueries.queries, TpchQueries.queries,
-    PairedTestQueries.queries, ReliabilityQueries.queries,
-    DiversityRetrievalQueries.queries, TopKAggQueries.queries,
-    MatchedRanksQueries.queries, ExtremesQueries.queries,
-    PriceIndexQueries.queries, SeqPatternQueries.queries,
-    LlmExtraQueries.queries, InferExtraQueries.queries,
-    GraphDistQueries.queries, UncertaintyEconQueries.queries,
-    CountDispersionQueries.queries, EvennessQueries.queries,
-    TpchExtraQueries.queries, InventoryEconQueries.queries,
-    GraphShapeQueries.queries, TailRiskQueries.queries,
-    InequalityQueries.queries, LexicalRichnessQueries.queries,
-    FairnessQueries.queries, InferTrendQueries.queries,
-    ForecastExtraQueries.queries, HurstQueries.queries,
-    MmrQueries.queries, IsotonicQueries.queries,
-    CentralityQueries.queries, VocabOverlapQueries.queries,
-    LogrankQueries.queries, OrderedAltQueries.queries,
-    InfluenceQueries.queries, GrowthAcctQueries.queries,
-    BassQueries.queries, TpchMoreQueries.queries,
-    EmbOutlierQueries.queries, SpcQueries.queries,
-    SeasonalTrendQueries.queries, VocabCoverageQueries.queries,
-    RobustSeqQueries.queries, ImpactGovQueries.queries,
-    HistAggQueries.queries, TpchFinalQueries.queries,
-    AgreementExtraQueries.queries, OrdinalAssocQueries.queries,
-    ThresholdQueries.queries, KernelQueries.queries,
-    EconometricsQueries.queries, SurvivalExtraQueries.queries,
-    RetrievalLmQueries.queries, CorpusDispersionQueries.queries,
-    FsLinkageQueries.queries, FinanceExtraQueries.queries,
-    WinnowQueries.queries, StrataTestQueries.queries,
-    InferMoreQueries.queries, ConformalQueries.queries,
-    VocabEstimatorQueries.queries, LearningCurveQueries.queries,
-    TwoWayAnovaQueries.queries, SegmentedFitQueries.queries,
-    RankDistQueries.queries, PeriodogramQueries.queries,
-    StylometryQueries.queries, LofQueries.queries,
-    ScaleLawQueries.queries, RobustFitQueries.queries,
-    InfoFlowQueries.queries, EmbAggQueries.queries,
-    MixtureQueries.queries, FeatureSelectQueries.queries,
-    ImputeQueries.queries, MatrixProfileQueries.queries,
-    OpsPlanQueries.queries, AnnEvalQueries.queries,
-    FitExtraQueries.queries, SmoothingLmQueries.queries,
-    CausalDesignQueries.queries, SesEsdQueries.queries,
-    SurvivalCoxQueries.queries, FitDistSurvQueries.queries)
-  private val oracles: Seq[Map[String, String]] = Seq(
-    AggQueries.oracle, JoinQueries.oracle, ScanQueries.oracle,
-    SortSetQueries.oracle, WindowQueries.oracle, ScalarQueries.oracle,
-    SemiStructQueries.oracle, TextQueries.oracle, SimQueries.oracle,
-    UdxQueries.oracle, DedupQueries.oracle, TextAnalysisQueries.oracle,
-    RelExtraQueries.oracle, MoreRelQueries.oracle, PipelineQueries.oracle,
-    WideSurfaceQueries.oracle, StatsMlQueries.oracle,
-    FunctionalQueries.oracle, CorpusSimQueries.oracle, IrGraphQueries.oracle,
-    RobustQueries.oracle, MlEvalQueries.oracle, GraphQueries.oracle,
-    BizSeriesQueries.oracle, LlmPipeQueries.oracle,
-    AnalyticsExtraQueries.oracle, GovernanceQueries.oracle,
-    DriftQueries.oracle, EncodingSeqQueries.oracle,
-    CalendarPathQueries.oracle, BinaryArrayQueries.oracle,
-    RobustStatsQueries.oracle, AttributionQueries.oracle,
-    TwapGroupingQueries.oracle, SourceTermQueries.oracle,
-    DistributionQueries.oracle, InferenceQueries.oracle,
-    ChurnZipfQueries.oracle, HitsFunnelQueries.oracle, BasketQueries.oracle,
-    OrderStatsQueries.oracle, InfoStatsQueries.oracle,
-    MixSampleQueries.oracle, IntervalQueries.oracle, EvalExtraQueries.oracle,
-    CleanTextQueries.oracle, StatEngQueries.oracle, SeasonalQueries.oracle,
-    OverlapSeriesQueries.oracle, SeqEconQueries.oracle,
-    RiskStatsQueries.oracle, ExperimentQueries.oracle,
-    VectorStatsQueries.oracle, TemporalRelQueries.oracle,
-    NonParamQueries.oracle, DerivedAnalyticsQueries.oracle,
-    StatTestQueries.oracle, EmbOpsQueries.oracle, SketchExactQueries.oracle,
-    GraphFeatureQueries.oracle, ForecastQueries.oracle,
-    HygieneQueries.oracle, RetrievalQueries.oracle,
-    SeriesShapeQueries.oracle, TextExtraQueries.oracle,
-    FeatureEngQueries.oracle, PathAgreementQueries.oracle,
-    CorpusDriftQueries.oracle, MonitorQueries.oracle,
-    NormalityQueries.oracle, FilterFunnelQueries.oracle,
-    ProcessMiningQueries.oracle, KmeansStepQueries.oracle,
-    SqlSurfaceQueries.oracle, DedupLshQueries.oracle,
-    ProductAnalyticsQueries.oracle, DispersionQueries.oracle,
-    StratifiedQueries.oracle, RakingQueries.oracle,
-    ClusterEvalQueries.oracle, MlEvalExtraQueries.oracle,
-    ExactHllQueries.oracle, GeoCellQueries.oracle, CdcMergeQueries.oracle,
-    ShapleyQueries.oracle, RankTestQueries.oracle, SeriesDiagQueries.oracle,
-    MultivarQueries.oracle, ClassMetricsQueries.oracle,
-    EncodingEconQueries.oracle, TextGraphQueries.oracle,
-    VarTestQueries.oracle, TpchQueries.oracle, PairedTestQueries.oracle,
-    ReliabilityQueries.oracle, DiversityRetrievalQueries.oracle,
-    TopKAggQueries.oracle, MatchedRanksQueries.oracle,
-    ExtremesQueries.oracle, PriceIndexQueries.oracle,
-    SeqPatternQueries.oracle, LlmExtraQueries.oracle,
-    InferExtraQueries.oracle, GraphDistQueries.oracle,
-    UncertaintyEconQueries.oracle, CountDispersionQueries.oracle,
-    EvennessQueries.oracle, TpchExtraQueries.oracle,
-    InventoryEconQueries.oracle, GraphShapeQueries.oracle,
-    TailRiskQueries.oracle, InequalityQueries.oracle,
-    LexicalRichnessQueries.oracle, FairnessQueries.oracle,
-    InferTrendQueries.oracle, ForecastExtraQueries.oracle,
-    HurstQueries.oracle, MmrQueries.oracle, IsotonicQueries.oracle,
-    CentralityQueries.oracle, VocabOverlapQueries.oracle,
-    LogrankQueries.oracle, OrderedAltQueries.oracle,
-    InfluenceQueries.oracle, GrowthAcctQueries.oracle,
-    BassQueries.oracle, TpchMoreQueries.oracle,
-    EmbOutlierQueries.oracle, SpcQueries.oracle,
-    SeasonalTrendQueries.oracle, VocabCoverageQueries.oracle,
-    RobustSeqQueries.oracle, ImpactGovQueries.oracle,
-    HistAggQueries.oracle, TpchFinalQueries.oracle,
-    AgreementExtraQueries.oracle, OrdinalAssocQueries.oracle,
-    ThresholdQueries.oracle, KernelQueries.oracle,
-    EconometricsQueries.oracle, SurvivalExtraQueries.oracle,
-    RetrievalLmQueries.oracle, CorpusDispersionQueries.oracle,
-    FsLinkageQueries.oracle, FinanceExtraQueries.oracle,
-    WinnowQueries.oracle, StrataTestQueries.oracle,
-    InferMoreQueries.oracle, ConformalQueries.oracle,
-    VocabEstimatorQueries.oracle, LearningCurveQueries.oracle,
-    TwoWayAnovaQueries.oracle, SegmentedFitQueries.oracle,
-    RankDistQueries.oracle, PeriodogramQueries.oracle,
-    StylometryQueries.oracle, LofQueries.oracle,
-    ScaleLawQueries.oracle, RobustFitQueries.oracle,
-    InfoFlowQueries.oracle, EmbAggQueries.oracle,
-    MixtureQueries.oracle, FeatureSelectQueries.oracle,
-    ImputeQueries.oracle, MatrixProfileQueries.oracle,
-    OpsPlanQueries.oracle, AnnEvalQueries.oracle,
-    FitExtraQueries.oracle, SmoothingLmQueries.oracle,
-    CausalDesignQueries.oracle, SesEsdQueries.oracle,
-    SurvivalCoxQueries.oracle, FitDistSurvQueries.oracle)
+  // One explicitly typed Seq: a 100+-term `++` expression's left-deep
+  // operator tree blew scalac's typer stack past ~115 families, and
+  // the type spares scalac a 174-way lub of the family objects.
+  private[graft] val families: Seq[QueryFamily] = Seq(
+    AggQueries, JoinQueries, ScanQueries, SortSetQueries, WindowQueries,
+    ScalarQueries, SemiStructQueries, TextQueries, SimQueries, UdxQueries,
+    DedupQueries, TextAnalysisQueries, CapabilityQueries, RelExtraQueries,
+    MoreRelQueries, PipelineQueries, WideSurfaceQueries, StatsMlQueries,
+    FunctionalQueries, CorpusSimQueries, IrGraphQueries, RobustQueries,
+    MlEvalQueries, GraphQueries, BizSeriesQueries, LlmPipeQueries,
+    AnalyticsExtraQueries, GovernanceQueries, DriftQueries,
+    EncodingSeqQueries, CalendarPathQueries, BinaryArrayQueries,
+    RobustStatsQueries, AttributionQueries, TwapGroupingQueries,
+    SourceTermQueries, DistributionQueries, InferenceQueries,
+    ChurnZipfQueries, HitsFunnelQueries, BasketQueries, OrderStatsQueries,
+    InfoStatsQueries, MixSampleQueries, IntervalQueries, EvalExtraQueries,
+    CleanTextQueries, StatEngQueries, SeasonalQueries, OverlapSeriesQueries,
+    SeqEconQueries, RiskStatsQueries, ExperimentQueries, VectorStatsQueries,
+    TemporalRelQueries, NonParamQueries, DerivedAnalyticsQueries,
+    StatTestQueries, EmbOpsQueries, SketchExactQueries, GraphFeatureQueries,
+    ForecastQueries, HygieneQueries, RetrievalQueries, SeriesShapeQueries,
+    TextExtraQueries, FeatureEngQueries, PathAgreementQueries,
+    CorpusDriftQueries, MonitorQueries, NormalityQueries,
+    FilterFunnelQueries, ProcessMiningQueries, KmeansStepQueries,
+    SqlSurfaceQueries, DedupLshQueries, ProductAnalyticsQueries,
+    DispersionQueries, StratifiedQueries, RakingQueries, ClusterEvalQueries,
+    MlEvalExtraQueries, ExactHllQueries, GeoCellQueries, CdcMergeQueries,
+    ShapleyQueries, RankTestQueries, SeriesDiagQueries, MultivarQueries,
+    ClassMetricsQueries, EncodingEconQueries, TextGraphQueries,
+    VarTestQueries, TpchQueries, PairedTestQueries, ReliabilityQueries,
+    DiversityRetrievalQueries, TopKAggQueries, MatchedRanksQueries,
+    ExtremesQueries, PriceIndexQueries, SeqPatternQueries, LlmExtraQueries,
+    InferExtraQueries, GraphDistQueries, UncertaintyEconQueries,
+    CountDispersionQueries, EvennessQueries, TpchExtraQueries,
+    InventoryEconQueries, GraphShapeQueries, TailRiskQueries,
+    InequalityQueries, LexicalRichnessQueries, FairnessQueries,
+    InferTrendQueries, ForecastExtraQueries, HurstQueries, MmrQueries,
+    IsotonicQueries, CentralityQueries, VocabOverlapQueries, LogrankQueries,
+    OrderedAltQueries, InfluenceQueries, GrowthAcctQueries, BassQueries,
+    TpchMoreQueries, EmbOutlierQueries, SpcQueries, SeasonalTrendQueries,
+    VocabCoverageQueries, RobustSeqQueries, ImpactGovQueries,
+    HistAggQueries, TpchFinalQueries, AgreementExtraQueries,
+    OrdinalAssocQueries, ThresholdQueries, KernelQueries,
+    EconometricsQueries, SurvivalExtraQueries, RetrievalLmQueries,
+    CorpusDispersionQueries, FsLinkageQueries, FinanceExtraQueries,
+    WinnowQueries, StrataTestQueries, InferMoreQueries, ConformalQueries,
+    VocabEstimatorQueries, LearningCurveQueries, TwoWayAnovaQueries,
+    SegmentedFitQueries, RankDistQueries, PeriodogramQueries,
+    StylometryQueries, LofQueries, ScaleLawQueries, RobustFitQueries,
+    InfoFlowQueries, EmbAggQueries, MixtureQueries, FeatureSelectQueries,
+    ImputeQueries, MatrixProfileQueries, OpsPlanQueries, AnnEvalQueries,
+    FitExtraQueries, SmoothingLmQueries, CausalDesignQueries, SesEsdQueries,
+    SurvivalCoxQueries, FitDistSurvQueries)
+  private val (registry, oracles) = merge(families)
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    registries.reduce(_ ++ _)
+  def queries: Map[String, (SparkSession, String) => DataFrame] = registry
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] = oracles.reduce(_ ++ _)
+  def oracleSql: Map[String, String] = oracles
+
+  /** The families' queries and oracle SQL as one map each. A query name
+    * declared by two families is an error naming both, never a silent
+    * overwrite. */
+  private[graft] def merge(families: Seq[QueryFamily])
+      : (Map[String, (SparkSession, String) => DataFrame], Map[String, String]) = {
+    val owners = families.flatMap(f =>
+      f.queries.keys.map(_ -> f.getClass.getSimpleName.stripSuffix("$")))
+    val clashes = owners.groupBy(_._1).collect { case (q, fs) if fs.size > 1 =>
+      s"query $q is declared by ${fs.map(_._2).mkString(" and ")}"
+    }
+    require(clashes.isEmpty, clashes.toSeq.sorted.mkString("; "))
+    (families.flatMap(_.queries).toMap, families.flatMap(_.oracle).toMap)
+  }
 }

@@ -138,4 +138,76 @@ object Tables {
           .drop("ts")
     }
   }
+
+  // ---- relations several query families derive from the tables,
+  // each beside its DuckDB twin ----
+
+  /** Per event type and UTC day: the value total, an exact decimal sum
+    * rounded at 4dp. */
+  def dailyByType(s: SparkSession, d: String): DataFrame =
+    events(s, d)
+      .groupBy(col("event_type").as("t"), to_date(col("ts2")).as("day"))
+      .agg(round(graft.Determinism.dsum(col("value")), 4).as("v"))
+
+  val dailyByTypeSql: String =
+    """SELECT event_type AS t, CAST(ts AS DATE) AS day,
+      |    round(CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE), 4) AS v
+      |  FROM events GROUP BY 1, 2""".stripMargin
+
+  /** Per UTC day: purchase events (y) and all other events (x). */
+  val dailyPurchasesSql: String =
+    """SELECT CAST(ts AS DATE) AS day,
+      |  CAST(count(CASE WHEN event_type = 'purchase' THEN 1 END)
+      |    AS BIGINT) AS y,
+      |  CAST(count(CASE WHEN event_type <> 'purchase' THEN 1 END)
+      |    AS BIGINT) AS x
+      |FROM events GROUP BY 1""".stripMargin
+
+  /** The directed weighted nation trade graph: na = customer nation,
+    * nb = supplier nation, w = lineitem count (src/dst/w in the
+    * SQL). */
+  def tradeEdges(s: SparkSession, d: String): DataFrame =
+    customer(s, d).select(col("c_custkey"), col("c_nationkey").as("na"))
+      .join(orders(s, d).select(col("o_custkey"), col("o_orderkey")),
+        col("o_custkey") === col("c_custkey"))
+      .join(lineitem(s, d).select(col("l_orderkey"), col("l_suppkey")),
+        col("l_orderkey") === col("o_orderkey"))
+      .join(supplier(s, d).select(col("s_suppkey"), col("s_nationkey").as("nb")),
+        col("s_suppkey") === col("l_suppkey"))
+      .groupBy(col("na"), col("nb")).agg(count(lit(1)).as("w"))
+
+  val tradeEdgesSql: String =
+    """SELECT c.c_nationkey AS src, s.s_nationkey AS dst,
+      |    CAST(count(*) AS BIGINT) AS w
+      |  FROM customer c JOIN orders o ON o.o_custkey = c.c_custkey
+      |  JOIN lineitem l ON l.l_orderkey = o.o_orderkey
+      |  JOIN supplier s ON s.s_suppkey = l.l_suppkey
+      |  GROUP BY 1, 2""".stripMargin
+
+  /** Undirected simple nation trade edges a<b. */
+  def undirectedTradeEdges(s: SparkSession, d: String): DataFrame = {
+    import graft.operators.CacheOps.CheckpointSyntax
+    // <=|nations|^2 edge grid referenced by several branches per
+    // query - materialize once (round-8 scan gate)
+    customer(s, d).select(col("c_custkey"), col("c_nationkey").as("src"))
+      .join(orders(s, d).select(col("o_custkey"), col("o_orderkey")),
+        col("o_custkey") === col("c_custkey"))
+      .join(lineitem(s, d).select(col("l_orderkey"), col("l_suppkey")),
+        col("l_orderkey") === col("o_orderkey"))
+      .join(supplier(s, d).select(col("s_suppkey"), col("s_nationkey").as("dst")),
+        col("s_suppkey") === col("l_suppkey"))
+      .filter(col("src") =!= col("dst"))
+      .select(least(col("src"), col("dst")).as("a"),
+        greatest(col("src"), col("dst")).as("b"))
+      .distinct()
+      .truncatedCheckpoint()
+  }
+
+  val undirectedTradeEdgesSql: String =
+    """SELECT DISTINCT least(c.c_nationkey, s.s_nationkey) AS a,
+      |    greatest(c.c_nationkey, s.s_nationkey) AS b
+      |  FROM customer c JOIN orders o ON o.o_custkey = c.c_custkey
+      |  JOIN lineitem l ON l.l_orderkey = o.o_orderkey
+      |  JOIN supplier s ON s.s_suppkey = l.l_suppkey
+      |  WHERE c.c_nationkey <> s.s_nationkey""".stripMargin
 }

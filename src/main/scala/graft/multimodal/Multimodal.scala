@@ -164,14 +164,6 @@ object Multimodal {
         (col("mediaId") === col("representative")).as("is_canonical"))
   }
 
-  /** Size-aware repartitioning: blobs per partition bounded by bytes,
-    * not rows (avoids one 4K-video partition OOMing an executor). */
-  def repartitionBySize(df: DataFrame, totalBytes: Long,
-      targetPartitionBytes: Long = 128L << 20): DataFrame = {
-    val n = math.max(1, (totalBytes / targetPartitionBytes).toInt)
-    df.repartition(n, col("mediaId"))
-  }
-
   /** Deterministic synthetic corpus for tests/demos (no codecs in the
     * container — FIXTURES.md §B spirit). */
   def syntheticCorpus(spark: SparkSession, n: Int): Dataset[MediaRecord] = {

@@ -14,7 +14,7 @@ import graft.Determinism._
   * partial+final aggregation order-independent, so AQE partition
   * coalescing can't change results.
   */
-object AggQueries {
+object AggQueries extends QueryFamily {
 
   /** #18 q_agg_group — TPC-H Q1 shape, the flagship correctness query. */
   def aggGroup(s: SparkSession, d: String): DataFrame =
@@ -176,16 +176,9 @@ object AggQueries {
           col("l_orderkey").cast("string"), 256), 4).as("approx_nd"))
       .orderBy(col("l_returnflag"))
 
-  /** 48-bit positional decode of the first 12 md5 hex chars — the
-    * SQL twin of KmvDistinct.hash48. */
-  private def hexval12(m: String): String =
-    (1 to 12).map(j =>
-      s"(instr('0123456789abcdef', substr($m, $j, 1)) - 1) * ${math.pow(16, 12 - j).toLong}"
-    ).mkString("(", " + ", ")")
-
   val aggApproxKmvOracle: String =
     s"""WITH h AS (
-       |  SELECT DISTINCT l_returnflag, ${hexval12("m")} AS hv
+       |  SELECT DISTINCT l_returnflag, ${hexval("m", digits = 12)} AS hv
        |  FROM (SELECT l_returnflag, md5(CAST(l_orderkey AS VARCHAR)) AS m
        |        FROM lineitem) t),
        |r AS (

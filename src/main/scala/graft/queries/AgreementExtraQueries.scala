@@ -29,7 +29,7 @@ import graft.Tables._
   * category shares round at 10dp before squaring; CCC and the BA
   * limits come off exact DECIMAL moment sums with house 8dp rounds
   * before any sqrt. */
-object AgreementExtraQueries {
+object AgreementExtraQueries extends QueryFamily {
 
   private val NR = 20 // raters per subject (first NR events of a day)
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.functions.expressions.FloatVecDot.dot
 
 /** Round-3 widening #7: exact k-NN classification over the embedding
   * table, 2-D histogram (heatmap) binning, and rolling z-score
@@ -16,10 +17,7 @@ import graft.Tables._
   * rolling z-score is a bounded ROWS frame per user — O(1) state per
   * row, natural-key partitioning.
   */
-object AnalyticsExtraQueries {
-
-  private def dot(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-    graft.functions.expressions.FloatVecDot.dot(a, b)
+object AnalyticsExtraQueries extends QueryFamily {
 
   /** q_knn_classify — 5-NN majority-vote label prediction for query
     * vector 0 by exact cosine: the top-5 neighbors (excluding the

@@ -23,7 +23,7 @@ import graft.Tables._
   * identical literals in both engines (sign flips need |proj| at
   * ulp-of-zero — measure-zero); cosines round at 3dp with vec_id
   * tiebreaks (the q_sim_cosine convention). */
-object AnnEvalQueries {
+object AnnEvalQueries extends QueryFamily {
 
   private val BITS = 8
 

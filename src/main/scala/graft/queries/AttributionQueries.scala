@@ -14,7 +14,7 @@ import graft.Tables._
   * transition matrix is a bounded-alphabet aggregate (|types|² rows
   * out) over lead() bigrams on the same window.
   */
-object AttributionQueries {
+object AttributionQueries extends QueryFamily {
 
   /** q_attribution — last-touch attribution: each purchase credits
     * the latest strictly-preceding non-purchase event of the same

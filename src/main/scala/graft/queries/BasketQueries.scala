@@ -15,7 +15,7 @@ import graft.Tables._
   * |parts|² co-occurrence table with map-side combining. Part totals
   * broadcast back for the lift ratio.
   */
-object BasketQueries {
+object BasketQueries extends QueryFamily {
 
   /** q_copurchase — top-20 part pairs by same-order co-occurrence
     * with support and lift: lift = N·co/(c1·c2) over order baskets

@@ -23,7 +23,7 @@ import graft.Tables._
   * spelled-out operation order (identical IEEE results); the
   * discriminant rounds at 4dp before sqrt; coefficients at 8dp,
   * model parameters at 6dp. */
-object BassQueries {
+object BassQueries extends QueryFamily {
 
   /** q_bass_fit — one-row Bass fit over weekly customer adoption
     * (first order ever placed; the events first-purchase proxy

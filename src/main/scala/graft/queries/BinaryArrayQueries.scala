@@ -13,7 +13,7 @@ import graft.Tables._
   * (there with mapInPandas decode stubs; here oracle-gradeable
   * because the bytes derive from text deterministically).
   */
-object BinaryArrayQueries {
+object BinaryArrayQueries extends QueryFamily {
 
   /** q_binary_meta — opaque-binary handling: byte length (UTF-8,
     * ≠ char length for multibyte), content digest, hex prefix, and a

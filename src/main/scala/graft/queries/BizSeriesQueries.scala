@@ -19,7 +19,7 @@ import graft.operators.CacheOps.CheckpointSyntax
   * The ntile/cumulative windows that ARE global run on the contracted
   * per-customer aggregate (dimension-sized), never on the fact table.
   */
-object BizSeriesQueries {
+object BizSeriesQueries extends QueryFamily {
 
   /** q_join_right — right outer join: high-value urgent orders RIGHT
     * JOIN customer, so every customer survives and customers without

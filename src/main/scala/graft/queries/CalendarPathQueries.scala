@@ -15,7 +15,7 @@ import graft.Tables._
   * projections; aging is one keyed aggregate (|status×bucket| rows
   * out) after a broadcast of the 1-row reference date.
   */
-object CalendarPathQueries {
+object CalendarPathQueries extends QueryFamily {
 
   /** q_win_forward — forward-looking bounded frame: for each event,
     * the count and DECIMAL-exact sum of the NEXT three same-user

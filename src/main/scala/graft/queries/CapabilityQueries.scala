@@ -12,7 +12,7 @@ import graft.Tables._
   * synthetic / commutative merges) and covered by ScalaTest
   * properties (PropertySpec, LayoutSpec, MultimodalSpec).
   */
-object CapabilityQueries {
+object CapabilityQueries extends QueryFamily {
 
   /** HLL++ distinct-count sketch (±5%-of-exact property-tested).
     * Sketch merge is commutative ⇒ deterministic under AQE. */

@@ -9,7 +9,7 @@ import graft.Tables._
   * lacked around q_ab_test/q_did/q_cuped (which analyze experiments)
   * : planning one (power analysis) and building a counterfactual
   * control group when you cannot randomize (propensity matching). */
-object CausalDesignQueries {
+object CausalDesignQueries extends QueryFamily {
 
   /** q_power_size — per-segment two-proportion power analysis: the
     * per-arm sample size needed to detect a 20% relative lift over

@@ -29,7 +29,7 @@ import graft.Determinism._
   * one defined row; all values pass through unaggregated except the
   * stats query's exact decimal sums.
   */
-object CdcMergeQueries {
+object CdcMergeQueries extends QueryFamily {
 
   private val caseOp: Column =
     when(col("event_type") === "signup", lit("I"))

@@ -24,32 +24,14 @@ import graft.operators.CacheOps.CheckpointSyntax
   * 8dp after each division; per-term products round at 6dp into
   * decimal sums; harmonic sums are single closed expressions over
   * integer hop counts; final 6dp. */
-object CentralityQueries {
-
-  private def edges(s: SparkSession, d: String): DataFrame =
-    customer(s, d).select(col("c_custkey"), col("c_nationkey").as("na"))
-      .join(orders(s, d).select(col("o_custkey"), col("o_orderkey")),
-        col("o_custkey") === col("c_custkey"))
-      .join(lineitem(s, d).select(col("l_orderkey"), col("l_suppkey")),
-        col("l_orderkey") === col("o_orderkey"))
-      .join(supplier(s, d).select(col("s_suppkey"), col("s_nationkey").as("nb")),
-        col("s_suppkey") === col("l_suppkey"))
-      .groupBy(col("na"), col("nb")).agg(count(lit(1)).as("w"))
-
-  private val edgesSql: String =
-    """SELECT c.c_nationkey AS src, s.s_nationkey AS dst,
-      |    CAST(count(*) AS BIGINT) AS w
-      |  FROM customer c JOIN orders o ON o.o_custkey = c.c_custkey
-      |  JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-      |  JOIN supplier s ON s.s_suppkey = l.l_suppkey
-      |  GROUP BY 1, 2""".stripMargin
+object CentralityQueries extends QueryFamily {
 
   /** q_eigenvector — in-edge eigenvector centrality after 3 power
     * iterations with per-round max-normalization: x⁰ = 1,
     * x^(r+1) ∝ Aᵀ x^(r), scores reported relative to the round-3
     * max. */
   def eigenvector(s: SparkSession, d: String): DataFrame = {
-    val e = edges(s, d).persist()
+    val e = tradeEdges(s, d).persist()
     // round 1: x1 = in-weight (exact longs), normalized at 8dp
     val x1 = e.groupBy(col("nb").as("node")).agg(sum(col("w")).as("x"))
     val m1 = x1.agg(max(col("x")).as("mx"))
@@ -82,7 +64,7 @@ object CentralityQueries {
   }
 
   val eigenvectorOracle: String =
-    s"""WITH e AS MATERIALIZED ($edgesSql),
+    s"""WITH e AS MATERIALIZED ($tradeEdgesSql),
       |x1 AS MATERIALIZED (SELECT dst AS node, CAST(sum(w) AS BIGINT) AS x
       |  FROM e GROUP BY 1),
       |n1 AS MATERIALIZED (SELECT node,
@@ -112,7 +94,7 @@ object CentralityQueries {
     * HC = c₁ + c₂/2 + c₃/3 where c_h counts nodes first reached at
     * hop h; nodes beyond 3 hops contribute 0 (truncated variant). */
   def closeness(s: SparkSession, d: String): DataFrame = {
-    val raw = edges(s, d).filter(col("na") =!= col("nb"))
+    val raw = tradeEdges(s, d).filter(col("na") =!= col("nb"))
       .groupBy(least(col("na"), col("nb")).as("a"),
         greatest(col("na"), col("nb")).as("b"))
       .agg(sum(col("w")).as("w"))
@@ -154,7 +136,7 @@ object CentralityQueries {
   }
 
   val closenessOracle: String =
-    s"""WITH e AS MATERIALIZED ($edgesSql),
+    s"""WITH e AS MATERIALIZED ($tradeEdgesSql),
       |raw AS MATERIALIZED (SELECT least(src, dst) AS a, greatest(src, dst) AS b,
       |    CAST(sum(w) AS BIGINT) AS w
       |  FROM e WHERE src <> dst GROUP BY 1, 2),

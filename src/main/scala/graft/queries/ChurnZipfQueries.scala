@@ -15,7 +15,7 @@ import graft.Tables._
   * exact least-squares pass (DECIMAL sums — the same machinery as
   * q_regr).
   */
-object ChurnZipfQueries {
+object ChurnZipfQueries extends QueryFamily {
 
   /** q_churn — recency-based churn flags: per user, last-activity
     * age (days vs the corpus max event time), churned = inactive for

@@ -23,7 +23,7 @@ import graft.Tables._
   * (q_perplexity convention); per-bin terms round then DECIMAL-sum
   * over the bounded bin domain (D2).
   */
-object ClassMetricsQueries {
+object ClassMetricsQueries extends QueryFamily {
 
   /** q_mcc — Matthews correlation coefficient, balanced accuracy,
     * and F2 for the q_confusion rule "value > 60 predicts purchase":

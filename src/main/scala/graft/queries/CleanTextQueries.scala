@@ -25,7 +25,7 @@ import graft.Determinism._
   * scale; the syllable estimate (vowel-group count) is the same
   * regex in both engines.
   */
-object CleanTextQueries {
+object CleanTextQueries extends QueryFamily {
 
   /** q_readability — per document: words, characters, vowel-group
     * "syllables", average word length, long-word ratio and the

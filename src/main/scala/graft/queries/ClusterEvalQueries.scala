@@ -21,7 +21,7 @@ import graft.Tables._
   * assignments); ARI is exact integer arithmetic until the final
   * ratio; silhouettes round at output.
   */
-object ClusterEvalQueries {
+object ClusterEvalQueries extends QueryFamily {
 
   private val K = 4
 

@@ -24,7 +24,7 @@ import graft.Tables._
   * 8dp-rounded from decimal moments (Bass convention); residuals 6dp
   * before ranking with the day as tiebreak; the ceil index is
   * integer algebra in both engines. */
-object ConformalQueries {
+object ConformalQueries extends QueryFamily {
 
   /** q_conformal — per type: the conformal half-width q̂ at 90% and
     * its empirical test coverage. */

@@ -25,7 +25,7 @@ import graft.Tables._
   * 10dp; CV/entropy/Rosengren fold over ≤k rounded terms as exact
   * decimal sums; ln on rounded shares per the house protocol; sqrt
   * IEEE-exact on 8dp-rounded operands. */
-object CorpusDispersionQueries {
+object CorpusDispersionQueries extends QueryFamily {
 
   /** q_term_dispersion — the four-index dispersion panel for the
     * top-15 corpus terms. */

@@ -20,7 +20,7 @@ import graft.Tables._
   * bit-compatible (established exp/ln precedent); rounded outputs
   * with term/day tiebreaks.
   */
-object CorpusDriftQueries {
+object CorpusDriftQueries extends QueryFamily {
 
   /** Stable per-document day assignment: docs don't carry
     * timestamps, so the calendar day is derived from doc_id (20

@@ -12,7 +12,7 @@ import graft.Determinism._
   * analytics — both everyday operations in a training-data pipeline
   * (semantic near-dup mining; holdout experiment readouts).
   */
-object CorpusSimQueries {
+object CorpusSimQueries extends QueryFamily {
 
   private val dbl = "double"
   private def dec30(c: org.apache.spark.sql.Column) =

@@ -20,7 +20,7 @@ import graft.Tables._
   * round at 8dp before ln; ln-pairs round at 8dp into DECIMAL sums;
   * D2 output rounding.
   */
-object CountDispersionQueries {
+object CountDispersionQueries extends QueryFamily {
 
   private def grid(s: SparkSession, d: String): DataFrame =
     events(s, d).groupBy(col("event_type"), to_date(col("ts2")).as("day"))

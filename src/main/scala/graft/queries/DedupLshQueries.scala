@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.Determinism.hexval
 import graft.functions.expressions.Md5Bucket.md5Bucket
 
 /** Round-4 widening #35: the full MinHash-LSH near-duplicate
@@ -27,7 +28,7 @@ import graft.functions.expressions.Md5Bucket.md5Bucket
   * ([[md5Bucket]] kernel vs the portable hex spelling); Jaccard is a
   * ratio of exact set counts, rounded.
   */
-object DedupLshQueries {
+object DedupLshQueries extends QueryFamily {
 
   private val Hashes = 16
   private val BandRows = 2
@@ -107,10 +108,6 @@ object DedupLshQueries {
   }
 
   val lshExactOracle: String = {
-    def hexval(m: String): String =
-      (1 to 6).map(j =>
-        s"(instr('0123456789abcdef', substr($m, $j, 1)) - 1) * ${math.pow(16, 6 - j).toLong}"
-      ).mkString("(", " + ", ")")
     val mins = (0 until Hashes).map(i =>
       s"min(${hexval(s"md5('lsh$i:' || sh)")} % $Space) AS h$i")
     val bands = (0 until Bands).map { b =>

@@ -31,14 +31,7 @@ import graft.Determinism._
   *    here); their 100 TB path is LSH candidates first, these kernels
   *    second.
   */
-object DedupQueries {
-
-  /** 24-bit integer from the first 6 hex chars of an md5 expression —
-    * same SQL text valid in Spark and DuckDB. */
-  private def hexval(m: String): String =
-    (1 to 6).map(j =>
-      s"(instr('0123456789abcdef', substr($m, $j, 1)) - 1) * ${math.pow(16, 6 - j).toLong}"
-    ).mkString("(", " + ", ")")
+object DedupQueries extends QueryFamily {
 
   // ---------------------------------------------------------------
   // #59 q_dedup_minhash — MinHash(16) signatures, 4 bands × 4 rows,

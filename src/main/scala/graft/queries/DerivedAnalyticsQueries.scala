@@ -24,7 +24,7 @@ import graft.Determinism._
   * bit-stable cross-engine, exp/ln on rounded args is — the
   * q_perplexity precedent).
   */
-object DerivedAnalyticsQueries {
+object DerivedAnalyticsQueries extends QueryFamily {
 
   /** q_keyword_extract — top-3 TF-IDF keywords per document (the
     * tf·ln(N/df) weighting, rank-limited per doc with a full unique

@@ -21,7 +21,7 @@ import graft.Tables._
   * BEFORE the second-level DECIMAL aggregation (the rounded value is
   * the semantic, as with every two-stage statistic here).
   */
-object DispersionQueries {
+object DispersionQueries extends QueryFamily {
 
   /** q_price_dispersion — top-20 parts by unit-price coefficient of
     * variation (≥10 sales): mean and CV of extendedprice/quantity

@@ -13,7 +13,7 @@ import graft.Tables._
   * aggregate; the scaler re-joins the |groups|-row bounds by
   * broadcast. All counts exact; ratios engine-identical and rounded.
   */
-object DistributionQueries {
+object DistributionQueries extends QueryFamily {
 
   /** q_minmax_norm — per event_type min-max scaling of `value` into
     * [0,1]; emits per-type bounds and the normalized mean (which

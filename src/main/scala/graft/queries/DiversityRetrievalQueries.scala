@@ -24,7 +24,7 @@ import graft.Tables._
   * exact double literals in BOTH engines (no cross-engine pow), D2
   * output rounding.
   */
-object DiversityRetrievalQueries {
+object DiversityRetrievalQueries extends QueryFamily {
 
   /** q_abc_class — ABC inventory classification: parts ranked by
     * DECIMAL revenue, cumulative share off the distributed prefix,

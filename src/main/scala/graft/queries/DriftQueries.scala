@@ -20,7 +20,7 @@ import graft.Tables._
   * log term is an identical scalar expression tree in both engines,
   * rounded per SURVEY.md D2 (and D6 for quantized quotients).
   */
-object DriftQueries {
+object DriftQueries extends QueryFamily {
 
   /** q_calibration — reliability diagram: treating value/500 as a
     * predicted purchase probability, per 0.1-wide probability bin:

@@ -25,7 +25,7 @@ import graft.Tables._
   * expressions spelled in ONE fixed evaluation order shared by both
   * engines, 8dp coefficient rounds before the residual pass; RSS
   * terms round at 6dp into DECIMAL sums. */
-object EconometricsQueries {
+object EconometricsQueries extends QueryFamily {
 
   /** Daily purchase (y) / non-purchase (x) counts — materialized once
     * per query (round-8 scan gate): every estimator in this family
@@ -40,14 +40,6 @@ object EconometricsQueries {
       .truncatedCheckpoint()
   }
 
-  private val dailySql: String =
-    """SELECT CAST(ts AS DATE) AS day,
-      |  CAST(count(CASE WHEN event_type = 'purchase' THEN 1 END)
-      |    AS BIGINT) AS y,
-      |  CAST(count(CASE WHEN event_type <> 'purchase' THEN 1 END)
-      |    AS BIGINT) AS x
-      |FROM events GROUP BY 1""".stripMargin
-
   /** Consecutive-day pairs (y_t, y_{t-1}, x_{t-1}). */
   private def lag1(s: SparkSession, d: String): DataFrame = {
     val t = daily(s, d)
@@ -59,7 +51,7 @@ object EconometricsQueries {
 
   private val lag1Sql: String =
     s"""SELECT t.day, t.y, l.y AS y1, l.x AS x1
-       |FROM ($dailySql) t JOIN ($dailySql) l ON t.day = l.day + 1""".stripMargin
+       |FROM ($dailyPurchasesSql) t JOIN ($dailyPurchasesSql) l ON t.day = l.day + 1""".stripMargin
 
   /** q_granger — restricted (y~y1) vs unrestricted (y~y1+x1) OLS via
     * exact moments + Cramer's rule; F = (RSS_r − RSS_u)/(RSS_u/(n−3)). */
@@ -362,7 +354,7 @@ object EconometricsQueries {
   }
 
   val engleGrangerOracle: String =
-    s"""WITH p AS ($dailySql),
+    s"""WITH p AS ($dailyPurchasesSql),
        |m AS (SELECT CAST(count(*) AS BIGINT) AS n,
        |    CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
        |    CAST(sum(x*x) AS BIGINT) AS sxx,

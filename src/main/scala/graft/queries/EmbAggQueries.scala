@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.functions.expressions.FloatVecDot.dot
 
 /** Round-4 widening #115: embedding aggregation operators — the
   * per-source mean-pooled embedding with the pairwise source
@@ -23,7 +24,7 @@ import graft.Tables._
   * Determinism (D1–D5): float→double casts exact; per-dim sums as
   * decimals; means/weights rounded 8dp; distances from exact decimal
   * d² with 8dp sqrt rounds; outputs 6dp with pair/dim tiebreaks. */
-object EmbAggQueries {
+object EmbAggQueries extends QueryFamily {
 
   private def ex(s: SparkSession, d: String): DataFrame =
     embeddings(s, d).select(col("vec_id"),
@@ -191,8 +192,6 @@ object EmbAggQueries {
     * (one pass, no pair join, MmdLinearSpec-pinned) — or subsamples
     * each block to a fixed budget before this exact form. */
   def mmd(s: SparkSession, d: String): DataFrame = {
-    def dot(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-      graft.functions.expressions.FloatVecDot.dot(a, b)
     // round-9 (verdict item 3): each label slice is materialized ONCE —
     // the xx/yy/xy kernel legs then read the cached frame instead of
     // re-embedding the embeddings scan per leg (was the last
@@ -258,8 +257,6 @@ object EmbAggQueries {
     * plumbing bit-for-bit against a driver-side reference on the
     * fixture. */
   def mmdLinear(s: SparkSession, d: String, buckets: Int = 64): DataFrame = {
-    def dot(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-      graft.functions.expressions.FloatVecDot.dot(a, b)
     def k(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) = {
       val base = lit(1.0) + round(dot(a, b), 3) / lit(64.0)
       round(base * base, 8)

@@ -26,7 +26,7 @@ import graft.Tables._
   * per-dim extremes are emitted as raw unrounded doubles (exact, so
   * no rounding-tie exposure at all).
   */
-object EmbOpsQueries {
+object EmbOpsQueries extends QueryFamily {
 
   /** q_emb_quantize — per-dimension int8 quantization audit: codes =
     * floor(255·(x−lo)/(hi−lo)) against the per-dim [lo, hi] frame,

@@ -21,7 +21,7 @@ import graft.Tables._
   * run in DECIMAL (exact, order-independent sums); one double
   * division + sqrt at the end, reported at 4dp with vec_id
   * tie-break. */
-object EmbOutlierQueries {
+object EmbOutlierQueries extends QueryFamily {
 
   /** q_emb_outlier — bottom-10 own-centroid cosines. */
   def embOutlier(s: SparkSession, d: String): DataFrame = {

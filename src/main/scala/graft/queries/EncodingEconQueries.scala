@@ -23,7 +23,7 @@ import graft.Tables._
   * to 8dp before ln (6dp out); spend/returns are DECIMAL sums with
   * rounded products (D2).
   */
-object EncodingEconQueries {
+object EncodingEconQueries extends QueryFamily {
 
   /** q_woe_iv — weight of evidence per order priority for the target
     * "order exceeds 100k", with 0.5 Laplace smoothing:

@@ -17,7 +17,7 @@ import graft.Tables._
   * codegen projections. The sequence generator fans each order into
   * ≤4 rows — Spark's explode(sequence()) Generator case.
   */
-object EncodingSeqQueries {
+object EncodingSeqQueries extends QueryFamily {
 
   /** q_join_nearest — for each purchase, the temporally NEAREST
     * signup by the same user in either direction (|Δt| in µs; ties →

@@ -28,7 +28,7 @@ import graft.Determinism._
   * graded q_mutual_info/q_bigram_lm precedent); ranks are exact
   * half-integers (rank() + (ties−1)/2).
   */
-object EvalExtraQueries {
+object EvalExtraQueries extends QueryFamily {
 
   /** q_regr_metrics — per event_type: fit value = a + b·k by exact
     * least squares (decimal sufficient statistics), then score the

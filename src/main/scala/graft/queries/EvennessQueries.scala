@@ -20,7 +20,7 @@ import graft.Tables._
   * 10dp into DECIMAL sums; expected counts are exact rationals of
   * integer counts (D2).
   */
-object EvennessQueries {
+object EvennessQueries extends QueryFamily {
 
   /** q_evenness — per source: Shannon H over its language mix (ln of
     * 8dp shares) and Pielou J = H / ln(richness) — 1 means perfectly

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.Determinism.hexval
 
 /** Round-4 widening: HyperLogLog graded EXACTLY — the last member of
   * the deterministic-sketch shelf (count-min + Bloom live in
@@ -37,16 +38,9 @@ import graft.Tables._
   * broadcast-joined scaffold guarantees empty registers. No windows,
   * no driver loops — the identical plan shape runs at any scale.
   */
-object ExactHllQueries {
+object ExactHllQueries extends QueryFamily {
 
   private val M = 64 // registers
-
-  /** Portable md5-hex slice -> integer (SketchExactQueries spelling),
-    * over hex chars [start, start+5] = 24 bits. */
-  private def hexvalSql(m: String, start: Int): String =
-    (0 until 6).map(j =>
-      s"(instr('0123456789abcdef', substr($m, ${start + j}, 1)) - 1) * ${math.pow(16, 5 - j).toLong}"
-    ).mkString("(", " + ", ")")
 
   /** rank = leading zeros of the 24-bit value + 1, via exact integer
     * thresholds: v = 0 -> 25, v >= 2^23 -> 1, v >= 2^22 -> 2, ... */
@@ -104,8 +98,8 @@ object ExactHllQueries {
   }
 
   val hllExactOracle: String = {
-    val bucket = s"${hexvalSql("h", 1)} % $M"
-    val rank = rankSql(hexvalSql("h", 7))
+    val bucket = s"${hexval("h")} % $M"
+    val rank = rankSql(hexval("h", 7))
     s"""WITH keys AS (SELECT DISTINCT l_returnflag AS grp,
       |    CAST(l_partkey AS VARCHAR) AS k FROM lineitem),
       |hexed AS (SELECT grp, $bucket AS reg, $rank AS rank

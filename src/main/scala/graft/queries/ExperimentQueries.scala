@@ -20,7 +20,7 @@ import graft.Determinism._
   * same arithmetic in any engine); all moments from fixed-scale
   * DECIMAL sums; ln on positive rounded ratios (q_zipf precedent).
   */
-object ExperimentQueries {
+object ExperimentQueries extends QueryFamily {
 
   private val cut = "2024-01-16"
 

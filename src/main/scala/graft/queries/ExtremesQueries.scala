@@ -26,7 +26,7 @@ import graft.Tables._
   * literals in BOTH engines (no cross-engine libm); daily means and
   * correlations round at 8dp before composition (D2).
   */
-object ExtremesQueries {
+object ExtremesQueries extends QueryFamily {
 
   /** q_gumbel_fit — method-of-moments Gumbel fit on daily maxima
     * of `events.value`: β = s·√6/π, μ = m − γ·β, with the 10- and

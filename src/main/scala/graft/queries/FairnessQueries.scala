@@ -27,7 +27,7 @@ import graft.Tables._
   * accumulate in decimal sums; final report 6dp; bin indexing uses
   * floor on identical IEEE operands with the top edge clamped.
   */
-object FairnessQueries {
+object FairnessQueries extends QueryFamily {
 
   /** q_fairness — per synthetic cohort (user_id % 4): selection rate
     * of the established purchase rule, demographic-parity difference

@@ -20,7 +20,7 @@ import graft.Tables._
   * the prior is rounded to 4dp BEFORE entering the encoding formula
   * so both engines smooth with the identical constant.
   */
-object FeatureEngQueries {
+object FeatureEngQueries extends QueryFamily {
 
   /** q_feature_corr — Pearson correlation for every pair of the four
     * lineitem numeric features (quantity, discount, extendedprice,

@@ -21,7 +21,7 @@ import graft.Tables._
   * exact-count ratios rounded at 10dp before the house ln; MI terms
   * at 8dp into decimal sums; outputs 6dp with the feature name as
   * tiebreak. */
-object FeatureSelectQueries {
+object FeatureSelectQueries extends QueryFamily {
 
   /** q_mi_ranking — I(feature; purchase) for weekday, hour-of-day
     * band, value decile band, and user-id parity.

@@ -19,7 +19,7 @@ import graft.Tables._
   * Determinism: stage predicates are exact integer/string tests on
   * each document; counts exact; rates rounded.
   */
-object FilterFunnelQueries {
+object FilterFunnelQueries extends QueryFamily {
 
   /** q_filter_funnel — per source: documents entering, surviving
     * stage 1 (English), stage 2 (≥20 tokens), stage 3 (type-token

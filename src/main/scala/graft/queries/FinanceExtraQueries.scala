@@ -23,17 +23,7 @@ import graft.Tables._
   * math.pow printed via BigDecimal into the oracle text — the
   * q_ewma convention); weighted terms round at 10dp into exact
   * decimal sums; ratios round at 6dp. */
-object FinanceExtraQueries {
-
-  private def daily(s: SparkSession, d: String): DataFrame =
-    events(s, d)
-      .groupBy(col("event_type").as("t"), to_date(col("ts2")).as("day"))
-      .agg(round(graft.Determinism.dsum(col("value")), 4).as("v"))
-
-  private val dailySql: String =
-    """SELECT event_type AS t, CAST(ts AS DATE) AS day,
-      |    round(CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE), 4) AS v
-      |  FROM events GROUP BY 1, 2""".stripMargin
+object FinanceExtraQueries extends QueryFamily {
 
   /** q_risk_ratios — per type: Sortino (mean over downside
     * deviation), Calmar (annualized mean return over max drawdown of
@@ -42,7 +32,7 @@ object FinanceExtraQueries {
   def riskRatios(s: SparkSession, d: String): DataFrame = {
     val w = Window.partitionBy(col("t")).orderBy(col("day"))
     val wAll = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val r = daily(s, d)
+    val r = dailyByType(s, d)
       .withColumn("prev", lag(col("v"), 1).over(w))
       .withColumn("peak", max(col("v")).over(wAll))
       .withColumn("dd", round((col("peak") - col("v")) / col("peak"), 8))
@@ -70,7 +60,7 @@ object FinanceExtraQueries {
   }
 
   val riskRatiosOracle: String =
-    s"""WITH d AS ($dailySql),
+    s"""WITH d AS ($dailyByTypeSql),
        |r AS (SELECT t, day, v,
        |    lag(v) OVER (PARTITION BY t ORDER BY day) AS prev,
        |    max(v) OVER (PARTITION BY t ORDER BY day
@@ -138,7 +128,7 @@ object FinanceExtraQueries {
     * second partitioned window pass over the macd column). */
   def macd(s: SparkSession, d: String): DataFrame = {
     val w = Window.partitionBy(col("t")).orderBy(col("day"))
-    val base = daily(s, d)
+    val base = dailyByType(s, d)
       .withColumn("ema12", emaCol(col("v"), w, 2.0 / 13, 15))
       .withColumn("ema26", emaCol(col("v"), w, 2.0 / 27, 25))
       .withColumn("macd", round(col("ema12") - col("ema26"), 6))
@@ -154,7 +144,7 @@ object FinanceExtraQueries {
   }
 
   val macdOracle: String =
-    s"""WITH d AS ($dailySql),
+    s"""WITH d AS ($dailyByTypeSql),
        |e AS (SELECT t, day, v,
        |    ${emaSqlStr("v", 2.0 / 13, 15)} AS ema12,
        |    ${emaSqlStr("v", 2.0 / 27, 25)} AS ema26

@@ -10,7 +10,7 @@ import graft.Tables._
   * cross-check), and competing-risks cumulative incidence
   * (Aalen–Johansen) — each ONE-or-two decimal moment folds plus
   * bounded-grid contractions, the house closed-form shapes. */
-object FitDistSurvQueries {
+object FitDistSurvQueries extends QueryFamily {
 
   /** q_deming_reg — Deming regression (λ = 1: equal error variance
     * in x and y) of two NOISY MEASURES of document length — the

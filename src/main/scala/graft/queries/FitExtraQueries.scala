@@ -16,7 +16,7 @@ import graft.Tables._
   * loss/product terms rounded then summed as exact DECIMAL, final
   * parameters re-rounded 8dp; grid argmins tie-break on the full
   * (loss, b0, b1) key so equal-loss grid points are deterministic. */
-object FitExtraQueries {
+object FitExtraQueries extends QueryFamily {
 
   /** q_quantile_reg — pinball(τ)-loss regression of the lineitem
     * price-per-1k on quantity over a bounded literal grid (5 b0 × 8

@@ -22,17 +22,7 @@ import graft.Tables._
   * per-row ratios round at 8dp into decimal sums; residuals and
   * squared residuals round before the second-pass moments; final 6dp.
   */
-object ForecastExtraQueries {
-
-  private def daily(s: SparkSession, d: String): DataFrame =
-    events(s, d)
-      .groupBy(col("event_type").as("t"), to_date(col("ts2")).as("day"))
-      .agg(round(graft.Determinism.dsum(col("value")), 4).as("v"))
-
-  private val dailySql: String =
-    """SELECT event_type AS t, CAST(ts AS DATE) AS day,
-      |    round(CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE), 4) AS v
-      |  FROM events GROUP BY 1, 2""".stripMargin
+object ForecastExtraQueries extends QueryFamily {
 
   /** q_forecast_err — per type, the seasonal-naive-7 forecast scored
     * three ways: sMAPE = mean of 200·|v−f|/(|v|+|f|), WAPE =
@@ -41,7 +31,7 @@ object ForecastExtraQueries {
     * definitions. */
   def forecastErr(s: SparkSession, d: String): DataFrame = {
     val w = Window.partitionBy(col("t")).orderBy(col("day"))
-    val scored = daily(s, d)
+    val scored = dailyByType(s, d)
       .withColumn("f", lag(col("v"), 7).over(w))
       .filter(col("f").isNotNull)
     val terms = scored.select(col("t"), col("v"),
@@ -65,7 +55,7 @@ object ForecastExtraQueries {
   }
 
   val forecastErrOracle: String =
-    s"""WITH daily AS ($dailySql),
+    s"""WITH daily AS ($dailyByTypeSql),
       |scored AS (SELECT t, v,
       |    lag(v, 7) OVER (PARTITION BY t ORDER BY day) AS f
       |  FROM daily),
@@ -93,7 +83,7 @@ object ForecastExtraQueries {
     * squaring (D2). */
   def breuschPagan(s: SparkSession, d: String): DataFrame = {
     val w = Window.partitionBy(col("t")).orderBy(col("day"))
-    val base = daily(s, d)
+    val base = dailyByType(s, d)
       .withColumn("x", row_number().over(w).cast("double"))
     val m1 = base.groupBy(col("t")).agg(
       count(lit(1)).as("n"),
@@ -128,7 +118,7 @@ object ForecastExtraQueries {
   }
 
   val breuschPaganOracle: String =
-    s"""WITH daily AS ($dailySql),
+    s"""WITH daily AS ($dailyByTypeSql),
       |base AS (SELECT t, v,
       |    CAST(row_number() OVER (PARTITION BY t ORDER BY day)
       |      AS DOUBLE) AS x

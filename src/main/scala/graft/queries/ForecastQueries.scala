@@ -22,17 +22,7 @@ import graft.Tables._
   * absolute errors are single IEEE subtractions rounded back to 4dp
   * before the decimal reduction; ratios rounded at output.
   */
-object ForecastQueries {
-
-  private def daily(s: SparkSession, d: String): DataFrame =
-    events(s, d)
-      .groupBy(col("event_type").as("t"), to_date(col("ts2")).as("day"))
-      .agg(round(graft.Determinism.dsum(col("value")), 4).as("v"))
-
-  private val dailySql: String =
-    """SELECT event_type AS t, CAST(ts AS DATE) AS day,
-      |    round(CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE), 4) AS v
-      |  FROM events GROUP BY 1, 2""".stripMargin
+object ForecastQueries extends QueryFamily {
 
   /** q_mase — per type: MAE of the naive-1 forecast (previous
     * observed day) scaled by the MAE of the seasonal naive-7 (the
@@ -40,7 +30,7 @@ object ForecastQueries {
     * baseline. Mean error / MAE gives the bias direction alongside. */
   def mase(s: SparkSession, d: String): DataFrame = {
     val w = Window.partitionBy(col("t")).orderBy(col("day"))
-    val lagged = daily(s, d)
+    val lagged = dailyByType(s, d)
       .withColumn("f1", lag(col("v"), 1).over(w))
       .withColumn("f7", lag(col("v"), 7).over(w))
     val scored = lagged.select(col("t"),
@@ -63,7 +53,7 @@ object ForecastQueries {
   }
 
   val maseOracle: String =
-    s"""WITH daily AS ($dailySql),
+    s"""WITH daily AS ($dailyByTypeSql),
       |lagged AS (SELECT t, v,
       |    lag(v, 1) OVER (PARTITION BY t ORDER BY day) AS f1,
       |    lag(v, 7) OVER (PARTITION BY t ORDER BY day) AS f7
@@ -94,7 +84,7 @@ object ForecastQueries {
     * to the zero-denominators that break percentage-error metrics. */
   def theilU(s: SparkSession, d: String): DataFrame = {
     val w = Window.partitionBy(col("t")).orderBy(col("day"))
-    val lagged = daily(s, d)
+    val lagged = dailyByType(s, d)
       .withColumn("f1", lag(col("v"), 1).over(w))
       .filter(col("f1").isNotNull)
     val scored = lagged.select(col("t"),
@@ -111,7 +101,7 @@ object ForecastQueries {
   }
 
   val theilUOracle: String =
-    s"""WITH daily AS ($dailySql),
+    s"""WITH daily AS ($dailyByTypeSql),
       |lagged AS (SELECT t, v,
       |    lag(v, 1) OVER (PARTITION BY t ORDER BY day) AS f1
       |  FROM daily),

@@ -33,7 +33,7 @@ import graft.Tables._
   * 10dp-rounded ratios, rounded at 8dp; pair totals are sums of ≤3
   * rounded weights, rounded at 6dp, with the (c1, c2) key pair as
   * the total tiebreak. */
-object FsLinkageQueries {
+object FsLinkageQueries extends QueryFamily {
 
   private val M = Seq("seg" -> 0.95, "bal" -> 0.85, "dig" -> 0.7)
 

@@ -12,7 +12,7 @@ import graft.Determinism._
   * the second tier of string functions, running-distinct windows,
   * interval-overlap joins, and a skyline (Pareto-dominance) query.
   */
-object FunctionalQueries {
+object FunctionalQueries extends QueryFamily {
 
   private val dbl = "double"
 

@@ -27,7 +27,7 @@ import graft.Tables._
   * both engines evaluate identically — no multi-term float reduction
   * anywhere.
   */
-object GeoCellQueries {
+object GeoCellQueries extends QueryFamily {
 
   private val Eps = 0.08
   private val MinPts = 4 // neighbors incl. self for a core point

@@ -16,7 +16,7 @@ import graft.Tables._
   * combinable; the outputs are audit-report-sized (rows = number of
   * checks or violating keys), never data-sized.
   */
-object GovernanceQueries {
+object GovernanceQueries extends QueryFamily {
 
   /** q_scd2 — slowly-changing-dimension type-2 history from the event
     * log: per user, collapse consecutive same-type events, then emit

@@ -27,7 +27,7 @@ import graft.operators.CacheOps.CheckpointSyntax
   * SF-proportional; degrees and CDF counts are exact integers; CDF
   * gaps and interval terms round at 10dp into DECIMAL sums (D2).
   */
-object GraphDistQueries {
+object GraphDistQueries extends QueryFamily {
 
   /** Weighted undirected nation trade edges above 1.1× mean weight. */
   private def edges(s: SparkSession, d: String): DataFrame = {

@@ -23,34 +23,7 @@ import graft.Tables._
   * re-enters DECIMAL after a fixed 12dp round so the per-pair
   * reduction is order-independent (D2); outputs rounded.
   */
-object GraphFeatureQueries {
-
-  /** Undirected simple edges a<b of the nation trade graph. */
-  private def undirected(s: SparkSession, d: String): DataFrame = {
-    import graft.operators.CacheOps.CheckpointSyntax
-    // <=|nations|^2 edge grid referenced by several branches per
-    // query - materialize once (round-8 scan gate)
-    customer(s, d).select(col("c_custkey"), col("c_nationkey").as("src"))
-      .join(orders(s, d).select(col("o_custkey"), col("o_orderkey")),
-        col("o_custkey") === col("c_custkey"))
-      .join(lineitem(s, d).select(col("l_orderkey"), col("l_suppkey")),
-        col("l_orderkey") === col("o_orderkey"))
-      .join(supplier(s, d).select(col("s_suppkey"), col("s_nationkey").as("dst")),
-        col("s_suppkey") === col("l_suppkey"))
-      .filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .distinct()
-      .truncatedCheckpoint()
-  }
-
-  private val undirectedSql: String =
-    """SELECT DISTINCT least(c.c_nationkey, s.s_nationkey) AS a,
-      |    greatest(c.c_nationkey, s.s_nationkey) AS b
-      |  FROM customer c JOIN orders o ON o.o_custkey = c.c_custkey
-      |  JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-      |  JOIN supplier s ON s.s_suppkey = l.l_suppkey
-      |  WHERE c.c_nationkey <> s.s_nationkey""".stripMargin
+object GraphFeatureQueries extends QueryFamily {
 
   /** q_adamic_adar — link-prediction scores for every nation pair
     * with ≥1 shared neighbor: AA(u,v) = Σ_{z ∈ N(u)∩N(v)} 1/ln(deg z),
@@ -59,7 +32,7 @@ object GraphFeatureQueries {
     * graded scale the trade graph saturates, so the flag — not an
     * anti join — carries the split). */
   def adamicAdar(s: SparkSession, d: String): DataFrame = {
-    val e = undirected(s, d)
+    val e = undirectedTradeEdges(s, d)
     val nbr = e.select(col("a").as("node"), col("b").as("z"))
       .union(e.select(col("b"), col("a")))
     val deg = nbr.groupBy(col("z")).agg(count(lit(1)).as("degz"))
@@ -80,7 +53,7 @@ object GraphFeatureQueries {
   }
 
   val adamicAdarOracle: String =
-    s"""WITH e AS ($undirectedSql),
+    s"""WITH e AS ($undirectedTradeEdgesSql),
       |nbr AS (SELECT a AS node, b AS z FROM e
       |  UNION ALL SELECT b, a FROM e),
       |deg AS (SELECT z, count(*) AS degz FROM nbr GROUP BY 1),
@@ -103,7 +76,7 @@ object GraphFeatureQueries {
     * triangle count and the undirected simple degree; zero-degree and
     * degree-1 nodes report 0. */
   def clusteringCoef(s: SparkSession, d: String): DataFrame = {
-    val u = undirected(s, d).persist()
+    val u = undirectedTradeEdges(s, d).persist()
     val tri = u.as("e1")
       .join(u.as("e2"), col("e2.a") === col("e1.b"))
       .join(u.as("e3"),
@@ -126,7 +99,7 @@ object GraphFeatureQueries {
   }
 
   val clusteringCoefOracle: String =
-    s"""WITH u AS ($undirectedSql),
+    s"""WITH u AS ($undirectedTradeEdgesSql),
       |tri AS (SELECT e1.a AS x, e1.b AS y, e2.b AS z
       |  FROM u e1 JOIN u e2 ON e2.a = e1.b
       |  JOIN u e3 ON e3.a = e1.a AND e3.b = e2.b),

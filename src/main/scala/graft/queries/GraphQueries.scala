@@ -20,19 +20,7 @@ import graft.operators.CacheOps.CheckpointSyntax
   * vertex, count matching closing edges). BFS is |V|-row iterations,
   * each one co-partitioned hash join + min-combine.
   */
-object GraphQueries {
-
-  /** The directed weighted nation trade graph: src = customer nation,
-    * dst = supplier nation, w = lineitem count. */
-  private def edges(s: SparkSession, d: String): DataFrame =
-    customer(s, d).select(col("c_custkey"), col("c_nationkey").as("na"))
-      .join(orders(s, d).select(col("o_custkey"), col("o_orderkey")),
-        col("o_custkey") === col("c_custkey"))
-      .join(lineitem(s, d).select(col("l_orderkey"), col("l_suppkey")),
-        col("l_orderkey") === col("o_orderkey"))
-      .join(supplier(s, d).select(col("s_suppkey"), col("s_nationkey").as("nb")),
-        col("s_suppkey") === col("l_suppkey"))
-      .groupBy(col("na"), col("nb")).agg(count(lit(1)).as("w"))
+object GraphQueries extends QueryFamily {
 
   private val edgesSql: String =
     """SELECT c.c_nationkey AS src, s.s_nationkey AS dst, count(*) AS w
@@ -46,7 +34,7 @@ object GraphQueries {
     * neighbors, self-loops dropped), and total edge weight out.
     * Nations with no trade keep zero rows via the left joins. */
   def degree(s: SparkSession, d: String): DataFrame = {
-    val e = edges(s, d).persist()
+    val e = tradeEdges(s, d).persist()
     val out = e.groupBy(col("na")).agg(
       countDistinct(col("nb")).as("out_deg"), sum(col("w")).as("w_out"))
     val in = e.groupBy(col("nb")).agg(countDistinct(col("na")).as("in_deg"))
@@ -96,7 +84,7 @@ object GraphQueries {
     * the three corners. The orientation makes every triangle counted
     * exactly once — the standard distributed-join formulation. */
   def triangles(s: SparkSession, d: String): DataFrame = {
-    val u = edges(s, d).filter(col("na") =!= col("nb"))
+    val u = tradeEdges(s, d).filter(col("na") =!= col("nb"))
       .select(least(col("na"), col("nb")).as("a"),
         greatest(col("na"), col("nb")).as("b"))
       .distinct().persist()
@@ -140,7 +128,7 @@ object GraphQueries {
     * edges, min-combine with the previous frontier. NULL = beyond 4
     * hops / unreachable. */
   def shortestPath(s: SparkSession, d: String): DataFrame = {
-    val e = edges(s, d).select(col("na"), col("nb")).persist()
+    val e = tradeEdges(s, d).select(col("na"), col("nb")).persist()
     var dist: DataFrame = nation(s, d)
       .select(col("n_nationkey").as("node"))
       .filter(col("node") === 0).withColumn("dist", lit(0L))

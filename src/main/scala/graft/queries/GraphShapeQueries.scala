@@ -24,7 +24,7 @@ import graft.Tables._
   * (sqrt is IEEE-correctly-rounded, so identical operands give
   * identical roots).
   */
-object GraphShapeQueries {
+object GraphShapeQueries extends QueryFamily {
 
   /** Directed weighted nation trade graph (customer nation → supplier
     * nation, weight = lineitem count). */
@@ -33,24 +33,8 @@ object GraphShapeQueries {
     // ≤|nations|² edge grid, referenced by every shape/assortativity/
     // modularity branch — materialize once (round-8 scan gate: the
     // re-embedded 4-table join chain cost 12 fact scans per plan)
-    customer(s, d).select(col("c_custkey"), col("c_nationkey").as("na"))
-      .join(orders(s, d).select(col("o_custkey"), col("o_orderkey")),
-        col("o_custkey") === col("c_custkey"))
-      .join(lineitem(s, d).select(col("l_orderkey"), col("l_suppkey")),
-        col("l_orderkey") === col("o_orderkey"))
-      .join(supplier(s, d).select(col("s_suppkey"), col("s_nationkey").as("nb")),
-        col("s_suppkey") === col("l_suppkey"))
-      .groupBy(col("na"), col("nb")).agg(count(lit(1)).as("w"))
-      .truncatedCheckpoint()
+    tradeEdges(s, d).truncatedCheckpoint()
   }
-
-  private val edgesSql: String =
-    """SELECT c.c_nationkey AS src, s.s_nationkey AS dst,
-      |    CAST(count(*) AS BIGINT) AS w
-      |  FROM customer c JOIN orders o ON o.o_custkey = c.c_custkey
-      |  JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-      |  JOIN supplier s ON s.s_suppkey = l.l_suppkey
-      |  GROUP BY 1, 2""".stripMargin
 
   /** q_graph_shape — one-row panel on the simple directed graph
     * (self-loops counted separately, excluded from density /
@@ -81,7 +65,7 @@ object GraphShapeQueries {
   }
 
   val graphShapeOracle: String =
-    s"""WITH e AS MATERIALIZED ($edgesSql),
+    s"""WITH e AS MATERIALIZED ($tradeEdgesSql),
       |simple AS MATERIALIZED (SELECT src, dst FROM e WHERE src <> dst),
       |nodes AS (SELECT CAST(count(*) AS BIGINT) AS n_nodes FROM
       |  (SELECT src AS v FROM e UNION SELECT dst FROM e)),
@@ -141,7 +125,7 @@ object GraphShapeQueries {
   }
 
   val assortativityOracle: String =
-    s"""WITH e AS MATERIALIZED ($edgesSql),
+    s"""WITH e AS MATERIALIZED ($tradeEdgesSql),
       |raw AS MATERIALIZED (SELECT least(src, dst) AS a, greatest(src, dst) AS b,
       |    CAST(sum(w) AS BIGINT) AS w
       |  FROM e WHERE src <> dst GROUP BY 1, 2),
@@ -216,7 +200,7 @@ object GraphShapeQueries {
   }
 
   val modularityOracle: String =
-    s"""WITH e0 AS MATERIALIZED ($edgesSql),
+    s"""WITH e0 AS MATERIALIZED ($tradeEdgesSql),
       |e AS MATERIALIZED (SELECT e0.*, ns.n_regionkey AS r_src, nd.n_regionkey AS r_dst
       |  FROM e0 JOIN nation ns ON ns.n_nationkey = e0.src
       |  JOIN nation nd ON nd.n_nationkey = e0.dst),

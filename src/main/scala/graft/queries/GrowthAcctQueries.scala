@@ -23,7 +23,7 @@ import graft.Tables._
   * Determinism: classifications are set-membership booleans on exact
   * keys; transition probabilities round at 8dp, per-step products at
   * 8dp into decimal sums; final 6dp. */
-object GrowthAcctQueries {
+object GrowthAcctQueries extends QueryFamily {
 
   /** q_growth_acct — last 10 observed days: DAU split into new /
     * retained / resurrected, plus churned (active day−1, absent

@@ -19,7 +19,7 @@ import graft.functions.expressions.HistFixed
   * order-independent vector add. See HistFixedSpec for the
   * two-phase plan assertion.
   */
-object HistAggQueries {
+object HistAggQueries extends QueryFamily {
 
   /** q_hist_agg — per event type, the 20-bin histogram of `value`
     * over [0, 100) (edges clamped), exploded back to

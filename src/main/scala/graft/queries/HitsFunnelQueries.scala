@@ -14,7 +14,7 @@ import graft.Tables._
   * per-user min-aggregates chained by as-of-style conditions — one
   * shuffle on user_id total.
   */
-object HitsFunnelQueries {
+object HitsFunnelQueries extends QueryFamily {
 
   /** q_hits — two HITS iterations on the weighted nation trade graph
     * with all-ones initialization: h₁ = A·1 (weighted out-degree),

@@ -23,7 +23,7 @@ import graft.Tables._
   * deviations at 4dp accumulate in exact DECIMAL running sums (order
   * independent); R/S ratios at 8dp; ln on 8dp-rounded arguments; the
   * block length literals make ln(8/16/32) identical cross-engine. */
-object HurstQueries {
+object HurstQueries extends QueryFamily {
 
   /** q_hurst — per type: mean R/S at block scales 8/16/32 days
     * (complete blocks only) and the fitted Hurst exponent. */

@@ -22,7 +22,7 @@ import graft.operators.CacheOps.CheckpointSyntax
   * per query is rounded. Outputs carry total orders on their group
   * keys.
   */
-object HygieneQueries {
+object HygieneQueries extends QueryFamily {
 
   /** q_l_diversity — over the k-anonymity equivalence classes
     * (segment, nation, 1000-wide balance band): l = distinct order

@@ -20,7 +20,7 @@ import graft.Tables._
   *
   * Determinism: counts exact; coefficients at 8dp; residual z at 4dp;
   * final 6dp with full tie-breaks on every top-k. */
-object ImpactGovQueries {
+object ImpactGovQueries extends QueryFamily {
 
   /** q_causal_impact — purchase volume vs the all-other-types
     * control: OLS fit on the first half of the calendar, average and

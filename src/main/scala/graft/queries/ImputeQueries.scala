@@ -26,7 +26,7 @@ import graft.Tables._
   * 8dp off decimal folds; LOCF picks the PREVIOUS unmasked value by
   * (ts2, event_id) order — tie-free; squared errors at 4dp into
   * decimal sums; rates 6dp. */
-object ImputeQueries {
+object ImputeQueries extends QueryFamily {
 
   /** q_impute_eval — RMSE of three imputers on the masked 10%. */
   def imputeEval(s: SparkSession, d: String): DataFrame = {

@@ -21,7 +21,7 @@ import graft.Tables._
   * protocol (8dp-rounded arguments, exp output pinned at 4dp);
   * per-row transforms round at 8dp into decimal sums (D2).
   */
-object InequalityQueries {
+object InequalityQueries extends QueryFamily {
 
   private def spend(s: SparkSession, d: String): DataFrame =
     orders(s, d).groupBy(col("o_custkey"))

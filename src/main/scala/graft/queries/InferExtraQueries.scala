@@ -24,7 +24,7 @@ import graft.Tables._
   * exact integers; shares and means round at 6–8dp before
   * composition; sqrt takes 8dp-rounded arguments (D2).
   */
-object InferExtraQueries {
+object InferExtraQueries extends QueryFamily {
 
   /** q_two_prop_z — weekend vs weekday purchase-share z test:
     * z = (p̂₁−p̂₂)/√(p̂(1−p̂)(1/n₁+1/n₂)) with the pooled p̂, all

@@ -23,7 +23,7 @@ import graft.Tables._
   * correction Σ(f³−f) exact BIGINT; all ratios spelled in one shared
   * expression order with 8dp rounds before sqrt; allocation counts
   * integer-rounded identically from 6dp-rounded shares. */
-object InferMoreQueries {
+object InferMoreQueries extends QueryFamily {
 
   /** q_dunn — pairwise Dunn z over event types: z_ij =
     * (R̄_i−R̄_j)/√((N(N+1)/12 − T/(12(N−1)))(1/n_i+1/n_j)). */

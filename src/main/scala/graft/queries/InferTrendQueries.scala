@@ -20,7 +20,7 @@ import graft.Tables._
   *
   * Determinism: every sum is an exact integer until the final
   * chi-square / z assembly (spelled-out operation order, 6dp). */
-object InferTrendQueries {
+object InferTrendQueries extends QueryFamily {
 
   /** q_mood_median — Mood's median test across event types: per type
     * the counts above / at-or-below the pooled median (percentile_disc

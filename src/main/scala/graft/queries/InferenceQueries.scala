@@ -16,7 +16,7 @@ import graft.Tables._
   * association rules contract to |users|×|types| first (distinct),
   * then a bounded |types|² self-join.
   */
-object InferenceQueries {
+object InferenceQueries extends QueryFamily {
 
   /** q_ks_test — exact two-sample KS distance between morning
     * (hour < 12) and afternoon `value` distributions: D = max over

@@ -21,7 +21,7 @@ import graft.operators.CacheOps.CheckpointSyntax
   * Determinism: daily values at 4dp; residuals at 4dp; MSE and
   * leverage from exact-decimal-derived doubles in spelled-out
   * operation order; final 6dp with (type, day) tie-break. */
-object InfluenceQueries {
+object InfluenceQueries extends QueryFamily {
 
   /** q_cooks_d — top-10 influential days across types: leverage
     * h = 1/n + (x−x̄)²/Sxx, studentized residual

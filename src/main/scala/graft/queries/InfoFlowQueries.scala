@@ -20,20 +20,12 @@ import graft.Tables._
   * moments; CCF products round at 6dp into decimal sums; TE cell
   * probabilities are exact-count ratios rounded at 10dp before the
   * house ln; outputs 4–6dp. */
-object InfoFlowQueries {
+object InfoFlowQueries extends QueryFamily {
 
   private def daily(s: SparkSession, d: String): DataFrame =
     events(s, d).groupBy(to_date(col("ts2")).as("day"))
       .agg(count(when(col("event_type") === "purchase", lit(1))).as("y"),
         count(when(col("event_type") =!= "purchase", lit(1))).as("x"))
-
-  private val dailySql: String =
-    """SELECT CAST(ts AS DATE) AS day,
-      |  CAST(count(CASE WHEN event_type = 'purchase' THEN 1 END)
-      |    AS BIGINT) AS y,
-      |  CAST(count(CASE WHEN event_type <> 'purchase' THEN 1 END)
-      |    AS BIGINT) AS x
-      |FROM events GROUP BY 1""".stripMargin
 
   /** q_cross_corr — CCF(k) = corr(x_t, y_{t+k}) for k = −5..5, each
     * lag one equi-join against broadcast standardization moments. */
@@ -102,7 +94,7 @@ object InfoFlowQueries {
          |    6) AS ccf
          |FROM dd a JOIN dd b ON b.day = a.day + ($k), stats""".stripMargin
     }.mkString("\nUNION ALL\n")
-    s"""WITH dd AS ($dailySql),
+    s"""WITH dd AS ($dailyPurchasesSql),
        |$statsSql
        |SELECT * FROM ($lagRows) t ORDER BY lag""".stripMargin
   }
@@ -190,7 +182,7 @@ object InfoFlowQueries {
          |  JOIN (SELECT y0, CAST(count(*) AS BIGINT) AS c_y0
          |    FROM trip_$y$x GROUP BY 1) m USING (y0),
          |  (SELECT CAST(count(*) AS BIGINT) AS n FROM trip_$y$x) nn""".stripMargin
-    s"""WITH dd AS ($dailySql),
+    s"""WITH dd AS ($dailyPurchasesSql),
        |mv AS (SELECT a.day,
        |    CAST(a.y > b.y AS INT) AS dy, CAST(a.x > b.x AS INT) AS dx
        |  FROM dd a JOIN dd b ON a.day = b.day + 1),

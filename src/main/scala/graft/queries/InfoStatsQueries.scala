@@ -27,7 +27,7 @@ import graft.Tables._
   * expression in both engines; every float term is rounded to a fixed
   * scale before any DECIMAL sum (SURVEY.md D2).
   */
-object InfoStatsQueries {
+object InfoStatsQueries extends QueryFamily {
 
   /** q_win_pctrank — percent_rank and cume_dist of `value` within
     * each event_type: the two distribution-position window functions

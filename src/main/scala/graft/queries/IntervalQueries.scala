@@ -29,7 +29,7 @@ import graft.Tables._
   * counts are integer arithmetic; every ORDER BY carries a unique
   * tiebreak (event_id) where the natural key can tie.
   */
-object IntervalQueries {
+object IntervalQueries extends QueryFamily {
 
   private val sessionLen = "INTERVAL '30' MINUTE"
 

@@ -20,7 +20,7 @@ import graft.Tables._
   * windows / decimal moments over the grid only. No global windows,
   * no raw-row windows.
   */
-object InventoryEconQueries {
+object InventoryEconQueries extends QueryFamily {
 
   /** q_eoq — economic order quantity for the 10 highest-demand parts:
     * EOQ = √(2·D·S / H) with ordering cost S = 100 per order and

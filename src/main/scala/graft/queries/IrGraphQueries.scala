@@ -26,7 +26,7 @@ import graft.Tables._
   * rounded to a fixed scale and summed as DECIMAL (order-independent)
   * per SURVEY.md D2.
   */
-object IrGraphQueries {
+object IrGraphQueries extends QueryFamily {
 
   /** q_bm25 — Okapi BM25 relevance score of every document for the
     * 2-term query {"data","fast"} (k1=1.2, b=0.75).

@@ -23,7 +23,7 @@ import graft.Tables._
   * cross-engine on .x15-style values);
   * interval averages are single divisions of exact-decimal-derived
   * doubles; final 6dp. */
-object IsotonicQueries {
+object IsotonicQueries extends QueryFamily {
 
   /** q_isotonic — calibration curve of the pseudo-probability
     * p = value/100 (clipped to [0,1]) against the purchase label over

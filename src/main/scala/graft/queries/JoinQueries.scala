@@ -21,7 +21,7 @@ import graft.Determinism._
   *    NOT a window over the exploded pairs — so map-side combine
   *    keeps the shuffle small (see [[joinAsof]]).
   */
-object JoinQueries {
+object JoinQueries extends QueryFamily {
 
   /** #16 q_join_star — flagship multi-join (TPC-H Q5 shape): revenue
     * by nation for one region and one order-date year.

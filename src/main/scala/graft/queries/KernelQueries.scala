@@ -25,7 +25,7 @@ import graft.Tables._
   * Determinism (D1–D5): per-pair weights rounded at 10dp before the
   * decimal sum (order-independent); final density/regression values
   * are double ratios of exact sums, rounded for output. */
-object KernelQueries {
+object KernelQueries extends QueryFamily {
 
   /** q_kde_epan — Epanechnikov KDE of o_totalprice at 19 grid points
     * (25k..475k step 25k), bandwidth h = 50k. */

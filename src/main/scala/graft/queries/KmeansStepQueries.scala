@@ -20,7 +20,7 @@ import graft.Tables._
   * contract to k·|dims| rows; nothing global, no windows. A real
   * trainer iterates this exact dataflow.
   */
-object KmeansStepQueries {
+object KmeansStepQueries extends QueryFamily {
 
   private val K = 4
 

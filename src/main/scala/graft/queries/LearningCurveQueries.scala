@@ -23,7 +23,7 @@ import graft.Tables._
   * Determinism (D1–D5): md5 membership is engine-identical; moments
   * are exact decimals; coefficients 8dp (Bass convention); squared
   * errors round at 4dp into decimal sums; RMSE 4dp. */
-object LearningCurveQueries {
+object LearningCurveQueries extends QueryFamily {
 
   private val cuts = Seq(("0.25", "39"), ("0.50", "73"),
     ("0.75", "ac"), ("1.00", "e6"))

@@ -22,7 +22,7 @@ import graft.Tables._
   * rounds at 8dp before any division/sum (house protocol); exp output
   * pinned at 4dp; final report 6dp.
   */
-object LexicalRichnessQueries {
+object LexicalRichnessQueries extends QueryFamily {
 
   /** q_yule_k — per source: token count N, vocabulary V, Yule's
     * K = 10⁴·(Σ r²N_r − N)/N², Simpson's lexical

@@ -24,7 +24,7 @@ import graft.Tables._
   * counts exact longs; ratios round at 6dp into per-lang DECIMAL
   * means (D2).
   */
-object LlmExtraQueries {
+object LlmExtraQueries extends QueryFamily {
 
   /** q_ngram_coverage — for n = 1, 2, 3: the fraction of the test
     * half's DISTINCT word n-grams that appear anywhere in the train

@@ -24,7 +24,7 @@ import graft.Tables._
   * with an identical scalar expression tree in both engines, rounded
   * to a fixed scale, and summed as DECIMAL (SURVEY.md D2).
   */
-object LlmPipeQueries {
+object LlmPipeQueries extends QueryFamily {
 
   /** Tokens with position per document. */
   private def toks(s: SparkSession, d: String): DataFrame =

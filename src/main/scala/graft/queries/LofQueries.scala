@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.functions.expressions.FloatVecDot.dot
 
 /** Round-4 widening #111: Local Outlier Factor (k=5) over the
   * embedding table — the density-ratio anomaly score (Breunig et al.
@@ -27,7 +28,7 @@ import graft.Tables._
   * convention — both engines' float reductions agree after the
   * round, ties break on vec_id); reach at 3dp; lrd at 6dp off exact
   * decimal sums; LOF at 4dp with vec_id tiebreaks. */
-object LofQueries {
+object LofQueries extends QueryFamily {
 
   private val K = 5
 
@@ -37,8 +38,6 @@ object LofQueries {
 
   /** q_lof — top-10 most anomalous vectors by LOF(5). */
   def lof(s: SparkSession, d: String): DataFrame = {
-    def dot(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-      graft.functions.expressions.FloatVecDot.dot(a, b)
     val e = embeddings(s, d).select(col("vec_id"), col("label"),
       col("embedding"))
     // Tile-salted label block (round-7 verdict; the dedupEmbed /
@@ -133,8 +132,6 @@ object LofQueries {
     * identical from every table). */
   def annPairs(s: SparkSession, d: String, bits: Int = -1,
       tables: Int = 3, dim: Int = 64): DataFrame = {
-    def dot(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-      graft.functions.expressions.FloatVecDot.dot(a, b)
     val e0 = embeddings(s, d).select(col("vec_id"), col("label"),
       col("embedding"))
     // ADAPTIVE bits (round-12, SCALING_r12 finding): a FIXED bucket
@@ -186,8 +183,6 @@ object LofQueries {
   /** Exact candidate pairs (the graded generator, un-tiled — for the
     * recall test's reference edge set). */
   def exactPairs(s: SparkSession, d: String): DataFrame = {
-    def dot(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-      graft.functions.expressions.FloatVecDot.dot(a, b)
     val e = embeddings(s, d).select(col("vec_id"), col("label"),
       col("embedding"))
     val a = e.toDF("src", "label", "ea")

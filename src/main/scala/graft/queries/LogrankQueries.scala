@@ -20,7 +20,7 @@ import graft.Tables._
   *
   * Determinism: all counts exact longs; per-time terms round at 8dp
   * into DECIMAL sums; one sqrt at the end; final 6dp. */
-object LogrankQueries {
+object LogrankQueries extends QueryFamily {
 
   /** q_logrank — O₁, E₁, variance and z for the weekend-first vs
     * weekday-first lifetime split. */

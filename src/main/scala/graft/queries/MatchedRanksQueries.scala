@@ -24,7 +24,7 @@ import graft.Tables._
   * on 8dp means); ICC per-group terms round at 6dp into DECIMAL
   * sums; kappa cell shares at 8dp; D2 output rounding.
   */
-object MatchedRanksQueries {
+object MatchedRanksQueries extends QueryFamily {
 
   /** q_friedman — Friedman χ² across the k=5 event types over
     * complete calendar-day blocks: within-day ranks of the 8dp daily

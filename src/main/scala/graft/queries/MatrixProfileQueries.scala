@@ -23,7 +23,7 @@ import graft.Tables._
   *
   * Determinism (D1–D5): daily values 4dp; per-dim squared diffs 4dp
   * into decimal sums; all argmins break ties on window indices. */
-object MatrixProfileQueries {
+object MatrixProfileQueries extends QueryFamily {
 
   private val W = 7
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.Determinism.hexval
 
 /** Round-4 widening #3: data-mixture machinery — null-aware NOT IN
   * anti join (the one anti-join flavor q_join_anti's NOT EXISTS does
@@ -26,15 +27,7 @@ import graft.Tables._
   * (engine-identical bits), so the drawn sample is a pure function of
   * the data; NOT IN/rank logic is exact.
   */
-object MixSampleQueries {
-
-  /** First 6 hex digits of an md5 string expression as an integer
-    * (same construction as DedupQueries' hash family — SQL evaluable
-    * verbatim in both engines). */
-  private def hexval(m: String): String =
-    (1 to 6).map(j =>
-      s"(instr('0123456789abcdef', substr($m, $j, 1)) - 1) * ${math.pow(16, 6 - j).toLong}"
-    ).mkString("(", " + ", ")")
+object MixSampleQueries extends QueryFamily {
 
   /** q_join_anti_nullin — NOT IN with a NULLABLE probe key: rows
     * whose key is NULL are dropped (three-valued logic — `x NOT IN

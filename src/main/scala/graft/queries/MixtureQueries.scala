@@ -17,7 +17,7 @@ import graft.Tables._
   * exact decimal sums; component moments recovered via E[y²]−μ² so
   * each M-step is a single pass; parameters re-round at 8dp between
   * iterations. */
-object MixtureQueries {
+object MixtureQueries extends QueryFamily {
 
   /** q_gmm_em — (w, μ, σ) per component after two EM rounds. */
   def gmmEm(s: SparkSession, d: String): DataFrame = {

@@ -19,7 +19,7 @@ import graft.Tables._
   * Determinism: counts exact; precision terms round to 10dp before
   * the DECIMAL reduction; gains on exact-count ratios, rounded.
   */
-object MlEvalExtraQueries {
+object MlEvalExtraQueries extends QueryFamily {
 
   /** q_avg_precision — exact average precision of `value` as the
     * score for predicting purchases: AP = Σ_v ΔTP(v)·P(v) / |pos|

@@ -24,7 +24,7 @@ import graft.Tables._
   * float ratio is computed with an identical scalar expression tree
   * in both engines and rounded to a fixed scale (SURVEY.md D2).
   */
-object MlEvalQueries {
+object MlEvalQueries extends QueryFamily {
 
   /** q_auc — exact ROC AUC of `value` as a score for predicting
     * event_type='purchase', via the Mann–Whitney U statistic with

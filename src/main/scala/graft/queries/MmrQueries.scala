@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.functions.expressions.FloatVecDot.dot
 import graft.operators.CacheOps.CheckpointSyntax
 
 /** Round-4 widening #69: MMR (maximal-marginal-relevance) diversity
@@ -22,10 +23,7 @@ import graft.operators.CacheOps.CheckpointSyntax
   * Determinism: cosines round at 3dp (the q_sim_cosine float
   * protocol), MMR scores at 6dp, every argmax tie-broken by vec_id;
   * λ = 0.7 exactly representable in both parsers. */
-object MmrQueries {
-
-  private def dot(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-    graft.functions.expressions.FloatVecDot.dot(a, b)
+object MmrQueries extends QueryFamily {
 
   private def cos(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
     round(dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b))), 3)

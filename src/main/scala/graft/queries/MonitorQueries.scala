@@ -20,7 +20,7 @@ import graft.Tables._
   * math; variance ratios come from 4dp-rounded component columns
   * re-entering DECIMAL (D2).
   */
-object MonitorQueries {
+object MonitorQueries extends QueryFamily {
 
   /** q_ab_srm — sample-ratio mismatch for the md5 50/50 user split
     * (the q_ab_test assignment): observed arm sizes vs the expected

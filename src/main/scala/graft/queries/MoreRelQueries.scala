@@ -17,7 +17,7 @@ import graft.Determinism._
   * recursive CTE iterates over dimension-sized frontiers only
   * (region→nation→customer), never the fact tables.
   */
-object MoreRelQueries {
+object MoreRelQueries extends QueryFamily {
 
   /** q_str_agg — ordered string aggregation (listagg / string_agg):
     * distinct priorities per order status, comma-joined in order. */

@@ -25,7 +25,7 @@ import graft.Tables._
   * eigen/inverse arithmetic so both engines compute on identical
   * doubles; atan2/sqrt outputs round at 4–6dp (D2).
   */
-object MultivarQueries {
+object MultivarQueries extends QueryFamily {
 
   private def moments(df: DataFrame, by: Seq[Column]): DataFrame = {
     val aggs = Seq(

@@ -23,7 +23,7 @@ import graft.Determinism._
   * doubles at fixed points (exp/ln per the q_perplexity
   * precedent).
   */
-object NonParamQueries {
+object NonParamQueries extends QueryFamily {
 
   /** q_gmean — the Pythagorean mean family per event_type:
     * arithmetic, geometric (exp of the mean log), and harmonic

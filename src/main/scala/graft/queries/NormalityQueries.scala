@@ -22,7 +22,7 @@ import graft.Tables._
   * both engines, so the max(struct) argmax is bit-stable; outputs
   * rounded.
   */
-object NormalityQueries {
+object NormalityQueries extends QueryFamily {
 
   /** q_grubbs — Grubbs' statistic per event type: G =
     * max|x−x̄|/s with the offending value alongside — the single-

@@ -20,7 +20,7 @@ import graft.Tables._
   *
   * Determinism: counts exact; byte estimates are integer products of
   * literal widths; ceil/log2 on exact doubles. */
-object OpsPlanQueries {
+object OpsPlanQueries extends QueryFamily {
 
   // estimated serialized row widths (bytes) — fixed catalog constants
   private val widths = Seq(

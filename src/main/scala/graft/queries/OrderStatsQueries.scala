@@ -26,7 +26,7 @@ import graft.operators.PrefixOps
   * predicates; decay terms are 8dp-rounded DECIMAL before the sum
   * (SURVEY.md D2).
   */
-object OrderStatsQueries {
+object OrderStatsQueries extends QueryFamily {
 
   /** q_median_global — exact global quartiles (percentile_disc
     * semantics: the smallest value whose cumulative count reaches

@@ -24,7 +24,7 @@ import graft.Tables._
   * Determinism: everything integer until the final z assembly;
   * ln(N) on an exact integer argument rounds at 8dp (house
   * protocol); row_number tie-breaks are spelled out. */
-object OrderedAltQueries {
+object OrderedAltQueries extends QueryFamily {
 
   /** q_jonckheere — JT test of l_quantity against the order-priority
     * dose (1–5): 2U accumulated in exact integers over the dense

@@ -22,7 +22,7 @@ import graft.Tables._
   * exact BIGINT algebra; only the final ratios divide as doubles with
   * house 8dp rounds; sqrt only in tau-b's denominator, on 8dp-rounded
   * operands. */
-object OrdinalAssocQueries {
+object OrdinalAssocQueries extends QueryFamily {
 
   /** 5×5 contingency: priority rank (1..5, already ordinal in the
     * label prefix) × price band floor(total/100k) capped at 4. */

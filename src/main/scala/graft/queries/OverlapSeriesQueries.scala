@@ -22,7 +22,7 @@ import graft.Determinism._
   * fixed-scale DECIMAL; ratios rounded at fixed points; RSI's
   * zero-loss guard avoids the unbounded RS ratio entirely.
   */
-object OverlapSeriesQueries {
+object OverlapSeriesQueries extends QueryFamily {
 
   /** q_user_overlap — audience overlap between event types: for each
     * unordered type pair, the intersection size and Jaccard of their

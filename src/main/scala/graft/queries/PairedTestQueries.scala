@@ -25,7 +25,7 @@ import graft.Tables._
   * takes 8dp-rounded ratio arguments and the interval stays in log
   * space (no exp), D2 rounding at 4dp on statistics.
   */
-object PairedTestQueries {
+object PairedTestQueries extends QueryFamily {
 
   /** q_mcnemar — McNemar's test on paired classifiers of high-value
     * orders: A = totalprice above 250k, B = urgent-or-high priority.

@@ -24,7 +24,7 @@ import graft.Tables._
   * kappa's po/pe come from exact integer counts (single double
   * divisions, bit-stable).
   */
-object PathAgreementQueries {
+object PathAgreementQueries extends QueryFamily {
 
   /** q_attribution_pos — U-shaped (position-based) credit over each
     * purchasing user's ordered non-purchase touches: 0.4 first, 0.4

@@ -22,7 +22,7 @@ import graft.Tables._
   * functions — both engines call libm on IDENTICAL doubles),
   * cos/sin results re-round at 10dp, per-term products at 6dp into
   * exact decimal sums; power at 4dp. */
-object PeriodogramQueries {
+object PeriodogramQueries extends QueryFamily {
 
   /** q_periodogram — power at harmonics k=1..10 with the dominant
     * harmonic flagged. */

@@ -25,7 +25,7 @@ import graft.Determinism._
   * the replicas, turning one straggler partition into k uniform ones
   * (same technique AQE skew-join applies adaptively).
   */
-object PipelineQueries {
+object PipelineQueries extends QueryFamily {
 
   /** q_funnel — 3-stage conversion funnel over `events`: users who
     * signed up, then viewed AFTER their first signup, then purchased

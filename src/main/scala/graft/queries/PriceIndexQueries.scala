@@ -24,7 +24,7 @@ import graft.operators.CacheOps.CheckpointSyntax
   * DECIMAL sums (D1); ratios at 8dp before the Fisher sqrt; D2
   * output rounding.
   */
-object PriceIndexQueries {
+object PriceIndexQueries extends QueryFamily {
 
   private val cut = "1998-06-01 00:00:00"
 

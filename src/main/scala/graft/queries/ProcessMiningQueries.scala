@@ -22,7 +22,7 @@ import graft.Tables._
   * term re-enters DECIMAL after a fixed 12dp round (D2); medians sit
   * on unique total orders.
   */
-object ProcessMiningQueries {
+object ProcessMiningQueries extends QueryFamily {
 
   /** q_ship_latency — order-to-ship days per order priority: count,
     * mean, exact lower-median, min and max — the fulfillment-SLA

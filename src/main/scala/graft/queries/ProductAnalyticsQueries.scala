@@ -20,7 +20,7 @@ import graft.operators.PrefixOps
   * Determinism: counts exact; stickiness and quartiles on exact
   * integers; means via DECIMAL sums.
   */
-object ProductAnalyticsQueries {
+object ProductAnalyticsQueries extends QueryFamily {
 
   /** q_dau_wau — per day: daily actives, trailing-7-day actives, and
     * DAU/WAU stickiness. */

@@ -23,7 +23,7 @@ import graft.operators.CacheOps.CheckpointSyntax
   * identical trajectory); margins re-enter DECIMAL for the
   * order-independent sums.
   */
-object RakingQueries {
+object RakingQueries extends QueryFamily {
 
   /** q_ipf_rake — cell weights after two full row/column IPF cycles
     * against uniform margin targets, with the residual row-margin

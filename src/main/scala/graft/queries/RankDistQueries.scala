@@ -20,7 +20,7 @@ import graft.operators.CacheOps.CheckpointSyntax
   * Determinism: revenues are exact decimal sums; rank ties break on
   * brand name inside the join predicate itself; distances are exact
   * integers with 6dp normalized forms. */
-object RankDistQueries {
+object RankDistQueries extends QueryFamily {
 
   /** q_footrule — footrule and Kendall distances + normalized forms. */
   def footrule(s: SparkSession, d: String): DataFrame = {

@@ -26,7 +26,7 @@ import graft.Tables._
   * reduction is order-independent too; doubles appear only in the
   * final scalar arithmetic, rounded at output (SURVEY.md D2).
   */
-object RankTestQueries {
+object RankTestQueries extends QueryFamily {
 
   /** Pooled per-distinct-value midranks of `value` over `events` —
     * rank(v) = 1 + #rows before v (prefix count), midrank = rank +

@@ -14,7 +14,7 @@ import graft.Determinism._
   * both engines derive a bit-identical threshold — a raw AVG(double)
   * would drift at the last ulp and flip boundary rows.
   */
-object RelExtraQueries {
+object RelExtraQueries extends QueryFamily {
 
   /** q_pivot — groupBy + pivot on a known key domain (status), counts
     * and exact sums per cell. */

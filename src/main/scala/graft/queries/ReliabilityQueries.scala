@@ -23,7 +23,7 @@ import graft.Tables._
   * D1); variances/shares/ratios round at 8dp before sqrt or ln;
   * outputs at 4–6dp (D2).
   */
-object ReliabilityQueries {
+object ReliabilityQueries extends QueryFamily {
 
   /** q_cronbach — Cronbach's alpha over the k=3 item scale
     * (l_quantity, l_discount, l_tax): α = k/(k−1) · (1 − Σs²_i/s²_t)

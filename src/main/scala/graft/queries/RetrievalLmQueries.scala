@@ -26,7 +26,7 @@ import graft.Tables._
   * product of integer numerators is recovered exactly by
   * round(exp(Σln·),0) (integers < 2^53), and the 16^(r−1)
   * denominator is a power of two. */
-object RetrievalLmQueries {
+object RetrievalLmQueries extends QueryFamily {
 
   private val Q = Seq("hash", "join", "scan")
   private val MU = 2000.0 // Dirichlet pseudo-length

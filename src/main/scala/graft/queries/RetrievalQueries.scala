@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.functions.expressions.FloatVecDot.dot
 
 /** Round-4 widening #23: retrieval-pipeline operators — hybrid
   * keyword+vector rank fusion (the RRF used by every production
@@ -25,10 +26,7 @@ import graft.Tables._
   * small integers — bit-stable; fused scores rounded at 8dp with id
   * tiebreaks.
   */
-object RetrievalQueries {
-
-  private def dot(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-    graft.functions.expressions.FloatVecDot.dot(a, b)
+object RetrievalQueries extends QueryFamily {
 
   /** q_rrf_fusion — reciprocal-rank fusion of a keyword leg (tf of
     * the query terms {hash, join, filter}, top-100) and a vector leg

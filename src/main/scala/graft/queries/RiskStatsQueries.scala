@@ -25,7 +25,7 @@ import graft.Determinism._
   * positive rounded ratios; prior parameters computed from
   * 6dp-rounded moments; every sum fixed-scale DECIMAL.
   */
-object RiskStatsQueries {
+object RiskStatsQueries extends QueryFamily {
 
   /** q_tail_index — Hill estimator of the right-tail exponent per
     * event_type: mean ln(x_i/x_50) over the 49 largest values

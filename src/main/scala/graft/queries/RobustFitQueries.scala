@@ -22,7 +22,7 @@ import graft.operators.CacheOps.CheckpointSyntax
   * Determinism (D1–D5): residuals/weights round at 6–8dp;
   * coefficients 8dp (Bass convention); MAD via exact rank counting
   * with day tiebreaks; ln on 10dp-rounded operands. */
-object RobustFitQueries {
+object RobustFitQueries extends QueryFamily {
 
   private def daily(s: SparkSession, d: String): DataFrame = {
     import graft.operators.CacheOps.CheckpointSyntax

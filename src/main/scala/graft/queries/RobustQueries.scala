@@ -19,7 +19,7 @@ import graft.Tables._
   * cardinality (nations/regions) with map-side partials, so the
   * shuffle carries only |dim| rows per partition.
   */
-object RobustQueries {
+object RobustQueries extends QueryFamily {
 
   /** q_try_arith — null-on-error scalar semantics: Spark 4 runs ANSI
     * mode, so raw casts/division RAISE on bad input; the try_ family

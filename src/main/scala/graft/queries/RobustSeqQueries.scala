@@ -21,7 +21,7 @@ import graft.Tables._
   * Determinism: caps are exact domain values; capped products round
   * at 6dp into decimal sums; ln on 8dp-rounded rate ratios with both
   * hypothesis rates as exact literals; final 6dp. */
-object RobustSeqQueries {
+object RobustSeqQueries extends QueryFamily {
 
   /** q_winsorized_corr — per event type: Pearson r of (value, props
     * JSON "k" field) before and after 5%/95% winsorization of

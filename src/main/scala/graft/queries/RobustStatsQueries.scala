@@ -15,7 +15,7 @@ import graft.Tables._
   * session stats ride the same per-user ordered window the session
   * queries already use, with all aggregates map-side combinable.
   */
-object RobustStatsQueries {
+object RobustStatsQueries extends QueryFamily {
 
   /** q_vocab_bandpass — df band-pass vocabulary pruning: drop tokens
     * in fewer than 5 docs (noise/typos) or more than 60% of docs

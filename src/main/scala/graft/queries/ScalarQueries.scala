@@ -21,7 +21,7 @@ import graft.Determinism._
   * (Spark 4 default) makes /0 an error — guard with NULLIF on both
   * sides.
   */
-object ScalarQueries {
+object ScalarQueries extends QueryFamily {
 
   /** #37 q_str_funcs — upper/lower/trim/substring/concat/length/
     * replace/lpad/split-element over part. */

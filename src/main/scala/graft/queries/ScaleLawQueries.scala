@@ -20,7 +20,7 @@ import graft.Tables._
   * Determinism (D1–D5): counts exact; ln on 10dp-rounded ratios;
   * per-term/per-block terms round into exact decimal sums; outputs
   * 4–6dp. */
-object ScaleLawQueries {
+object ScaleLawQueries extends QueryFamily {
 
   private val FMIN = 5L
 

@@ -14,7 +14,7 @@ import graft.Tables._
   * only the final ORDER BY (driver-demanded determinism, D1) adds a
   * shuffle, which a real consumer would drop.
   */
-object ScanQueries {
+object ScanQueries extends QueryFamily {
 
   /** #1 q_scan_project — projection pruning: read 3 of 16 columns. */
   def scanProject(s: SparkSession, d: String): DataFrame =

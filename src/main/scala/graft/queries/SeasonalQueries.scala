@@ -24,9 +24,9 @@ import graft.Determinism._
   * locale-dependent indices — Spark counts Sunday=1 where DuckDB
   * counts Sunday=0) key the weekday profile; CUSUM deviations are
   * fixed-scale DECIMAL; fold ids derive from the shared md5-hex
-  * construction (MixSampleQueries.hexval precedent).
+  * construction (graft.Determinism.hexval).
   */
-object SeasonalQueries {
+object SeasonalQueries extends QueryFamily {
 
   /** q_order_gap — per repeat customer: order count and min / median /
     * max day gap between consecutive orders (lag window per
@@ -185,13 +185,6 @@ object SeasonalQueries {
       |  min(x.day) AS change_day, max(x.abs_cusum) AS max_abs_cusum
       |FROM x JOIN p ON p.t = x.t AND x.abs_cusum = p.peak
       |GROUP BY x.t ORDER BY x.t""".stripMargin
-
-  /** The shared md5-hex → integer construction (SQL evaluable
-    * verbatim in both engines — MixSampleQueries precedent). */
-  private def hexval(m: String): String =
-    (1 to 6).map(j =>
-      s"(instr('0123456789abcdef', substr($m, $j, 1)) - 1) * ${math.pow(16, 6 - j).toLong}"
-    ).mkString("(", " + ", ")")
 
   /** q_crossval — deterministic 5-fold cross-validation split over
     * orders (fold = md5(orderkey) mod 5 — content-addressed, so any

@@ -17,7 +17,7 @@ import graft.Tables._
   * within (type, weekday) — ≤ weeks² pairs per season on the bounded
   * calendar. All integer until z.
   */
-object SeasonalTrendQueries {
+object SeasonalTrendQueries extends QueryFamily {
 
   /** q_mk_seasonal — per type: seasonal S, Var S, and z. */
   def mkSeasonal(s: SparkSession, d: String): DataFrame = {

@@ -23,7 +23,7 @@ import graft.operators.CacheOps.CheckpointSyntax
   * Determinism (D1–D5): daily counts make every moment an exact
   * BIGINT; coefficients 8dp; RSS terms evaluate in ONE shared
   * expression order, 6dp; the candidate day is the argmin tiebreak. */
-object SegmentedFitQueries {
+object SegmentedFitQueries extends QueryFamily {
 
   /** q_segmented — best month-boundary breakpoint: per-side slopes,
     * split RSS, and the single-line RSS it beats. */

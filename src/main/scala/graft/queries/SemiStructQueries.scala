@@ -19,7 +19,7 @@ import graft.Determinism._
   * separate 100 TB scan). `explode` is a Generator: rows fan out
   * inside the same stage, no shuffle until the downstream groupBy.
   */
-object SemiStructQueries {
+object SemiStructQueries extends QueryFamily {
 
   /** #43 q_json_extract — typed extraction from events.props
     * (`{"k": int}` — FIXTURES); aggregated per k-bucket. */

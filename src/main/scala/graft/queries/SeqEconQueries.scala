@@ -25,7 +25,7 @@ import graft.Determinism._
   * precedent); variances from exact decimal sums; every ratio
   * rounded at a fixed scale.
   */
-object SeqEconQueries {
+object SeqEconQueries extends QueryFamily {
 
   /** q_seq_trigram — behavioral trigram mining: each user's
     * time-ordered event-type sequence yields overlapping trigrams

@@ -22,7 +22,7 @@ import graft.Tables._
   * Determinism: strict inequalities on exact DECIMAL(18,2) prices;
   * order sequence keyed (o_orderdate, o_orderkey) — a total order.
   */
-object SeqPatternQueries {
+object SeqPatternQueries extends QueryFamily {
 
   /** q_pattern_vshape — DOWN DOWN UP over four consecutive orders of
     * one customer (price p₃>p₂>p₁<p₀ with the match anchored at the

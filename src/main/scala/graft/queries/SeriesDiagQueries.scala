@@ -24,17 +24,7 @@ import graft.Tables._
   * rounded, and outputs round at 6dp which absorbs cross-libm ulp
   * differences (q_perplexity convention).
   */
-object SeriesDiagQueries {
-
-  private def daily(s: SparkSession, d: String): DataFrame =
-    events(s, d)
-      .groupBy(col("event_type").as("t"), to_date(col("ts2")).as("day"))
-      .agg(round(graft.Determinism.dsum(col("value")), 4).as("v"))
-
-  private val dailySql: String =
-    """SELECT event_type AS t, CAST(ts AS DATE) AS day,
-      |    round(CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE), 4) AS v
-      |  FROM events GROUP BY 1, 2""".stripMargin
+object SeriesDiagQueries extends QueryFamily {
 
   /** q_ljung_box — Ljung–Box Q at lags 1..3 per event type over the
     * daily series: ρ_k = Σ dev_t·dev_{t−k} / Σ dev², Q = n(n+2)
@@ -42,7 +32,7 @@ object SeriesDiagQueries {
     * 6dp (broadcast mean join), lag products to 4dp, so both engines
     * sum identical decimals. */
   def ljungBox(s: SparkSession, d: String): DataFrame = {
-    val dd = daily(s, d)
+    val dd = dailyByType(s, d)
     val mean = dd.groupBy(col("t"))
       .agg((sum(col("v").cast("decimal(18,4)")).cast("double") /
         count(lit(1)).cast("double")).as("mu"))
@@ -75,7 +65,7 @@ object SeriesDiagQueries {
   }
 
   val ljungBoxOracle: String =
-    s"""WITH daily AS ($dailySql),
+    s"""WITH daily AS ($dailyByTypeSql),
       |mu AS (SELECT t, CAST(sum(CAST(v AS DECIMAL(18,4))) AS DOUBLE) /
       |    CAST(count(*) AS DOUBLE) AS mu FROM daily GROUP BY 1),
       |dev AS (SELECT daily.t, day, round(v - mu, 6) AS e
@@ -109,7 +99,7 @@ object SeriesDiagQueries {
     // branches — materialize once (round-8 scan gate: the consumers
     // re-embedded 4 events scans per plan)
     import graft.operators.CacheOps.CheckpointSyntax
-    val dd = daily(s, d).truncatedCheckpoint()
+    val dd = dailyByType(s, d).truncatedCheckpoint()
     val anchor = dd.groupBy(col("t")).agg(min(col("day")).as("day0"))
     val xy = dd.join(broadcast(anchor), "t")
       .withColumn("x", datediff(col("day"), col("day0")).cast("double"))
@@ -133,7 +123,7 @@ object SeriesDiagQueries {
   }
 
   private val residualsSql: String =
-    s"""daily AS ($dailySql),
+    s"""daily AS ($dailyByTypeSql),
       |anchor AS (SELECT t, min(day) AS day0 FROM daily GROUP BY 1),
       |xy AS (SELECT daily.t, day,
       |    CAST(date_diff('day', day0, day) AS DOUBLE) AS x, v

@@ -22,17 +22,7 @@ import graft.Tables._
   * slope arithmetic is straight-line IEEE double math on the
   * contracted rows, rounded at output.
   */
-object SeriesShapeQueries {
-
-  private def daily(s: SparkSession, d: String): DataFrame =
-    events(s, d)
-      .groupBy(col("event_type").as("t"), to_date(col("ts2")).as("day"))
-      .agg(round(graft.Determinism.dsum(col("value")), 4).as("v"))
-
-  private val dailySql: String =
-    """SELECT event_type AS t, CAST(ts AS DATE) AS day,
-      |    round(CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE), 4) AS v
-      |  FROM events GROUP BY 1, 2""".stripMargin
+object SeriesShapeQueries extends QueryFamily {
 
   private def pearson(n: Column, sx: Column, sy: Column, sxy: Column,
       sxx: Column, syy: Column): Column =
@@ -45,7 +35,7 @@ object SeriesShapeQueries {
     * (type, lag). */
   def acfMulti(s: SparkSession, d: String): DataFrame = {
     val w = Window.partitionBy(col("t")).orderBy(col("day"))
-    val lagged = daily(s, d)
+    val lagged = dailyByType(s, d)
       .withColumn("l2", lag(col("v"), 2).over(w))
       .withColumn("l3", lag(col("v"), 3).over(w))
       .withColumn("l7", lag(col("v"), 7).over(w))
@@ -81,7 +71,7 @@ object SeriesShapeQueries {
         |    CAST(sum(CAST(round(l$lagN*l$lagN, 4) AS DECIMAL(27,4))) AS DOUBLE) AS syy_s
         |  FROM lagged WHERE l$lagN IS NOT NULL GROUP BY t) g$lagN""".stripMargin
     }
-    s"""WITH daily AS ($dailySql),
+    s"""WITH daily AS ($dailyByTypeSql),
       |lagged AS (SELECT t, v,
       |    lag(v, 2) OVER w AS l2,
       |    lag(v, 3) OVER w AS l3,
@@ -96,7 +86,7 @@ object SeriesShapeQueries {
     * |types|-row anchors): slope per day, intercept at day 0, and R²
     * — the parametric companion to q_mann_kendall's S/τ. */
   def trendSlope(s: SparkSession, d: String): DataFrame = {
-    val dl = daily(s, d)
+    val dl = dailyByType(s, d)
     val anchor = dl.groupBy(col("t")).agg(min(col("day")).as("d0"))
     val xy = dl.join(broadcast(anchor), "t")
       .select(col("t"), datediff(col("day"), col("d0")).cast("double").as("x"),
@@ -121,7 +111,7 @@ object SeriesShapeQueries {
   }
 
   val trendSlopeOracle: String =
-    s"""WITH daily AS ($dailySql),
+    s"""WITH daily AS ($dailyByTypeSql),
       |anchor AS (SELECT t, min(day) AS d0 FROM daily GROUP BY 1),
       |xy AS (SELECT daily.t,
       |    CAST(date_diff('day', anchor.d0, daily.day) AS DOUBLE) AS x,
@@ -159,7 +149,7 @@ object SeriesShapeQueries {
     // probe + rank pass — materialize once (round-8 scan gate: was 4
     // events scans)
     import graft.operators.CacheOps.CheckpointSyntax
-    val dl = daily(s, d).truncatedCheckpoint()
+    val dl = dailyByType(s, d).truncatedCheckpoint()
     val pairs = dl.as("a").join(broadcast(dl.as("b")),
         col("a.t") === col("b.t") && col("a.day") < col("b.day"))
       .select(col("a.t").as("t"),
@@ -179,7 +169,7 @@ object SeriesShapeQueries {
   }
 
   val theilSenOracle: String =
-    s"""WITH daily AS ($dailySql),
+    s"""WITH daily AS ($dailyByTypeSql),
       |pairs AS (SELECT a.t,
       |    round((b.v - a.v) /
       |      CAST(date_diff('day', a.day, b.day) AS DOUBLE), 8) AS slope,

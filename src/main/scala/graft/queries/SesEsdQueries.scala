@@ -11,7 +11,7 @@ import graft.Tables._
   * dimension), and multi-outlier removal as three unrolled
   * argmax-and-exclude rounds (the q_gmm_em unrolled-iteration shape
   * applied to Rosner's generalized ESD). */
-object SesEsdQueries {
+object SesEsdQueries extends QueryFamily {
 
   /** ONE shared weight construction feeding BOTH engines (ADVICE
     * r11): scala BigDecimal(double) rounds the shortest decimal

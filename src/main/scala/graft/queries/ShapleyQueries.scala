@@ -32,7 +32,7 @@ import graft.Tables._
   * IEEE double op, rounded to 6dp — identical in both engines. The
   * share guards Σ = 0 with NULL (nullif) rather than NaN.
   */
-object ShapleyQueries {
+object ShapleyQueries extends QueryFamily {
 
   private val Channels = Seq("click" -> 1, "error" -> 2,
     "signup" -> 4, "view" -> 8)

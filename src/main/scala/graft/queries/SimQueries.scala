@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.Tables._
+import graft.functions.expressions.FloatVecDot.dot
 import graft.Determinism._
 
 /** Similarity-search / multimodal operators (SURVEY.md §2-B #54–#56).
@@ -24,18 +25,9 @@ import graft.Determinism._
   *    double (sequential fold ⊥ engine SIMD order differs only at
   *    1e-16 — absorbed by ROUND 3/4).
   */
-object SimQueries {
+object SimQueries extends QueryFamily {
 
   private val dbl = "double"
-
-  /** Sequential double fold of a·b over float arrays — a codegen'd
-    * custom Expression (FloatVecDot). Bit-identical to the
-    * declarative `aggregate(zip_with(a,b,_*_),0d,_+_)` form it
-    * replaced (same left-to-right double accumulation), but runs
-    * inside whole-stage codegen instead of the interpreted
-    * higher-order-function path. */
-  private def dot(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-    graft.functions.expressions.FloatVecDot.dot(a, b)
 
   /** #54 q_sim_cosine — brute-force cosine top-10 vs query vec 0;
     * ranked on the ROUNDED score + vec_id so rank survives last-ulp

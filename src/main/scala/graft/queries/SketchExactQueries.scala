@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.Determinism.hexval
 import graft.functions.expressions.Md5Bucket.md5Bucket
 
 /** Round-4 widening #19: deterministic sketches graded EXACTLY — a
@@ -27,14 +28,7 @@ import graft.functions.expressions.Md5Bucket.md5Bucket
   * spelling in the oracle — equality pinned by Md5BucketSpec); every
   * output is an exact integer count except the final FPR ratio.
   */
-object SketchExactQueries {
-
-  /** The shared md5-hex → top-24-bits integer SQL construction
-    * (SeasonalQueries/MixSampleQueries precedent). */
-  private def hexval(m: String): String =
-    (1 to 6).map(j =>
-      s"(instr('0123456789abcdef', substr($m, $j, 1)) - 1) * ${math.pow(16, 6 - j).toLong}"
-    ).mkString("(", " + ", ")")
+object SketchExactQueries extends QueryFamily {
 
   private def sqlBucket(expr: String, salt: String, m: Int): String =
     s"${hexval(s"md5('$salt:' || $expr)")} % $m"

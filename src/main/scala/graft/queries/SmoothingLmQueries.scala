@@ -13,7 +13,7 @@ import graft.Tables._
   * N1+(w1·) / N1+(·w2) are ROW counts of the same contraction, and
   * the normalizer N1+(··) is its cardinality — one corpus scan
   * total, every downstream table vocabulary-bounded. */
-object SmoothingLmQueries {
+object SmoothingLmQueries extends QueryFamily {
 
   /** q_kneser_ney — P_KN(w2|w1) with absolute discount D = 0.75 for
     * the top-20 corpus bigrams (deterministic (count desc, w1, w2)

@@ -14,7 +14,7 @@ import graft.Tables._
   * joins — exactly what Catalyst rewrites them to (ReplaceIntersect
   * WithSemiJoin / ReplaceExceptWithAntiJoin).
   */
-object SortSetQueries {
+object SortSetQueries extends QueryFamily {
 
   /** #31 q_sort_multi — multi-key sort, mixed ASC/DESC, explicit null
     * placement. The data has no nulls, so nulls are manufactured with

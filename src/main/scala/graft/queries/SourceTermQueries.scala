@@ -14,7 +14,7 @@ import graft.Tables._
   * relations (|sources| / |lang × vocab| rows); the log-odds join
   * broadcasts the |vocab|-sized global counts.
   */
-object SourceTermQueries {
+object SourceTermQueries extends QueryFamily {
 
   /** q_source_profile — per ingest source: document count, exact
     * char volume, language count, dominant language (deterministic

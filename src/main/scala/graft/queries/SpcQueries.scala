@@ -20,17 +20,7 @@ import graft.operators.CacheOps.CheckpointSyntax
   * Determinism: daily values pinned at 4dp; moving ranges at 4dp into
   * decimal sums; 2.66 / 3.0 / 6.0 constants exact; sqrt IEEE-exact;
   * final 6dp. */
-object SpcQueries {
-
-  private def daily(s: SparkSession, d: String): DataFrame =
-    events(s, d)
-      .groupBy(col("event_type").as("t"), to_date(col("ts2")).as("day"))
-      .agg(round(graft.Determinism.dsum(col("value")), 4).as("v"))
-
-  private val dailySql: String =
-    """SELECT event_type AS t, CAST(ts AS DATE) AS day,
-      |    round(CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE), 4) AS v
-      |  FROM events GROUP BY 1, 2""".stripMargin
+object SpcQueries extends QueryFamily {
 
   /** q_control_chart — per type: the individuals-chart panel
     * (centerline, average moving range, UCL/LCL at ±2.66·MR̄),
@@ -42,7 +32,7 @@ object SpcQueries {
     // per-(type, day) panel feeds the limit fold + the flag pass; the
     // flagged panel feeds the run and out-of-bounds folds —
     // materialize each once (round-8 scan gate: was 5 events scans)
-    val base = daily(s, d)
+    val base = dailyByType(s, d)
       .withColumn("mr", round(abs(col("v") - lag(col("v"), 1).over(w)), 4))
       .truncatedCheckpoint()
     val stats = base.groupBy(col("t")).agg(
@@ -77,7 +67,7 @@ object SpcQueries {
   }
 
   val controlChartOracle: String =
-    s"""WITH daily AS ($dailySql),
+    s"""WITH daily AS ($dailyByTypeSql),
       |base AS (SELECT t, day, v,
       |    round(abs(v - lag(v) OVER (PARTITION BY t ORDER BY day)), 4)
       |      AS mr
@@ -170,7 +160,7 @@ object SpcQueries {
   def cusum(s: SparkSession, d: String): DataFrame = {
     val w = Window.partitionBy(col("t")).orderBy(col("day"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val stats = daily(s, d).groupBy(col("t")).agg(
+    val stats = dailyByType(s, d).groupBy(col("t")).agg(
       count(lit(1)).as("n_days"),
       sum(col("v").cast("decimal(18,4)")).as("sv"),
       sum((col("v") * col("v")).cast("decimal(27,8)")).as("svv"))
@@ -182,7 +172,7 @@ object SpcQueries {
     val lim = stats.select(col("t"), col("n_days"), mu.as("mu"),
       round(lit(0.5) * sd, 8).as("k"), round(lit(4.0) * sd, 8).as("h"))
     val zero = lit(BigDecimal(0)).cast("decimal(27,8)")
-    val walk = daily(s, d).join(broadcast(lim), "t")
+    val walk = dailyByType(s, d).join(broadcast(lim), "t")
       .withColumn("tu", round(col("v") - col("mu") - col("k"), 8)
         .cast("decimal(27,8)"))
       .withColumn("td", round(col("mu") - col("k") - col("v"), 8)
@@ -206,7 +196,7 @@ object SpcQueries {
   }
 
   val cusumOracle: String =
-    s"""WITH d AS ($dailySql),
+    s"""WITH d AS ($dailyByTypeSql),
        |m AS (SELECT t, CAST(count(*) AS BIGINT) AS n_days,
        |    sum(CAST(v AS DECIMAL(18,4))) AS sv,
        |    sum(CAST(v*v AS DECIMAL(27,8))) AS svv

@@ -14,7 +14,7 @@ import graft.Tables._
   * partial aggregation behave exactly as the DSL twin's (q_agg_group
   * family); the text route adds zero runtime cost.
   */
-object SqlSurfaceQueries {
+object SqlSurfaceQueries extends QueryFamily {
 
   /** q_sql_pricing — the TPC-H Q1 pricing summary expressed as SQL
     * TEXT through spark.sql over a registered view: grouped DECIMAL

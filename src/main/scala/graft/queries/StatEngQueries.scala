@@ -27,7 +27,7 @@ import graft.Determinism._
   * exp(Σ ln factor) with an explicit zero-factor flag (ln(0) never
   * evaluated); all sums fixed-scale DECIMAL.
   */
-object StatEngQueries {
+object StatEngQueries extends QueryFamily {
 
   /** q_softmax — per event_type, softmax weights over per-user
     * engagement sums with max-subtraction (exp(s−max)/Σ): the

@@ -22,7 +22,7 @@ import graft.Tables._
   * after a fixed 4dp round so the k-row reduction stays
   * order-independent.
   */
-object StatTestQueries {
+object StatTestQueries extends QueryFamily {
 
   private def dsq(c: Column): Column = (c * c).cast("decimal(27,6)")
 

@@ -20,7 +20,7 @@ import graft.Determinism._
   * (order-independent), and only the FINAL scalar math runs in
   * double, again with an identical expression shape on both sides.
   */
-object StatsMlQueries {
+object StatsMlQueries extends QueryFamily {
 
   private val dbl = "double"
   /** Wide-precision money sums: l_extendedprice² sums reach ~7e15 at

@@ -23,7 +23,7 @@ import graft.Tables._
   * evaluate as doubles in one spelled-out expression order, round at
   * 8–10dp, and fold as exact decimal sums; Haldane +0.5 keeps
   * Woolf's ln finite on zero cells; final statistics at 6dp. */
-object StrataTestQueries {
+object StrataTestQueries extends QueryFamily {
 
   /** (region, a, b, c, d, n): a=weekend∧urgent, b=weekend∧other,
     * c=weekday∧urgent, d=weekday∧other. */

@@ -20,7 +20,7 @@ import graft.Tables._
   * Determinism: D2 DECIMAL moments; Spearman from exact integer rank
   * differences.
   */
-object StratifiedQueries {
+object StratifiedQueries extends QueryFamily {
 
   /** q_simpsons — quantity↔price correlation per market segment next
     * to the pooled correlation, flagged where the stratum sign

@@ -19,7 +19,7 @@ import graft.Tables._
   * at 10dp before the house ln; per-term G² contributions round at
   * 8dp into decimal sums; z at 6dp; Delta at 6dp with the source
   * pair as tiebreak. */
-object StylometryQueries {
+object StylometryQueries extends QueryFamily {
 
   private def termSource(s: SparkSession, d: String): DataFrame =
     documents(s, d).select(col("source"),

@@ -12,7 +12,7 @@ import graft.Tables._
   * U = Σ_deaths (x_i − x̄(R_t)), I = Σ_deaths (x²̄(R_t) − x̄(R_t)²),
   * z = U/√I, β̂₁ = U/I (Breslow tie handling: tied deaths share the
   * risk set — exactly what the day-grid formulation produces). */
-object SurvivalCoxQueries {
+object SurvivalCoxQueries extends QueryFamily {
 
   /** q_cox_score — customers as units: follow-up time = days from a
     * fixed epoch to the LAST order day, event = the customer has a

@@ -22,7 +22,7 @@ import graft.Tables._
   * exact decimal cumulative; exp/ln follow the house protocol
   * (applied to already-rounded doubles, result re-rounded); RMST
   * segment products round at 6dp into decimal sums. */
-object SurvivalExtraQueries {
+object SurvivalExtraQueries extends QueryFamily {
 
   /** Life table on the (type, duration) grid: users, exits, at-risk
     * (q_survival's exact construction, StatEngQueries.scala). */

@@ -21,7 +21,7 @@ import graft.Tables._
   * round at 8dp before squaring/summing (D2), sqrt is IEEE-correct,
   * final report at 6dp.
   */
-object TailRiskQueries {
+object TailRiskQueries extends QueryFamily {
 
   /** q_var_cvar — per event type: historical 5% Value-at-Risk
     * (percentile_disc of the value distribution — smallest value with

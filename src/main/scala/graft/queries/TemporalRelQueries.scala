@@ -24,7 +24,7 @@ import graft.Determinism._
   * τ=0.5 temperature) is correctly-rounded IEEE in both engines;
   * intervals are closed-open on exact dates.
   */
-object TemporalRelQueries {
+object TemporalRelQueries extends QueryFamily {
 
   /** q_share_of_parent — hierarchical contribution: revenue per
     * (returnflag, linestatus) leaf, its share of the returnflag

@@ -20,14 +20,7 @@ import graft.Determinism._
   * doc — one linear shuffle, the standard sharding-safe form of a
   * rolling hash.
   */
-object TextAnalysisQueries {
-
-  /** 24-bit integer from the first 6 hex chars of an md5 expression
-    * (shared Spark/DuckDB SQL — see DedupQueries). */
-  private def hexval(m: String): String =
-    (1 to 6).map(j =>
-      s"(instr('0123456789abcdef', substr($m, $j, 1)) - 1) * ${math.pow(16, 6 - j).toLong}"
-    ).mkString("(", " + ", ")")
+object TextAnalysisQueries extends QueryFamily {
 
   /** #63 q_lang_id — n-gram-profile language ID: top-5 tokens per
     * language learned from the corpus, documents scored by profile

@@ -20,7 +20,7 @@ import graft.Tables._
   * Determinism: pure string/integer operations; the one rate is
   * rounded; (doc_id, idx) is a unique total order.
   */
-object TextExtraQueries {
+object TextExtraQueries extends QueryFamily {
 
   /** q_kwic — concordance for the term `join`: every occurrence with
     * its ±2-token context window, 1-based position. The array rides

@@ -25,7 +25,7 @@ import graft.Tables._
   * smallest label via struct-min in both engines; PAA means and z
   * scores round at fixed scales (D2).
   */
-object TextGraphQueries {
+object TextGraphQueries extends QueryFamily {
 
   // ---- RAKE ----
 
@@ -79,34 +79,6 @@ object TextGraphQueries {
 
   // ---- trade graph ----
 
-  /** Undirected simple nation trade edges a<b (q_adamic_adar's
-    * graph). */
-  private def undirected(s: SparkSession, d: String): DataFrame = {
-    import graft.operators.CacheOps.CheckpointSyntax
-    // <=|nations|^2 edge grid referenced by several branches per
-    // query - materialize once (round-8 scan gate)
-    customer(s, d).select(col("c_custkey"), col("c_nationkey").as("src"))
-      .join(orders(s, d).select(col("o_custkey"), col("o_orderkey")),
-        col("o_custkey") === col("c_custkey"))
-      .join(lineitem(s, d).select(col("l_orderkey"), col("l_suppkey")),
-        col("l_orderkey") === col("o_orderkey"))
-      .join(supplier(s, d).select(col("s_suppkey"), col("s_nationkey").as("dst")),
-        col("s_suppkey") === col("l_suppkey"))
-      .filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .distinct()
-      .truncatedCheckpoint()
-  }
-
-  private val undirectedSql: String =
-    """SELECT DISTINCT least(c.c_nationkey, s.s_nationkey) AS a,
-      |    greatest(c.c_nationkey, s.s_nationkey) AS b
-      |  FROM customer c JOIN orders o ON o.o_custkey = c.c_custkey
-      |  JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-      |  JOIN supplier s ON s.s_suppkey = l.l_suppkey
-      |  WHERE c.c_nationkey <> s.s_nationkey""".stripMargin
-
   /** q_label_prop — two synchronous label-propagation rounds on the
     * trade graph, labels initialized to node ids, each node adopting
     * its neighbors' most frequent label (ties → smallest label, via
@@ -114,7 +86,7 @@ object TextGraphQueries {
     * fixed join chain; the per-round shape is the standard
     * distributed LPA step. */
   def labelProp(s: SparkSession, d: String): DataFrame = {
-    val e = undirected(s, d)
+    val e = undirectedTradeEdges(s, d)
     val nbr = e.select(col("a").as("node"), col("b").as("z"))
       .union(e.select(col("b"), col("a")))
     val labels0 = nbr.select(col("node")).distinct()
@@ -129,7 +101,7 @@ object TextGraphQueries {
   }
 
   val labelPropOracle: String =
-    s"""WITH e AS MATERIALIZED ($undirectedSql),
+    s"""WITH e AS MATERIALIZED ($undirectedTradeEdgesSql),
       |nbr AS MATERIALIZED (SELECT a AS node, b AS z FROM e
       |  UNION ALL SELECT b, a FROM e),
       |l0 AS (SELECT DISTINCT node, node AS label FROM nbr),
@@ -147,7 +119,7 @@ object TextGraphQueries {
     * the graded graph saturates, so the flag carries the
     * positive/candidate split). */
   def jaccardLink(s: SparkSession, d: String): DataFrame = {
-    val e = undirected(s, d)
+    val e = undirectedTradeEdges(s, d)
     val nbr = e.select(col("a").as("node"), col("b").as("z"))
       .union(e.select(col("b"), col("a")))
     val deg = nbr.groupBy(col("node")).agg(count(lit(1)).as("deg"))
@@ -168,7 +140,7 @@ object TextGraphQueries {
   }
 
   val jaccardLinkOracle: String =
-    s"""WITH e AS MATERIALIZED ($undirectedSql),
+    s"""WITH e AS MATERIALIZED ($undirectedTradeEdgesSql),
       |nbr AS MATERIALIZED (SELECT a AS node, b AS z FROM e
       |  UNION ALL SELECT b, a FROM e),
       |deg AS (SELECT node, CAST(count(*) AS BIGINT) AS deg

@@ -21,7 +21,7 @@ import graft.Determinism._
   *    graft.functions.MinHashDedup), which bounds candidate pairs per
   *    band-bucket instead of per token.
   */
-object TextQueries {
+object TextQueries extends QueryFamily {
 
   /** #50 q_dedup_exact — content-hash dedup keeping min doc_id
     * (deterministic, unlike dropDuplicates row-choice — D4). */

@@ -24,7 +24,7 @@ import graft.Tables._
   * decimal-exact prefix sums; objectives round at 8dp BEFORE the
   * descending sort so both engines order identically, with the
   * threshold value as the unique tiebreak. */
-object ThresholdQueries {
+object ThresholdQueries extends QueryFamily {
 
   /** Per-candidate-threshold confusion counts: predict positive when
     * score ≥ t, for every distinct score t. */

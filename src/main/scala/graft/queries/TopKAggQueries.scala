@@ -23,7 +23,7 @@ import graft.functions.expressions.TopKStruct
   * are unique; the explode restores rows for the driver's
   * column-sorted hash compare.
   */
-object TopKAggQueries {
+object TopKAggQueries extends QueryFamily {
 
   /** q_topk_agg — top-3 orders per priority by (totalprice DESC,
     * orderkey DESC) via the heap aggregate, exploded back to rows. */

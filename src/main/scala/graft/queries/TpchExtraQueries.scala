@@ -25,7 +25,7 @@ import graft.Tables._
   * promo-share divisions are double-on-decimal-sums: both operands
   * hash-exact, so the IEEE quotient is bit-identical cross-engine.
   */
-object TpchExtraQueries {
+object TpchExtraQueries extends QueryFamily {
 
   private def views(s: SparkSession, d: String): Unit = {
     customer(s, d).createOrReplaceTempView("v_customer")

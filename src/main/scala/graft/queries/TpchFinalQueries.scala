@@ -41,7 +41,7 @@ import graft.Tables._
   * double avg would be reduction-order-dependent); revenue sums are
   * DECIMAL partials cast double at output; every result carries a
   * total ORDER BY on a unique key set. */
-object TpchFinalQueries {
+object TpchFinalQueries extends QueryFamily {
 
   private def views(s: SparkSession, d: String): Unit = {
     customer(s, d).createOrReplaceTempView("v_customer")

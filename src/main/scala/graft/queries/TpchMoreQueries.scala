@@ -21,7 +21,7 @@ import graft.Tables._
   * key-parallel with map-side combine and feeds
   * TakeOrderedAndProject. DECIMAL partials per D1.
   */
-object TpchMoreQueries {
+object TpchMoreQueries extends QueryFamily {
 
   private def views(s: SparkSession, d: String): Unit = {
     customer(s, d).createOrReplaceTempView("v_customer")

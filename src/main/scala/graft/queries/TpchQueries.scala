@@ -24,7 +24,7 @@ import graft.Tables._
   * cross-engine; same SQL text runs on both engines modulo view
   * names.
   */
-object TpchQueries {
+object TpchQueries extends QueryFamily {
 
   /** q_tpch_q3 — shipping-priority revenue: top-10 unshipped-revenue
     * orders for one market segment (TPC-H Q3 minus the o_shippriority

@@ -14,7 +14,7 @@ import graft.Tables._
   * keyed DECIMAL aggregate; grouping_id is the standard Expand-based
   * cube, partial-aggregated map-side.
   */
-object TwapGroupingQueries {
+object TwapGroupingQueries extends QueryFamily {
 
   /** q_twap — time-weighted average of `value` per user: each
     * observation weighted by the microseconds it remained current

@@ -21,7 +21,7 @@ import graft.Tables._
   * Determinism (D1–D5): cell moments exact decimals; means rounded
   * at 8dp before squaring; SS terms rounded at 6dp into decimal
   * sums; F at 6dp. */
-object TwoWayAnovaQueries {
+object TwoWayAnovaQueries extends QueryFamily {
 
   /** q_anova2 — the SS decomposition and F panel. */
   def anova2(s: SparkSession, d: String): DataFrame = {

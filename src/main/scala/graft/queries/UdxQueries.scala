@@ -18,7 +18,7 @@ import graft.Determinism._
   * buffer per group per partition, not rows — the same contract as
   * built-in aggregates at 100 TB.
   */
-object UdxQueries {
+object UdxQueries extends QueryFamily {
 
   /** #57's UDF: lowercase + collapse runs of whitespace + trim —
     * the canonical text-normalization key for dedup pipelines. */

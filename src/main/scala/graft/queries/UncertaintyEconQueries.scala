@@ -22,7 +22,7 @@ import graft.operators.CacheOps.CheckpointSyntax
   * an exact double literal; z = 1.959964; per-row products at 6dp
   * into DECIMAL sums (D1/D2).
   */
-object UncertaintyEconQueries {
+object UncertaintyEconQueries extends QueryFamily {
 
   /** q_wilson_ci — top-10 brands by the Wilson 95% LOWER bound of
     * their lineitem return rate (l_returnflag = 'R'):

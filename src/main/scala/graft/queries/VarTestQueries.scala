@@ -20,7 +20,7 @@ import graft.Tables._
   * ln() takes 8dp-rounded variance arguments (q_perplexity
   * convention); outputs round at 4–6dp (D2).
   */
-object VarTestQueries {
+object VarTestQueries extends QueryFamily {
 
   /** q_levene — Brown–Forsythe test across event types: z = |value −
     * group median|, then the one-way ANOVA F statistic on z:

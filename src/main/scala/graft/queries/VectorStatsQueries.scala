@@ -23,7 +23,7 @@ import graft.Tables._
   * DECIMAL before every sum (q_sim_pairs convention); centroids
   * pinned at DECIMAL(18,8); cumulative weights are exact integers.
   */
-object VectorStatsQueries {
+object VectorStatsQueries extends QueryFamily {
 
   /** q_emb_inertia — k-means-style quality per label: centroid at
     * DECIMAL(18,8), per-vector squared distance to its label

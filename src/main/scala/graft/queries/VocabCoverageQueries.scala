@@ -19,7 +19,7 @@ import graft.Tables._
   *
   * Determinism: counts exact; ln on 8dp-rounded probabilities;
   * per-cell products at 8dp into decimal sums; final 6dp. */
-object VocabCoverageQueries {
+object VocabCoverageQueries extends QueryFamily {
 
   /** q_oov_rate — per source: token occurrences, the share falling
     * outside the corpus-wide top-1000 vocabulary (count ties broken

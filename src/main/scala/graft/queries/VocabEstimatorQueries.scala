@@ -21,7 +21,7 @@ import graft.Tables._
   *
   * Determinism (D1–D5): all N_r are exact BIGINT; ratios spell one
   * shared expression order with 6–8dp output rounds. */
-object VocabEstimatorQueries {
+object VocabEstimatorQueries extends QueryFamily {
 
   /** freq-of-freq over word BIGRAMS: N_r = number of distinct
     * bigram types seen exactly r times. Bigrams, not unigrams: the

@@ -18,7 +18,7 @@ import graft.Tables._
   * containments reported.
   *
   * Determinism: all set sizes exact longs; three divisions at 6dp. */
-object VocabOverlapQueries {
+object VocabOverlapQueries extends QueryFamily {
 
   /** q_containment — per source pair: vocabulary sizes, intersection,
     * containment both ways, Dice, and overlap coefficient. */

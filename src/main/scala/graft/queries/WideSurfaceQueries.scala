@@ -12,7 +12,7 @@ import graft.Determinism._
   * percent-of-total analytics. All declarative single-shuffle
   * shapes; scale notes inline where a choice matters.
   */
-object WideSurfaceQueries {
+object WideSurfaceQueries extends QueryFamily {
 
   /** q_regex_extract_all — extract EVERY match (not just the first):
     * all uppercase words of p_type, re-joined to a scalar (array

@@ -21,7 +21,7 @@ import graft.Determinism._
   * Determinism: every window ORDER BY includes a unique tie-break key
   * (D1); window sums are decimal (D2); rank ratios rounded (D2).
   */
-object WindowQueries {
+object WindowQueries extends QueryFamily {
 
   /** #25 q_win_rank — row_number/rank/dense_rank per customer over
     * orders by price; unique (price, orderkey) order key. */

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.Determinism.hexval
 
 /** Round-4 widening #99: MOSS-style winnowing fingerprints — the
   * plagiarism/clone-detection selection scheme (Schleimer, Wilkerson,
@@ -26,13 +27,7 @@ import graft.Tables._
   * instr/substr arithmetic. All counts exact; the similarity ratio
   * divides exact integers, rounded at 6dp with the doc pair as
   * tiebreak. */
-object WinnowQueries {
-
-  /** First 6 hex chars of md5 → 24-bit integer (dialect-portable). */
-  private def hexval(m: String): String =
-    (1 to 6).map(j =>
-      s"(instr('0123456789abcdef', substr($m, $j, 1)) - 1) * ${math.pow(16, 6 - j).toLong}"
-    ).mkString("(", " + ", ")")
+object WinnowQueries extends QueryFamily {
 
   private val sparkTok =
     """SELECT doc_id, pos, token FROM documents

@@ -224,6 +224,18 @@ object CloudTrailPipeline {
       ()
     }
 
+  /** Config-driven entry point: sets the RocksDB state store
+    * ([[PipelineConfig.RocksDbProvider]]) on the caller's session, then
+    * runs the pipeline there, so listeners on `spark.streams` see its
+    * progress. */
+  def run(spark: SparkSession, config: PipelineConfig,
+      sink: RecordSink): StreamingQuery = {
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+      PipelineConfig.RocksDbProvider)
+    run(spark, config.inPath, config.checkpoint, sink,
+      config.maxFilesPerTrigger)
+  }
+
   /** Full pipeline: gzip JSON landing dir → decode → dedup →
     * batched/retrying sink via foreachBatch, checkpointed.
     *
@@ -235,18 +247,6 @@ object CloudTrailPipeline {
     * the replay landing in the same partition layout; the keyed
     * idempotent sink contract is what carries it, StreamingSpec pins
     * a crash-replay across a partitioning change). */
-  /** Config-driven entry point: the ONLY path that applies the
-    * session-level knobs a [[PipelineConfig]] owns (the state-store
-    * provider — `GRAFT_CT_STATE_STORE=rocksdb` is the 100 TB posture;
-    * round-11 review: `fromEnv` parsed the dial but nothing ever
-    * called `applyTo`, so the setting silently did nothing). */
-  def run(spark: SparkSession, config: PipelineConfig,
-      sink: RecordSink): StreamingQuery = {
-    config.applyTo(spark)
-    run(spark, config.inPath, config.checkpoint, sink,
-      config.maxFilesPerTrigger)
-  }
-
   def run(spark: SparkSession, inPath: String, checkpoint: String,
       sink: RecordSink, maxFilesPerTrigger: Int = 100,
       sinkPartitions: Option[Int] = None): StreamingQuery = {

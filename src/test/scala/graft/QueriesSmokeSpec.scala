@@ -11,6 +11,23 @@ class QueriesSmokeSpec extends GraftSpecBase {
     val q = SparkEntry.queries.keySet
     val o = SparkEntry.oracleSql.keySet
     assert(o.subsetOf(q), s"oracle without query: ${o -- q}")
+    // per family: every query has its oracle, except the capability
+    // family's, which are exactly the queries without one
+    val capability = graft.queries.CapabilityQueries
+    SparkEntry.families.filter(_ ne capability).foreach { f =>
+      assert(f.oracle.keySet === f.queries.keySet, f.getClass.getName)
+    }
+    assert(capability.oracle.isEmpty)
+    assert(capability.queries.keySet === q -- o)
+    assert((q -- o).size === 9)
+  }
+
+  test("a query name declared by two families is an error naming both") {
+    import QueriesSmokeSpec.{FamilyA, FamilyB}
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.merge(Seq(FamilyA, FamilyB)))
+    assert(e.getMessage.contains("query q_twin is declared by FamilyA and FamilyB"),
+      e.getMessage)
   }
 
   SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
@@ -24,5 +41,23 @@ class QueriesSmokeSpec extends GraftSpecBase {
 
   test("entry flagship returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
+  }
+}
+
+object QueriesSmokeSpec {
+  import org.apache.spark.sql.{DataFrame, SparkSession}
+
+  private def one(s: SparkSession, d: String): DataFrame = s.range(1).toDF()
+
+  object FamilyA extends graft.queries.QueryFamily {
+    val queries: Map[String, (SparkSession, String) => DataFrame] =
+      Map("q_a" -> one, "q_twin" -> one)
+    val oracle: Map[String, String] = Map("q_a" -> "SELECT 0", "q_twin" -> "SELECT 0")
+  }
+
+  object FamilyB extends graft.queries.QueryFamily {
+    val queries: Map[String, (SparkSession, String) => DataFrame] =
+      Map("q_twin" -> one)
+    val oracle: Map[String, String] = Map("q_twin" -> "SELECT 0")
   }
 }
