@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, ExpiredTimerInfo, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, StreamingQuery, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, StreamingQuery, TTLConfig, TimeMode, Trigger, TimerValues, ValueState}
 import org.apache.spark.sql.types._
 
 /** Reference-equivalent streaming pipeline (SURVEY.md §2-A, §3.4).
@@ -38,7 +38,12 @@ import org.apache.spark.sql.types._
   * Scale: parallelism = files × partitions (the reference's "many
   * Lambda instances" becomes executor tasks); state (dedup,
   * sessionization) is keyed + watermarked so state stores stay
-  * bounded; `maxFilesPerTrigger` is the admission control knob.
+  * bounded; `maxFilesPerTrigger` is the admission control knob. [[run]]
+  * sizes its own stream: one state partition per core, RocksDB state
+  * committed as changelog files, and a trigger every
+  * [[TriggerInterval]], so the fixed cost of a micro-batch (one state
+  * store commit per partition) is paid per core and at most once a
+  * second, however many files land.
   */
 object CloudTrailPipeline {
 
@@ -224,20 +229,42 @@ object CloudTrailPipeline {
       ()
     }
 
-  /** Config-driven entry point: sets the RocksDB state store
-    * ([[PipelineConfig.RocksDbProvider]]) on the caller's session, then
-    * runs the pipeline there, so listeners on `spark.streams` see its
-    * progress. */
+  /** The pipeline's trigger. CloudTrail publishes a log file about
+    * every 5 minutes per account and region (`[aws-public]`), so one
+    * second adds at most a second to records already minutes old, and
+    * a trigger's fixed cost is paid once a second instead of once per
+    * few landed files. */
+  val TriggerInterval: Trigger = Trigger.ProcessingTime("1 second")
+
+  /** The confs [[run]] sets for its own query: one state partition per
+    * core, and the RocksDB state store ([[PipelineConfig.RocksDbProvider]])
+    * committing one changelog file per partition instead of uploading a
+    * snapshot. A checkpoint that already exists keeps the partition
+    * count and provider stored in its offset log. */
+  private def queryConfs(spark: SparkSession): Seq[(String, String)] = Seq(
+    "spark.sql.shuffle.partitions" ->
+      spark.sparkContext.defaultParallelism.toString,
+    "spark.sql.streaming.stateStore.providerClass" ->
+      PipelineConfig.RocksDbProvider,
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
+      "true")
+
+  /** [[run]] over a [[PipelineConfig]]. */
   def run(spark: SparkSession, config: PipelineConfig,
-      sink: RecordSink): StreamingQuery = {
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      PipelineConfig.RocksDbProvider)
+      sink: RecordSink): StreamingQuery =
     run(spark, config.inPath, config.checkpoint, sink,
       config.maxFilesPerTrigger)
-  }
 
   /** Full pipeline: gzip JSON landing dir → decode → dedup →
-    * batched/retrying sink via foreachBatch, checkpointed.
+    * batched/retrying sink via foreachBatch, checkpointed, triggered
+    * every [[TriggerInterval]].
+    *
+    * The query runs on the caller's session, so listeners on
+    * `spark.streams` see its progress, but with [[queryConfs]]: `run`
+    * sets them, starts the query (which clones the session, confs
+    * included) and restores the caller's values, unsetting those the
+    * caller had not set. The caller's later queries keep their own
+    * shuffle width and state store.
     *
     * `sinkPartitions`: optional sink-side `repartition(n,
     * partitionKey)` — the shard-count dial a deployment turns when
@@ -259,11 +286,21 @@ object CloudTrailPipeline {
       case Some(n) => decoded.repartition(n, col("partitionKey"))
       case None => decoded
     }
-    entries.writeStream
+    val writer = entries.writeStream
       .outputMode(OutputMode.Append)
+      .trigger(TriggerInterval)
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) => deliver(batch, sink) }
-      .start()
+    val confs = queryConfs(spark)
+    val callers = spark.conf.getAll
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try writer.start()
+    finally confs.foreach { case (k, _) =>
+      callers.get(k) match {
+        case Some(v) => spark.conf.set(k, v)
+        case None => spark.conf.unset(k)
+      }
+    }
   }
 
   // -------------------------------------------------------------

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.streaming.{StateOperatorProgress, StreamingQueryListener}
 import org.apache.spark.sql.streaming.StreamingQueryListener._
 
 /** Typed pipeline configuration (reference operator A12: the Go
@@ -17,9 +17,10 @@ case class PipelineConfig(
 
 object PipelineConfig {
 
-  /** The state-store provider [[CloudTrailPipeline.run]] sets for the
-    * stateful operators: state larger than the executor heap spills to
-    * local disk instead of failing the executor. */
+  /** The state-store provider [[CloudTrailPipeline.run]] sets for its
+    * own query (with changelog checkpointing, and not on the caller's
+    * session): state larger than the executor heap spills to local disk
+    * instead of failing the executor. */
   val RocksDbProvider =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
@@ -37,7 +38,9 @@ object PipelineConfig {
   * JSON summaries of files processed / record counts / errors —
   * SURVEY.md §2-A). Emits one JSON line per micro-batch with the
   * fields an operator dashboards at scale: rows in, processing rate,
-  * batch duration, state rows. */
+  * batch duration and, over the stateful operators, state rows, state
+  * partitions, state commit time, duplicates dropped and rows dropped
+  * as late by the watermark. */
 class JsonProgressListener(log: String => Unit = Console.err.println)
     extends StreamingQueryListener {
 
@@ -46,11 +49,18 @@ class JsonProgressListener(log: String => Unit = Console.err.println)
 
   override def onQueryProgress(e: QueryProgressEvent): Unit = {
     val p = e.progress
-    val stateRows = p.stateOperators.map(_.numRowsTotal).sum
+    val ops = p.stateOperators.toSeq
+    def sum(f: StateOperatorProgress => Long) = ops.map(f).sum
+    val dupDropped = sum(o => Option(o.customMetrics.get("numDroppedDuplicateRows"))
+      .fold(0L)(_.longValue))
     log(s"""{"type":"stream.progress","id":"${p.id}","batch":${p.batchId},""" +
       s""""rows":${p.numInputRows},"rowsPerSec":${safe(p.processedRowsPerSecond)},""" +
       s""""durationMs":${p.durationMs.getOrDefault("triggerExecution", -1L)},""" +
-      s""""stateRows":$stateRows}""")
+      s""""stateRows":${sum(_.numRowsTotal)},""" +
+      s""""statePartitions":${(0L +: ops.map(_.numShufflePartitions)).max},""" +
+      s""""stateCommitMs":${sum(_.commitTimeMs)},""" +
+      s""""dupDropped":$dupDropped,""" +
+      s""""lateDropped":${sum(_.numRowsDroppedByWatermark)}}""")
   }
 
   override def onQueryTerminated(e: QueryTerminatedEvent): Unit =

@@ -3,7 +3,7 @@ package graft
 import java.sql.Timestamp
 import org.apache.spark.sql.catalyst.expressions.JsonToStructs
 import org.apache.spark.sql.execution.FilterExec
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import graft.streaming.CloudTrailPipeline
@@ -260,10 +260,15 @@ class StreamingSpec extends GraftSpecBase {
     val l = graft.streaming.JsonProgressListener.attach(spark, s => { lines.add(s); () })
     val mem = MemoryStream[(String, Timestamp)](spark)
     val df = mem.toDF().toDF("eventID", "eventTime")
-    val q = df.writeStream.format("memory").queryName("prog_out")
+    val q = CloudTrailPipeline.dedup(df, "10 minutes")
+      .writeStream.format("memory").queryName("prog_out")
       .outputMode(OutputMode.Append).start()
     try {
-      mem.addData(("x", Timestamp.valueOf("2024-01-01 00:00:00")))
+      // a redelivered "x", then "y" behind the watermark (00:30 - 10 min)
+      val t = Timestamp.valueOf("2024-01-01 00:30:00")
+      mem.addData(("x", t), ("x", t))
+      q.processAllAvailable()
+      mem.addData(("y", Timestamp.valueOf("2024-01-01 00:00:00")))
       q.processAllAvailable()
     } finally {
       q.stop()
@@ -277,9 +282,34 @@ class StreamingSpec extends GraftSpecBase {
     assert(all.exists(_.contains("\"type\":\"stream.start\"")), all.mkString("\n"))
     val prog = all.filter(_.contains("stream.progress"))
     assert(prog.exists(_.contains("\"rows\":1")), all.mkString("\n"))
+    // the dedup's state fields: 8 state partitions (the suite's shuffle
+    // width), one duplicate and one late row dropped, a commit time
+    assert(prog.forall(_.contains("\"statePartitions\":8")), all.mkString("\n"))
+    assert(prog.exists(_.contains("\"dupDropped\":1")), all.mkString("\n"))
+    assert(prog.exists(_.contains("\"lateDropped\":1")), all.mkString("\n"))
+    assert(prog.forall(_.matches(".*\"stateCommitMs\":\\d+.*")), all.mkString("\n"))
   }
 
-  test("config-driven run APPLIES the state-store dial and processes records (round-11 review: applyTo was dead)") {
+  private val ShufflePartitions = "spark.sql.shuffle.partitions"
+  private val StateStoreProvider = "spark.sql.streaming.stateStore.providerClass"
+  private val ChangelogCheckpointing =
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+
+  /** Runs `body`, then puts back the session's explicit settings of
+    * `keys` (unsetting those that had none). */
+  private def keepingConfs[T](keys: String*)(body: => T): T = {
+    val saved = keys.map(k => k -> spark.conf.getAll.get(k))
+    try body finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** The state operators of the query's last trigger that read rows. */
+  private def lastStateOps(q: org.apache.spark.sql.streaming.StreamingQuery) =
+    q.recentProgress.filter(_.numInputRows > 0).last.stateOperators.toSeq
+
+  test("run gives its own query state partitions = cores, RocksDB changelog commits and the 1 s trigger, and leaves the caller's session untouched") {
     val dir = java.nio.file.Files.createTempDirectory("ct_incfg").toFile
     val chk = java.nio.file.Files.createTempDirectory("ct_chkcfg").toFile
     val os = new java.util.zip.GZIPOutputStream(
@@ -288,27 +318,67 @@ class StreamingSpec extends GraftSpecBase {
     val got = java.util.Collections.synchronizedList(
       new java.util.ArrayList[String]())
     TestSink.records = got
-    val prev = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    try {
+    val keys = Seq(ShufflePartitions, StateStoreProvider, ChangelogCheckpointing)
+    keepingConfs(keys: _*) {
+      spark.conf.set(ShufflePartitions, "5")
+      val callers = keys.map(k => k -> spark.conf.getAll.get(k))
       val cfg = graft.streaming.PipelineConfig.fromEnv(Map(
         "GRAFT_CT_IN_PATH" -> dir.getAbsolutePath,
         "GRAFT_CT_CHECKPOINT" -> chk.getAbsolutePath))
       val q = CloudTrailPipeline.run(spark, cfg, TestSink)
       try q.processAllAvailable() finally q.stop()
-      // the config path sets RocksDB on the caller's session AND the
-      // stateful pipeline runs on that provider end-to-end
-      assert(spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass")
-        === graft.streaming.PipelineConfig.RocksDbProvider)
-      assert(got.toArray(Array.empty[String]).sorted.toSeq
-        === Seq("41", "42"))
-    } finally prev match {
-      case Some(p) =>
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case None =>
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+      assert(keys.map(k => k -> spark.conf.getAll.get(k)) === callers)
+      assert(q.asInstanceOf[StreamingQueryWrapper].streamingQuery.trigger
+        === TriggerInterval)
+      val op = lastStateOps(q).head
+      assert(op.numShufflePartitions === spark.sparkContext.defaultParallelism)
+      import scala.jdk.CollectionConverters._
+      assert(op.customMetrics.keySet.asScala.exists(_.startsWith("rocksdb")),
+        op.customMetrics)
+      // changelog checkpointing: commits write `<version>.changelog`
+      val part0 = new java.io.File(chk, "state/0/0")
+      assert(part0.list().exists(_.endsWith(".changelog")), part0.list().toSeq)
+      assert(got.toArray(Array.empty[String]).sorted.toSeq === Seq("41", "42"))
     }
+  }
+
+  test("an old 32-partition checkpoint restarts through run unchanged: a redelivered eventID is dropped, every other record arrives once") {
+    val dir = java.nio.file.Files.createTempDirectory("ct_in_old").toFile
+    val chk = java.nio.file.Files.createTempDirectory("ct_chk_old").toFile
+    def writeGz(name: String, content: String): Unit = {
+      val os = new java.util.zip.GZIPOutputStream(
+        new java.io.FileOutputStream(new java.io.File(dir, name)))
+      os.write(content.getBytes("UTF-8")); os.close()
+    }
+    val got = java.util.Collections.synchronizedList(
+      new java.util.ArrayList[String]())
+    TestSink.records = got
+    writeGz("f1.json.gz", envelope("1", "2", "3"))
+    // the checkpoint as a run without the query's own confs wrote it:
+    // 32 state partitions, RocksDB snapshots, the default trigger
+    val q1 = keepingConfs(ShufflePartitions, StateStoreProvider) {
+      spark.conf.set(ShufflePartitions, "32")
+      spark.conf.set(StateStoreProvider,
+        graft.streaming.PipelineConfig.RocksDbProvider)
+      toSinkEntries(dedup(decodeEnvelopes(
+          spark.readStream.format("text").load(dir.getAbsolutePath))))
+        .writeStream
+        .option("checkpointLocation", chk.getAbsolutePath)
+        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+          deliver(batch, TestSink) }
+        .start()
+    }
+    try q1.processAllAvailable() finally q1.stop()
+    assert(lastStateOps(q1).head.numShufflePartitions === 32)
+    assert(got.toArray(Array.empty[String]).sorted.toSeq === Seq("1", "2", "3"))
+    writeGz("f2.json.gz", envelope("3", "4"))
+    val q2 = CloudTrailPipeline.run(spark, dir.getAbsolutePath,
+      chk.getAbsolutePath, TestSink)
+    try q2.processAllAvailable() finally q2.stop()
+    // the offset log's partition count wins over defaultParallelism
+    assert(lastStateOps(q2).head.numShufflePartitions === 32)
+    assert(got.toArray(Array.empty[String]).sorted.toSeq ===
+      Seq("1", "2", "3", "4"))
   }
 
   test("checkpoint restart does not redeliver committed files (exactly-once line)") {
