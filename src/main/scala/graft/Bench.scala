@@ -1,6 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.util.control.NonFatal
+import graft.operators.CacheOps
 
 /** Benchmark main (driver contract): times every declared query at
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line.
@@ -12,6 +13,10 @@ import scala.util.control.NonFatal
   *    every engine in this comparison scans the same ~100 MB, so the
   *    bench measures operator compute, not repeated cold reads (the
   *    memoized Tables plans make one persist serve all queries);
+  *  - an untimed warm pass (codegen/JIT) runs every query first; its
+  *    per-query seconds set the order the timed passes start them in
+  *    (heaviest first, [[scheduleOrder]]), so the schedule follows the
+  *    host and scale factor being measured;
   *  - `value` = MIN of N identical CLEAN timed passes (default 2, env
   *    SPARK_GRAFT_TIMED_PASSES; all raw pass totals in `passes`):
   *    deterministic work ⇒ pass-to-pass deltas are scheduler noise.
@@ -27,6 +32,9 @@ import scala.util.control.NonFatal
   *    env-overridable; the cluster-realism configuration (AQE on,
   *    shuffle=64) is re-measured per round in BASELINE.md because at
   *    100 TB both dials go back up.
+  *
+  * Both JSON lines echo the session shape in `posture` (cores,
+  * shuffle, AQE, scan split, layout, buckets, streams, codegen cache).
   */
 object Bench {
 
@@ -209,86 +217,14 @@ object Bench {
     }
   }
 
-  /** LPT scheduling: start the known-heavy queries first so the
-    * concurrent streams drain into a short tail (a slow query picked
-    * last would extend the wall-clock by its full duration). The
-    * list is the measured top tier at sf0.1; unlisted queries keep
-    * alphabetical order after it. Object-level so the hygiene pin in
-    * WideSurfaceSpec can check every entry against a live query name
-    * (a rename would silently degrade the schedule otherwise). */
-  private[graft] val heavyFirstList: Seq[String] = Seq(
-    // round-12 refresh: the measured top tier after this round's
-    // prefix-machinery rewrite (two same-window runs averaged) —
-    // the round-11 fit/causal widenings and the survivors of the
-    // old top tier, front-loaded so the 14 streams drain into a
-    // short tail
-    "q_als_step", "q_bigram_lm", "q_bland_altman", "q_bh_dunn",
-    "q_ridge_path", "q_rbo", "q_quantile_reg", "q_ch_db", "q_rake",
-    "q_psm_att", "q_rank_stability", "q_esd_outliers", "q_rdd_effect",
-    "q_entropy_rate",
-    "q_lsh_exact", "q_kmeans_step",
-    "q_tfidf_cosine", "q_minhash_est", "q_rfm",
-    "q_elasticity", "q_boilerplate", "q_cohort_ltv",
-    "q_kmeans_assign", "q_math_funcs", "q_cte_recursive",
-    "q_dedup_cluster", "q_contamination", "q_dedup_ngram",
-    "q_dedup_minhash", "q_text_jaccard", "q_join_skew", "q_covar",
-    "q_text_tfidf", "q_corr", "q_copurchase", "q_dedup_editdist",
-    "q_shortest_path", "q_agg_cube", "q_approx_kmv", "q_unpivot",
-    "q_lang_id", "q_pagerank", "q_triangles", "q_vocab_growth",
-    "q_try_arith", "q_dedup_simhash", "q_regr", "q_rolling_median",
-    "q_ewma", "q_interpolate", "q_linreg2", "q_theil_sen",
-    "q_dau_wau", "q_emb_quantize",
-    // round-4 360-entry refresh: the alphabetical tail (p–s) had
-    // clustered the newer heavy aggregates into one contended wave;
-    // front-loading them spreads the load (measured clean run-3)
-    "q_partial_corr", "q_regr_metrics", "q_ship_latency", "q_sax",
-    "q_reorder_rate", "q_simpsons", "q_seasonal_strength",
-    "q_seasonal_decomp", "q_seq_trigram", "q_shapley", "q_scd2",
-    "q_sample_hash", "q_weighted_median", "q_silhouette",
-    "q_session_stats", "q_seq_adjacent", "q_backlog",
-    "q_weighted_quantile", "q_share_of_parent", "q_lorenz",
-    "q_runs_test", "q_jaccard_link", "q_cronbach",
-    "q_referential_check", "q_zscore_roll", "q_vocab_bandpass",
-    "q_ipf_rake", "q_graph_degree", "q_gains",
-    // round-4 427-entry refresh: the new iterative/corpus-heavy
-    // families front-load too (token self-joins, power iterations,
-    // BFS closure, greedy MMR rounds, TPC-H 5-way trees)
-    "q_containment", "q_yule_k", "q_heaps_fit", "q_hurst",
-    "q_mmr_select", "q_tpch_q9", "q_tpch_q8", "q_tpch_q7",
-    "q_closeness", "q_eigenvector", "q_jonckheere", "q_logrank",
-    "q_t_closeness", "q_growth_acct", "q_markov_stationary",
-    "q_cooks_d", "q_isotonic", "q_modularity", "q_assortativity",
-    // round-4 490-entry refresh: the session's corpus/token-heavy
-    // additions (winnowing gram windows, FS blocked self-join,
-    // Q21's triple lineitem tree, retrieval LM token explodes,
-    // MACD's 52 lag terms, the threshold/Dunn value contractions)
-    "q_tpch_q21", "q_fs_linkage", "q_winnow_sim", "q_winnow",
-    "q_tpch_q17", "q_tpch_q13", "q_query_likelihood",
-    "q_jelinek_mercer", "q_term_dispersion", "q_macd", "q_dunn",
-    "q_learning_curve", "q_good_turing", "q_chao1", "q_kde_epan",
-    "q_best_f1", "q_youden_j", "q_pr_auc", "q_hampel",
-    // 513-entry refresh: LOF's blocked vector pairs, the winnow
-    // fingerprint pipeline, the iterative fits (Huber IRLS, GMM EM,
-    // Weiszfeld), the 5-scan Box-Cox grid, and the multi-join CCF
-    "q_lof", "q_huber", "q_boxcox", "q_gmm_em", "q_geomedian",
-    "q_cross_corr", "q_walk_forward", "q_adstock", "q_mi_ranking",
-    "q_keyness", "q_burrows_delta", "q_segmented", "q_anova2",
-    "q_cca", "q_source_emb_sim", "q_periodogram", "q_gof_poisson",
-    "q_negbin_fit", "q_zip_fit",
-    // round-7 refresh: the round-6 OrderStats/prefix rewrites moved
-    // these into the solo top tier (scale-safe shapes pay a fixed
-    // multi-stage cost at toy scale), but they still sat in
-    // alphabetical-tail order
-    "q_mad", "q_rank_corr", "q_win_analytic", "q_mood_median",
-    "q_percentile", "q_percentile_disc", "q_levene", "q_winsorize",
-    "q_hist_eqfreq", "q_outlier_iqr", "q_gini",
-    // round-9 refresh: the remaining >4.5 s in-concurrency entries
-    // that still sat in alphabetical order (q_feature_corr's moment
-    // row, the ABC Pareto windows, transfer entropy's lag joins)
-    "q_feature_corr", "q_abc_class", "q_transfer_entropy",
-    // round-10: the new capped-cosine entry joins its family's tier
-    // (postings self-join + norms — q_tfidf_cosine's capped twin)
-    "q_dfcap_cosine")
+  /** LPT schedule of the timed passes: the queries in descending order
+    * of their warm-pass seconds, so the concurrent streams drain into a
+    * short tail (a slow query picked last would extend the wall-clock
+    * by its full duration). Failed queries (the −1 sentinel) go last;
+    * ties break by name. The order comes from this run's own warm pass,
+    * so it follows the host, scale factor and code being measured. */
+  private[graft] def scheduleOrder(warm: Iterable[(String, Double)]): Seq[String] =
+    warm.toSeq.sortBy { case (name, t) => (t < 0, -t, name) }.map(_._1)
 
   /** Concurrent query streams of the timed suite. 14 measured fastest
     * on the 32-core container (8→20.6 s, 14→18.8 s, 20→21.6 s,
@@ -324,15 +260,62 @@ object Bench {
       layout = Some("bench"),
       buckets = cores => math.max(1, cores / streams))
 
-  /** One-time warm read and cache of the shared inputs (not timed). */
-  def persistTables(spark: SparkSession, queryDir: String): Unit =
-    Tables.names.foreach { n =>
+  /** One-time warm read and cache of the shared inputs (not timed);
+    * returns the frames it persisted, for a caller that drops them. */
+  def persistTables(spark: SparkSession, queryDir: String): Seq[DataFrame] =
+    Tables.names.flatMap { n =>
       try {
         val df = if (n == "events") Tables.events(spark, queryDir)
                  else Tables.table(spark, queryDir, n)
         df.persist().count()
-      } catch { case NonFatal(_) => }
+        Some(df)
+      } catch { case NonFatal(_) => None }
     }
+
+  /** One timed query: its seconds, or the −1.0 sentinel when it fails.
+    *
+    * The FULL result is materialized (what Verify grades): a noop-sink
+    * write executes every projection and the final sort, whereas
+    * .count() would let Catalyst prune all columns and drop sorts,
+    * under-measuring projection-heavy queries. [[CacheOps.scoped]]
+    * releases the query's checkpoint blocks as soon as it completes
+    * (round-9: storage stays at the base-table floor through a pass
+    * instead of accumulating ~600 dead frames).
+    *
+    * Any Throwable counts as a failure — a planning StackOverflowError
+    * must mark the query failed, not kill the stream thread running
+    * it. A failure records −1.0, NOT its elapsed-at-crash time
+    * (round-11 review): qsum is the code-vs-window ground truth, and
+    * partial wall-clock from a crash point that moves between versions
+    * would corrupt exactly the comparison it exists to settle (a
+    * truncated solo time also read as misleadingly FAST, round 6). */
+  def timeQuery(spark: SparkSession, queryDir: String, name: String,
+      fn: (SparkSession, String) => DataFrame, tag: String = "bench"): Double = {
+    val t0 = System.nanoTime()
+    try {
+      CacheOps.scoped {
+        fn(spark, queryDir).write.format("noop").mode("overwrite").save()
+      }
+      (System.nanoTime() - t0) / 1e9
+    } catch {
+      case ex: Throwable =>
+        System.err.println(s"[$tag] $name FAILED: ${ex.getMessage}")
+        -1.0
+    }
+  }
+
+  /** The posture echo both JSON lines carry: the session shape that
+    * produced the numbers, so an artifact names the host shape it
+    * measured (the schedule and the defaults depend on it). */
+  private[graft] def postureJson(gs: GraftSession, streams: Int): String = {
+    val p = gs.posture
+    def str(o: Option[String]) = o.map(Json.quote).getOrElse("null")
+    s"""{"cores":${p.cores},"shuffle":${p.shuffle},"aqe":${
+      p.aqe.map(_.toString).getOrElse("null")},"maxPartitionBytes":${
+      str(p.maxPartitionBytes)},"layout":${str(gs.layout)},"buckets":${
+      gs.buckets.map(_.toString).getOrElse("null")},"streams":$streams,"codegenCacheEntries":${
+      GraftSession.CodegenCacheEntries}}"""
+  }
 
   /** Drain the listener bus so every task/stage-end event of the work
     * just run is counted. The bus API is private[spark]: reflection,
@@ -376,20 +359,9 @@ object Bench {
     // time the oracle-graded surface (capability rows — seeded ML
     // models, sketches — are correctness-declared but not part of the
     // comparable bench total), over `streams` concurrent streams
-    val warmup = sys.env.getOrElse("SPARK_GRAFT_WARMUP", "true").toBoolean
-    val heavyFirst = Bench.heavyFirstList.zipWithIndex.toMap
-    // optional comma-separated subset (profiling aid: combined with
-    // SPARK_GRAFT_STREAMS=1 it yields solo warm times free of queue
-    // contention — the number to read before calling a query slow)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val entries = SparkEntry.queries.toSeq
+    val byName = SparkEntry.queries
       .filter { case (name, _) => SparkEntry.oracleSql.contains(name) }
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .sortBy { case (name, _) =>
-        (heavyFirst.getOrElse(name, Int.MaxValue), name) }
-    val failed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val times = new java.util.concurrent.ConcurrentHashMap[String, Double]()
+    val nStreams = streams
 
     // Spill accounting (round-11, verdict item 6): task-metrics
     // memory/disk spill bytes, accumulated across the whole context
@@ -414,60 +386,32 @@ object Bench {
 
     // Run the suite over `streams` concurrent query streams, each on
     // its own child session (shared SparkContext + cache, isolated
-    // temp views/conf). Rationale: a single stream leaves most cores
-    // idle during the driver-side phases every query pays once —
-    // analysis, optimization, whole-stage-codegen compilation — which
-    // dominate at the graded data size (measured: warm re-runs are
-    // 3-5× faster than first runs). Inter-query concurrency is the
-    // same scheduler feature any production deployment uses; the
-    // reported total is honest wall-clock for the whole suite.
-    def runAll(record: Boolean): Unit = {
-      val queue = new java.util.concurrent.ConcurrentLinkedQueue[(String,
-        (SparkSession, String) => org.apache.spark.sql.DataFrame)]()
-      entries.foreach(queue.add)
-      val threads = (1 to streams).map { _ =>
+    // temp views/conf), starting the queries in `order`; returns each
+    // query's seconds ([[timeQuery]]'s −1 on failure). Rationale: a
+    // single stream leaves most cores idle during the driver-side
+    // phases every query pays once — analysis, optimization,
+    // whole-stage-codegen compilation — which dominate at the graded
+    // data size (measured: warm re-runs are 3-5× faster than first
+    // runs). Inter-query concurrency is the same scheduler feature any
+    // production deployment uses; the reported total is honest
+    // wall-clock for the whole suite.
+    def runAll(order: Seq[String]): Map[String, Double] = {
+      val queue = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      order.foreach(queue.add)
+      val times = new java.util.concurrent.ConcurrentHashMap[String, Double]()
+      val threads = (1 to nStreams).map { _ =>
         val sess = spark.newSession()
         new Thread(() => {
-          var e = queue.poll()
-          while (e != null) {
-            val (name, fn) = e
-            val t0 = System.nanoTime()
-            // materialize the FULL result (what Verify grades): a
-            // noop-sink write executes every projection and the final
-            // sort, whereas .count() would let Catalyst prune all
-            // columns and drop sorts, under-measuring
-            // projection-heavy queries. CacheOps.scoped releases the
-            // query's checkpoint blocks as soon as it completes
-            // (round-9: storage stays at the base-table floor through
-            // the pass instead of accumulating ~600 dead frames)
-            var crashed = false
-            try graft.operators.CacheOps.scoped {
-              fn(sess, queryDir).write.format("noop").mode("overwrite").save()
-            }
-            catch {
-              case ex: Throwable =>
-                crashed = true
-                if (record) { // a broken query must not shrink the total
-                  failed.add(name)
-                  System.err.println(s"[bench] $name FAILED: ${ex.getMessage}")
-                }
-            }
-            // a failed query records the −1 sentinel, NOT its
-            // elapsed-at-crash time (round-11 review): qsum is the
-            // code-vs-window ground truth, and partial wall-clock from
-            // a crash point that moves between versions would corrupt
-            // exactly the comparison the key exists to settle — the
-            // same truncated-time rule solo times have carried since
-            // round 6
-            if (record)
-              times.put(name,
-                if (crashed) -1.0 else (System.nanoTime() - t0) / 1e9)
-            e = queue.poll()
+          var name = queue.poll()
+          while (name != null) {
+            times.put(name, timeQuery(sess, queryDir, name, byName(name)))
+            name = queue.poll()
           }
         })
       }
       threads.foreach(_.start())
       threads.foreach(_.join())
+      order.map(n => n -> times.getOrDefault(n, -1.0)).toMap
     }
 
     // base-table persists to KEEP across the pass-boundary cleanup
@@ -481,10 +425,10 @@ object Bench {
       spark.sparkContext.getPersistentRDDs
         .filter { case (id, _) => !keepRdds.contains(id) }
         .values.foreach(_.unpersist(false))
-    if (warmup) {
-      runAll(record = false) // codegen/JIT warm pass, untimed
-      sweepToFloor()
-    }
+    // codegen/JIT warm pass, untimed, in name order; its per-query
+    // seconds are the timed passes' schedule ([[scheduleOrder]])
+    val order = scheduleOrder(runAll(byName.keys.toSeq.sorted))
+    sweepToFloor()
     // Round-9: the headline is the MIN over N back-to-back timed
     // passes (default 2). The suite's work is deterministic, so
     // wall-clock differences between identical passes are pure
@@ -504,18 +448,15 @@ object Bench {
     // not a mean across differently-contended passes.
     val timedPasses = math.max(1,
       sys.env.getOrElse("SPARK_GRAFT_TIMED_PASSES", "2").toInt)
-    import scala.jdk.CollectionConverters._
     case class Pass(v: Double, failedQs: Seq[String],
         qTimes: Map[String, Double], cBefore: Double, cAfter: Double,
         extCpu: Double, spillMemB: Long, spillDiskB: Long)
     var cPrev = canarySec() // post-warm, pre-pass-1 host reading
     def onePass(): Pass = {
-      times.clear()
-      failed.clear()
       val (sm0, sd0) = (spillMem.get(), spillDisk.get())
       val j0 = cpuJiffies()
       val t0 = System.nanoTime()
-      runAll(record = true)
+      val times = runAll(order)
       val v = (System.nanoTime() - t0) / 1e9
       val j1 = cpuJiffies()
       sweepToFloor()
@@ -523,10 +464,9 @@ object Bench {
       // listener events are asynchronous: drain the bus so this pass's
       // task-end metrics are all counted before the delta is taken
       drainListenerBus(spark)
-      val p = Pass(v, failed.asScala.toSeq.distinct.sorted,
-        entries.map { case (k, _) =>
-          k -> times.getOrDefault(k, -1.0) }.toMap,
-        cPrev, cAfter, externalCpuFrac(j0, j1, v),
+      // a broken query must not shrink the total: −1 marks it failed
+      val p = Pass(v, times.collect { case (k, t) if t < 0 => k }.toSeq.sorted,
+        times, cPrev, cAfter, externalCpuFrac(j0, j1, v),
         spillMem.get() - sm0, spillDisk.get() - sd0)
       cPrev = cAfter
       p
@@ -567,9 +507,8 @@ object Bench {
 
     def fmt(d: Double): String = f"$d%.3f"
     val failedJson = passes.flatMap(_.failedQs).distinct.sorted
-      .map("\"" + _ + "\"").mkString("[", ",", "]")
-    val allTimes = entries.map { case (k, _) =>
-      k -> bestTimes.getOrElse(k, -1.0) }
+      .map(Json.quote).mkString("[", ",", "]")
+    val allTimes = order.map(k => k -> bestTimes.getOrElse(k, -1.0))
 
     // solo re-profile of the heaviest in-concurrency entries: warm,
     // single-stream compute numbers free of queue-position effects —
@@ -577,40 +516,16 @@ object Bench {
     // surfaced into the artifact itself instead of repo prose
     val soloK = sys.env.getOrElse("SPARK_GRAFT_SOLO", "15").toInt
     val soloNames = allTimes.sortBy(-_._2).take(math.max(soloK, 0)).map(_._1)
-    // a solo run that dies records -1.0, not its elapsed-at-crash
-    // wall-clock (round-6 ADVICE: the truncated time read as a
-    // misleadingly FAST solo and could understate solo_max), and the
-    // name lands in solo_failed so the artifact self-flags
-    val soloFailed = scala.collection.mutable.ArrayBuffer[String]()
-    val soloTimes: Seq[(String, Double)] =
-      if (soloNames.isEmpty) Nil
-      else {
-        val byName = entries.toMap
-        val sess = spark.newSession()
-        soloNames.map { name =>
-          val s0 = System.nanoTime()
-          try {
-            graft.operators.CacheOps.scoped {
-              // measurement-consistency fix (round-12, declared in
-              // OPTIMIZATION_r12.md): solo re-profiles previously ran
-              // over the RAW sfDir even when the timed suite ran the
-              // catalog layout, so solo numbers measured different
-              // plans than the suite they explain. queryDir = what the
-              // timed passes executed.
-              byName(name)(sess, queryDir)
-                .write.format("noop").mode("overwrite").save()
-            }
-            name -> (System.nanoTime() - s0) / 1e9
-          } catch { case NonFatal(_) =>
-            soloFailed += name
-            name -> -1.0
-          }
-        }
-      }
+    // measurement-consistency fix (round-12, declared in
+    // OPTIMIZATION_r12.md): solo re-profiles run over queryDir, what
+    // the timed passes executed, not the raw sfDir. A solo run that
+    // dies lands in solo_failed so the artifact self-flags.
+    val soloSess = spark.newSession()
+    val soloTimes = soloNames.map(n => n -> timeQuery(soloSess, queryDir, n, byName(n)))
+    val soloFailed = soloTimes.collect { case (n, t) if t < 0 => n }
     val soloJson = soloTimes.map { case (k, v) => s""""$k":${fmt(v)}""" }
       .mkString("{", ",", "}")
-    val soloFailedJson = soloFailed.toSeq.sorted
-      .map("\"" + _ + "\"").mkString("[", ",", "]")
+    val soloFailedJson = soloFailed.sorted.map(Json.quote).mkString("[", ",", "]")
     val soloMax = if (soloTimes.isEmpty) 0.0 else soloTimes.map(_._2).max
     // bracket the SOLO pass with its own canary (round-6 verdict: the
     // post-timed-pass canary ran BEFORE the solo re-profile, so a
@@ -649,11 +564,11 @@ object Bench {
     val qsum = Bench.qsumOf(bestTimes.values)
     val isAttested = Bench.attestedClean(stats(passes), contended,
       canaryPost, best.extCpu)
-    // marks a catalog-layout run (absent on default runs — the driver
-    // artifact is unchanged; extra keys are tailparse-tolerated)
+    // marks a catalog-layout run (absent on raw-parquet runs; its
+    // consumers read it), beside the whole session shape in `posture`
     val layoutJson =
-      gs.layout.map(pfx => s""","layout":"$pfx"""").getOrElse("")
-    val head = s""""metric":"total","value":${fmt(total)},"unit":"sec","value_norm":${fmt(valueNorm)},"qsum":${fmt(qsum)},"attested":$isAttested,"passes":$passesJson,"contended":$contended,"waited":$waitedSec,"qn":${allTimes.size},"failed":$failedJson,"canary_pre":${fmt(canaryPre)},"canary_post":${fmt(canaryPost)},"canary_end":${fmt(canaryEnd)},"canary_mt_pre":${fmt(canaryMtPre)},"canary_mt_end":${fmt(canaryMtEnd)},"canary_mem_pre":${fmt(canaryMemPre)},"canary_mem_end":${fmt(canaryMemEnd)},"ext_cpu":${fmt(best.extCpu)},"ext_cpu_max":${fmt(passes.map(_.extCpu).max)},"spill_mem":${best.spillMemB},"spill_disk":${best.spillDiskB},"load0":${fmt(load0)},"load1":${fmt(load1)},"solo_max":${fmt(soloMax)},"solo_failed":$soloFailedJson,"sf":"$sfDir"$layoutJson"""
+      gs.layout.map(pfx => s""","layout":${Json.quote(pfx)}""").getOrElse("")
+    val head = s""""metric":"total","value":${fmt(total)},"unit":"sec","value_norm":${fmt(valueNorm)},"qsum":${fmt(qsum)},"attested":$isAttested,"passes":$passesJson,"contended":$contended,"waited":$waitedSec,"qn":${allTimes.size},"failed":$failedJson,"canary_pre":${fmt(canaryPre)},"canary_post":${fmt(canaryPost)},"canary_end":${fmt(canaryEnd)},"canary_mt_pre":${fmt(canaryMtPre)},"canary_mt_end":${fmt(canaryMtEnd)},"canary_mem_pre":${fmt(canaryMemPre)},"canary_mem_end":${fmt(canaryMemEnd)},"ext_cpu":${fmt(best.extCpu)},"ext_cpu_max":${fmt(passes.map(_.extCpu).max)},"spill_mem":${best.spillMemB},"spill_disk":${best.spillDiskB},"load0":${fmt(load0)},"load1":${fmt(load1)},"solo_max":${fmt(soloMax)},"solo_failed":$soloFailedJson,"sf":${Json.quote(sfDir)}$layoutJson,"posture":${postureJson(gs, nStreams)}"""
     // Full per-query detail, written to a file (and printed on its own
     // earlier line for humans).
     val fullJson = s"""{$head,"solo":$soloJson,"queries":$fullQs}"""

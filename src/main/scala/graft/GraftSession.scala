@@ -107,22 +107,24 @@ object GraftSession {
     val warehouse = prefix.map(_ =>
       java.nio.file.Files.createTempDirectory("graft-wh").toString)
     val spark = session(p, warehouse)
-    val queryDir = prefix match {
-      case Some(pfx) =>
-        graft.plans.Layout.writeGradedCatalog(spark, sfDir, pfx,
-          buckets = env("SPARK_GRAFT_LAYOUT_BUCKETS").map(_.toInt)
-            .getOrElse(buckets(p.cores)))
+    val nBuckets = prefix.map(_ => env("SPARK_GRAFT_LAYOUT_BUCKETS")
+      .map(_.toInt).getOrElse(buckets(p.cores)))
+    val queryDir = (prefix, nBuckets) match {
+      case (Some(pfx), Some(n)) =>
+        graft.plans.Layout.writeGradedCatalog(spark, sfDir, pfx, buckets = n)
         s"catalog:$pfx"
-      case None => sfDir
+      case _ => sfDir
     }
-    new GraftSession(spark, prefix, queryDir, warehouse)
+    new GraftSession(spark, p, prefix, nBuckets, queryDir, warehouse)
   }
 }
 
 /** A session from [[GraftSession.open]]: queries take `queryDir` as
-  * their table dir; `layout` is the catalog prefix, if any. */
+  * their table dir; `posture` is the shape it was built at, `layout`
+  * the catalog prefix and `buckets` its bucket count, if any. */
 final class GraftSession private (val spark: SparkSession,
-    val layout: Option[String], val queryDir: String,
+    val posture: GraftSession.Posture, val layout: Option[String],
+    val buckets: Option[Int], val queryDir: String,
     warehouse: Option[String]) extends AutoCloseable {
 
   /** Stop the session, then delete the run-private warehouse. */

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import scala.util.control.NonFatal
 
 /** Measured scaling curves for the heavy tier (round-12, verdict
   * item 1): every scale claim so far is proven by plan gates
@@ -193,22 +192,6 @@ object ScalingBench {
       }
     }
 
-    def runOnce(dir: String, name: String,
-        fn: (SparkSession, String) => DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try {
-        graft.operators.CacheOps.scoped {
-          fn(spark, dir).write.format("noop").mode("overwrite").save()
-        }
-        (System.nanoTime() - t0) / 1e9
-      } catch {
-        case NonFatal(ex) =>
-          System.err.println(s"[scaling] $name FAILED at $dir: " +
-            s"${ex.getMessage}")
-          -1.0
-      }
-    }
-
     // MIN of 2 runs with a GC settle between queries: a single
     // reading at the large sizes carries same-JVM contamination from
     // the preceding query's garbage (measured: q_dedup_simhash read
@@ -216,10 +199,11 @@ object ScalingBench {
     // artifact that would have mis-flagged a linear operator)
     def runSolo(dir: String, name: String,
         fn: (SparkSession, String) => DataFrame): Double = {
+      def once() = Bench.timeQuery(spark, dir, name, fn, tag = s"scaling $dir")
       System.gc()
-      val a = runOnce(dir, name, fn)
+      val a = once()
       if (a < 0) return a
-      val b = runOnce(dir, name, fn)
+      val b = once()
       if (b < 0) a else math.min(a, b)
     }
 
@@ -230,14 +214,7 @@ object ScalingBench {
       val dir = materialize(spark, base, work, m)
       // persist the inputs like Bench does — the slope must measure
       // operator compute, not repeated cold parquet scans
-      val persisted = Tables.names.flatMap { n =>
-        try {
-          val df = if (n == "events") Tables.events(spark, dir)
-                   else Tables.table(spark, dir, n)
-          df.persist().count()
-          Some(df)
-        } catch { case NonFatal(_) => None }
-      }
+      val persisted = Bench.persistTables(spark, dir)
       if (m == mults.head) {
         // untimed JIT/codegen warm pass at the smallest size only:
         // cold-compile cost landing on the 1× leg would bias every

@@ -1,7 +1,21 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json, for the DuckDB oracle compare (tools/check.sh).
+  *
+  * Usage: graft.Verify sfDir outDir [query ...]
+  *
+  * The session dials are [[GraftSession]]'s; one more selects the
+  * checkpoint mode: SPARK_GRAFT_CKPT_DIR=<dir> becomes the context's
+  * checkpoint dir, so every [[graft.operators.CacheOps.truncated]] site
+  * writes RELIABLE checkpoints there (the 100 TB fault-tolerance
+  * posture) and the DuckDB oracle compare certifies that mode changes
+  * no value. Reliable checkpoint files are not released by unpersist;
+  * Verify never deletes the dir (it may be shared or pre-exist), so the
+  * caller owns it. A real deployment instead sets
+  * spark.cleaner.referenceTracking.cleanCheckpoints=true in the initial
+  * SparkConf so the ContextCleaner removes each frame's files when its
+  * scope releases it. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
@@ -27,32 +41,8 @@ object Verify {
       layout = None, buckets = cores => cores)
     val spark = gs.spark
     val queryDir = gs.queryDir
-    // Round-10 (verdict item 3): surface-wide certification dial for
-    // the RELIABLE-checkpoint mode (CacheOps.truncated switches every
-    // localCheckpoint site to recoverable checkpoint files when the
-    // conf + a checkpoint dir are set — the 100 TB fault-tolerance
-    // posture). SPARK_GRAFT_RELIABLE_CKPT=true runs the whole dump
-    // under it; the driver's DuckDB compare then certifies the dial
-    // changes no value anywhere.
-    // reliable checkpoint FILES are not released by unpersist (round-10
-    // review: a sweep leaves data-proportional files on disk past JVM
-    // exit) — when WE created the dir (no SPARK_GRAFT_CKPT_DIR), delete
-    // it after spark.stop() below. NEVER delete a user-supplied dir
-    // (it may pre-exist with unrelated contents, or be shared by a
-    // concurrent sweep), and no shutdown hook (it would race Spark's
-    // own ordered hooks mid-stop). A real deployment instead sets
-    // spark.cleaner.referenceTracking.cleanCheckpoints=true in the
-    // initial SparkConf so the ContextCleaner removes each frame's
-    // files when its scope releases it.
-    val ownCkptDir: Option[String] =
-      if (sys.env.get("SPARK_GRAFT_RELIABLE_CKPT").contains("true")) {
-        spark.conf.set("spark.graft.reliableCheckpoints", "true")
-        val supplied = sys.env.get("SPARK_GRAFT_CKPT_DIR")
-        val dir = supplied.getOrElse(
-          java.nio.file.Files.createTempDirectory("graft-ckpt").toString)
-        spark.sparkContext.setCheckpointDir(dir)
-        if (supplied.isEmpty) Some(dir) else None
-      } else None
+    sys.env.get("SPARK_GRAFT_CKPT_DIR").filter(_.nonEmpty)
+      .foreach(spark.sparkContext.setCheckpointDir)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
@@ -68,29 +58,12 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    // stop the session (which deletes a layout run's warehouse), then
-    // the SELF-created checkpoint temp dir, on EVERY in-process exit
-    // path, exceptional included (round-10 second review: a throwing
-    // writeString/stop must not leak data-proportional checkpoint
-    // files to /tmp — only a hard SIGKILL leaks now)
+      .map { case (k, v) => s"${Json.quote(k)}: ${Json.quote(v)}" }
+      .mkString("{", ",", "}")
+    // stop the session (which deletes a layout run's warehouse) on
+    // every in-process exit path, exceptional included
     try Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    finally {
-      try gs.close()
-      finally ownCkptDir.foreach(graft.plans.Layout.deleteTree)
-    }
+    finally gs.close()
   }
 }

@@ -94,22 +94,20 @@ object CacheOps {
     track(CheckpointRegistry.register(out, result))
   }
 
-  /** Lazy checkpoint with gate-visible provenance. Default =
-    * `localCheckpoint` (no extra jobs, no CacheManager contention —
-    * measured in round 6). localCheckpoint is NON-FAULT-TOLERANT: an
-    * executor loss mid-query fails the job instead of recomputing
-    * (round-8 ADVICE). At the 100 TB posture set
-    * `spark.graft.reliableCheckpoints=true` AND a
-    * `sparkContext.setCheckpointDir` — the same call sites then write
-    * RELIABLE checkpoints to the cluster's checkpoint store, and an
-    * executor loss recovers from it. Same plan shape either way (a
-    * LogicalRDD leaf, registry-visible to every scale gate). */
+  /** Lazy checkpoint with gate-visible provenance. Without a
+    * checkpoint dir = `localCheckpoint` (no extra jobs, no CacheManager
+    * contention — measured in round 6). localCheckpoint is
+    * NON-FAULT-TOLERANT: an executor loss mid-query fails the job
+    * instead of recomputing (round-8 ADVICE). At the 100 TB posture a
+    * deployment sets `sparkContext.setCheckpointDir` — the same call
+    * sites then write RELIABLE checkpoints to the cluster's checkpoint
+    * store, and an executor loss recovers from it. Same plan shape
+    * either way (a LogicalRDD leaf, registry-visible to every scale
+    * gate). */
   def truncated(df: DataFrame): DataFrame = {
-    val reliable = df.sparkSession.conf
-      .getOption("spark.graft.reliableCheckpoints").contains("true") &&
-      df.sparkSession.sparkContext.getCheckpointDir.isDefined
     val raw =
-      if (reliable) df.checkpoint(eager = false)
+      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
+        df.checkpoint(eager = false)
       else df.localCheckpoint(eager = false)
     // round-11: over catalog tables the checkpoint's captured physical
     // partitioning/ordering can hold attribute instances that differ

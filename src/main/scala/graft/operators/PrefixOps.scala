@@ -101,9 +101,8 @@ object PrefixOps {
     *               query), and localCheckpoint's non-fault-tolerance
     *               (an executor loss mid-query fails the job rather
     *               than recompute) is the deployment trade a 100 TB
-    *               run flips with `spark.graft.reliableCheckpoints=
-    *               true` + a checkpoint dir — same call sites then
-    *               write recoverable reliable checkpoints
+    *               run flips by setting a checkpoint dir — same call
+    *               sites then write recoverable reliable checkpoints
     *               (CacheOps.truncated). Callers whose
     *               input is ALREADY a checkpoint leaf (e.g.
     *               [[groupedCumCounts]]'s contracted grid) pass

@@ -28,7 +28,8 @@ import graft.functions.expressions.{ExactDecimalSum, FastDecimalCast, FastRoundD
   * The match is deliberately NARROW: DoubleType child, foldable
   * non-negative int literal scale ≤ 15 (10^s exactness bound), Round
   * only (HALF_UP — `bround`'s HALF_EVEN is not rewritten). Disable
-  * with `spark.graft.fastround.rewrite=false`.
+  * it as any Catalyst rule: `spark.sql.optimizer.excludedRules=
+  * graft.plans.FastRoundRewrite`.
   *
   * The same rule plants the two exact decimal kernels that the
   * round-then-sum convention needs next:
@@ -44,10 +45,8 @@ import graft.functions.expressions.{ExactDecimalSum, FastDecimalCast, FastRoundD
   */
 object FastRoundRewrite extends Rule[LogicalPlan] {
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (conf.getConfString("spark.graft.fastround.rewrite", "true") != "true") {
-      plan
-    } else plan.transformAllExpressions {
+  override def apply(plan: LogicalPlan): LogicalPlan =
+    plan.transformAllExpressions {
       case r: Round
           if r.child.dataType == DoubleType && r.child.resolved &&
             (r.scale match {
@@ -64,7 +63,6 @@ object FastRoundRewrite extends Rule[LogicalPlan] {
     }.transform {
       case a: Aggregate => exactSums(a)
     }
-  }
 
   /** Spark sums wider than 18 digits over a [[FastDecimalCast]] — in
     * the sum, or a column aliased to it below the Aggregate — as

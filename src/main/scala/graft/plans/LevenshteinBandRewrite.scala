@@ -26,7 +26,8 @@ import org.apache.spark.sql.types.IntegerType
   * replaced by a boolean-equivalent expression, so the rewrite is
   * valid in any expression context, not just Filters. The match is
   * restricted to foldable non-negative integer thresholds. Disable
-  * with `spark.graft.levenshtein.band.rewrite=false`.
+  * it as any Catalyst rule: `spark.sql.optimizer.excludedRules=
+  * graft.plans.LevenshteinBandRewrite`.
   */
 object LevenshteinBandRewrite extends Rule[LogicalPlan] {
 
@@ -50,10 +51,8 @@ object LevenshteinBandRewrite extends Rule[LogicalPlan] {
       lev.copy(threshold = Some(Literal(k, IntegerType))),
       Literal(0, IntegerType))
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (conf.getConfString("spark.graft.levenshtein.band.rewrite",
-        "true") != "true") plan
-    else plan.transformAllExpressions {
+  override def apply(plan: LogicalPlan): LogicalPlan =
+    plan.transformAllExpressions {
       // lev(a,b) <= k  /  k >= lev(a,b)
       case LessThanOrEqual(lev: Levenshtein, IntThreshold(k))
           if lev.threshold.isEmpty && k >= 0 => banded(lev, k)
@@ -65,5 +64,4 @@ object LevenshteinBandRewrite extends Rule[LogicalPlan] {
       case GreaterThan(IntThreshold(k), lev: Levenshtein)
           if lev.threshold.isEmpty && k >= 1 => banded(lev, k - 1)
     }
-  }
 }

@@ -29,9 +29,9 @@ import graft.functions.expressions.FloatVecDot
   * bit-identical (ExpressionSpec proves it). The one divergence is
   * ragged input: zip_with pads the shorter vector with nulls → HOF
   * yields NULL, while the kernel FAILS FAST (mixed embedding dims are
-  * corrupt data — a silent NULL at 100 TB hides it). Disable with
-  * `spark.graft.vecdot.rewrite=false` if null-padding semantics are
-  * required.
+  * corrupt data — a silent NULL at 100 TB hides it). Where
+  * null-padding semantics are required, disable it as any Catalyst
+  * rule: `spark.sql.optimizer.excludedRules=graft.plans.VecDotRewrite`.
   */
 object VecDotRewrite extends Rule[LogicalPlan] {
 
@@ -47,9 +47,8 @@ object VecDotRewrite extends Rule[LogicalPlan] {
       case _ => false
     }
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (conf.getConfString("spark.graft.vecdot.rewrite", "true") != "true") plan
-    else plan.transformAllExpressions {
+  override def apply(plan: LogicalPlan): LogicalPlan =
+    plan.transformAllExpressions {
       case ArrayAggregate(
           ZipWith(a, b,
             LambdaFunction(Multiply(mx, my, _), Seq(x: NamedLambdaVariable,
@@ -65,5 +64,4 @@ object VecDotRewrite extends Rule[LogicalPlan] {
            fin.exprId == finArg.exprId =>
         FloatVecDot(a, b)
     }
-  }
 }

@@ -14,7 +14,8 @@ import graft.streaming.CloudTrailPipeline
   * stream's own decoder, [[CloudTrailPipeline.decodeEnvelopes]] on
   * `spark.read.text`. Spark's text source packs the small delivery
   * files into partitions; the scan keeps the top-level columns the
-  * query asks for. */
+  * query asks for. A file Spark cannot read (truncated or non-gzip
+  * bytes) is logged and skipped, as the stream skips it. */
 class CloudTrailSource extends RelationProvider with DataSourceRegister {
   override def shortName(): String = "cloudtrail"
 
@@ -30,7 +31,8 @@ final case class CloudTrailRelation(path: String)(
 
   /** Rows are the decoder's own internal rows (`needConversion` false). */
   override def buildScan(cols: Array[String]): RDD[Row] =
-    CloudTrailPipeline.decodeEnvelopes(sqlContext.sparkSession.read.text(path))
+    CloudTrailPipeline.decodeEnvelopes(sqlContext.sparkSession.read
+        .option("ignoreCorruptFiles", "true").text(path))
       .select(cols.toIndexedSeq.map(col): _*)
       .queryExecution.toRdd.asInstanceOf[RDD[Row]]
 }

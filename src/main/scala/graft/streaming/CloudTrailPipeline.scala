@@ -259,6 +259,13 @@ object CloudTrailPipeline {
     * batched/retrying sink via foreachBatch, checkpointed, triggered
     * every [[TriggerInterval]].
     *
+    * A landed file Spark cannot read (a truncated gzip, bytes that are
+    * not gzip under a `.gz` name) is logged with its path and skipped
+    * (`ignoreCorruptFiles`), as the reference logs and skips a bad
+    * object, so it cannot wedge the stream. The trade-off: the skip is
+    * for good, because the file's offset commits with the batch, and
+    * nothing yet counts or records the skipped files.
+    *
     * The query runs on the caller's session, so listeners on
     * `spark.streams` see its progress, but with [[queryConfs]]: `run`
     * sets them, starts the query (which clones the session, confs
@@ -280,6 +287,7 @@ object CloudTrailPipeline {
     val raw = spark.readStream
       .format("text")
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
+      .option("ignoreCorruptFiles", "true")
       .load(inPath)
     val decoded = toSinkEntries(dedup(decodeEnvelopes(raw)))
     val entries = sinkPartitions match {

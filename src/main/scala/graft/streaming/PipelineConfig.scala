@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.{StateOperatorProgress, StreamingQueryListener}
 import org.apache.spark.sql.streaming.StreamingQueryListener._
+import graft.Json.quote
 
 /** Typed pipeline configuration (reference operator A12: the Go
   * Lambda read `CT_*` environment variables for stream name, region
@@ -45,7 +46,7 @@ class JsonProgressListener(log: String => Unit = Console.err.println)
     extends StreamingQueryListener {
 
   override def onQueryStarted(e: QueryStartedEvent): Unit =
-    log(s"""{"type":"stream.start","id":"${e.id}","name":${q(e.name)}}""")
+    log(s"""{"type":"stream.start","id":"${e.id}","name":${quote(e.name)}}""")
 
   override def onQueryProgress(e: QueryProgressEvent): Unit = {
     val p = e.progress
@@ -64,24 +65,10 @@ class JsonProgressListener(log: String => Unit = Console.err.println)
   }
 
   override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
-    log(s"""{"type":"stream.stop","id":"${e.id}","error":${q(e.exception.orNull)}}""")
+    log(s"""{"type":"stream.stop","id":"${e.id}","error":${quote(e.exception.orNull)}}""")
 
   private def safe(d: Double): String =
     if (d.isNaN || d.isInfinite) "0" else d.toString
-  // Full JSON string escape incl. control chars: exception messages
-  // and query names routinely carry newlines/tabs, which would emit
-  // invalid JSON lines and break the structured-log consumer.
-  private def q(s: String): String =
-    if (s == null) "null"
-    else "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
 }
 
 object JsonProgressListener {

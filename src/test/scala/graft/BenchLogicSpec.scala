@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.Bench.{attested, attestedClean, headlineIndex, PassStat}
+import graft.Bench.{attested, attestedClean, headlineIndex, PassStat, scheduleOrder}
 
 /** Unit pins for the bench artifact's headline-selection and
   * attestation rules (round-10) — pure logic, no Spark. These encode
@@ -76,5 +76,14 @@ class BenchLogicSpec extends AnyFunSuite {
     assert(Bench.qsumOf(Nil) == 0.0)
     // zero is a legitimate (sub-millisecond, rounded) time, not a flag
     assert(Bench.qsumOf(Seq(0.0, 3.0)) == 3.0)
+  }
+
+  test("scheduleOrder: heaviest warm time first, ties by name, failed queries last") {
+    val warm = Seq("q_b" -> 1.0, "q_fail2" -> -1.0, "q_a" -> 1.0,
+      "q_slow" -> 9.5, "q_fail1" -> -1.0, "q_fast" -> 0.01)
+    assert(scheduleOrder(warm) ===
+      Seq("q_slow", "q_a", "q_b", "q_fast", "q_fail1", "q_fail2"))
+    assert(scheduleOrder(warm.reverse) === scheduleOrder(warm), "input order is irrelevant")
+    assert(scheduleOrder(Nil).isEmpty)
   }
 }

@@ -92,7 +92,6 @@ class CacheLifecycleSpec extends GraftSpecBase {
   test("reliable-checkpoint dial: same values, reliable files on disk, registry still sees the interior") {
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
     spark.sparkContext.setCheckpointDir(dir)
-    spark.conf.set("spark.graft.reliableCheckpoints", "true")
     try {
       val grid = Tables.events(spark, sf)
         .groupBy(col("event_type")).agg(count(lit(1)).as("n"))
@@ -105,8 +104,14 @@ class CacheLifecycleSpec extends GraftSpecBase {
       assert(graft.plans.CheckpointRegistry.expand(
         grid.queryExecution.optimizedPlan).size > 1,
         "the registry must see the reliable checkpoint's interior too")
+      val written = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+      try assert(written.anyMatch(_.getFileName.toString.startsWith("part-")),
+        "with a checkpoint dir set, the checkpoint must be written there")
+      finally written.close()
     } finally {
-      spark.conf.set("spark.graft.reliableCheckpoints", "false")
+      // the dir alone selects reliable checkpoints: clear it so later
+      // specs on the shared context keep local ones
+      spark.sparkContext.setCheckpointDir(null)
     }
   }
 }

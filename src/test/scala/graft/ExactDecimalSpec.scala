@@ -175,9 +175,9 @@ class ExactDecimalSpec extends GraftSpecBase {
             catch { case t: Throwable => s"error ${condition(t)}" })
         }
         val (onPlan, on) = run()
-        spark.conf.set("spark.graft.fastround.rewrite", "false")
+        spark.conf.set("spark.sql.optimizer.excludedRules", "graft.plans.FastRoundRewrite")
         val (offPlan, off) =
-          try run() finally spark.conf.set("spark.graft.fastround.rewrite", "true")
+          try run() finally spark.conf.unset("spark.sql.optimizer.excludedRules")
         assert(onPlan == "exact" && offPlan == "spark",
           s"$name ($shape, $dec): rewrite planted $onPlan / $offPlan")
         assert(on == off, s"$name ($shape, $dec, ansi=$ansi): exact $on, Spark $off")

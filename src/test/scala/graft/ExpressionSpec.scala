@@ -97,16 +97,16 @@ class ExpressionSpec extends GraftSpecBase {
     assert(optimized.expressions.exists(_.exists(_.isInstanceOf[FloatVecDot])),
       s"expected FloatVecDot in optimized plan:\n$optimized")
     // results identical to the unrewritten form
-    spark.conf.set("spark.graft.vecdot.rewrite", "false")
+    spark.conf.set("spark.sql.optimizer.excludedRules", "graft.plans.VecDotRewrite")
     try {
       val off = declarative.queryExecution.optimizedPlan
       assert(!off.expressions.exists(_.exists(_.isInstanceOf[FloatVecDot])),
-        "conf off must disable the rewrite")
+        "excluding the rule must disable the rewrite")
       val a = declarative.collect().map(_.getDouble(0))
-      spark.conf.set("spark.graft.vecdot.rewrite", "true")
+      spark.conf.unset("spark.sql.optimizer.excludedRules")
       val b = declarative.collect().map(_.getDouble(0))
       assert(a.sameElements(b), "rewrite changed results")
-    } finally spark.conf.set("spark.graft.vecdot.rewrite", "true")
+    } finally spark.conf.unset("spark.sql.optimizer.excludedRules")
   }
 
   test("KmvDistinct estimates within KMV error bounds and is partition-invariant") {

@@ -110,7 +110,7 @@ class FastRoundSpec extends GraftSpecBase {
     assert(planned.contains("fast_round"),
       s"rewrite did not fire:\n$planned")
     val vals = df.orderBy(col("r")).collect().map(_.getDouble(0))
-    spark.conf.set("spark.graft.fastround.rewrite", "false")
+    spark.conf.set("spark.sql.optimizer.excludedRules", "graft.plans.FastRoundRewrite")
     try {
       val df2 = Tables.lineitem(spark, "/root/testdata/sf0.001")
         .select(round(col("l_extendedprice") / 7.0, 6).as("r"))
@@ -118,6 +118,6 @@ class FastRoundSpec extends GraftSpecBase {
       val vals2 = df2.orderBy(col("r")).collect().map(_.getDouble(0))
       assert(vals.length == vals2.length &&
         vals.indices.forall(i => bits(vals(i)) == bits(vals2(i))))
-    } finally spark.conf.set("spark.graft.fastround.rewrite", "true")
+    } finally spark.conf.unset("spark.sql.optimizer.excludedRules")
   }
 }

@@ -72,7 +72,8 @@ class LevenshteinBandSpec extends GraftSpecBase {
   }
 
   test("kill switch restores the unbounded plan") {
-    spark.conf.set("spark.graft.levenshtein.band.rewrite", "false")
+    spark.conf.set("spark.sql.optimizer.excludedRules",
+      "graft.plans.LevenshteinBandRewrite")
     try {
       val df = Tables.documents(spark, sf)
         .filter(expr("levenshtein(text, 'abc') <= 3"))
@@ -80,6 +81,6 @@ class LevenshteinBandSpec extends GraftSpecBase {
       assert(!opt.contains("Some(3)) >= 0"), opt.take(300))
       assert(fixture.filter(expr("levenshtein(a, b) <= 3")).count() == 3,
         "semantics unchanged either way")
-    } finally spark.conf.unset("spark.graft.levenshtein.band.rewrite")
+    } finally spark.conf.unset("spark.sql.optimizer.excludedRules")
   }
 }

@@ -381,6 +381,41 @@ class StreamingSpec extends GraftSpecBase {
       Seq("1", "2", "3", "4"))
   }
 
+  test("a truncated gzip and non-gzip bytes named .gz are skipped: good records arrive once, the query stays up, a restart redelivers nothing") {
+    val dir = java.nio.file.Files.createTempDirectory("ct_in_bad").toFile
+    val chk = java.nio.file.Files.createTempDirectory("ct_chk_bad").toFile
+    def gzip(content: String): Array[Byte] = {
+      val bytes = new java.io.ByteArrayOutputStream()
+      val os = new java.util.zip.GZIPOutputStream(bytes)
+      os.write(content.getBytes("UTF-8")); os.close()
+      bytes.toByteArray
+    }
+    def land(name: String, bytes: Array[Byte]): Unit =
+      java.nio.file.Files.write(new java.io.File(dir, name).toPath, bytes)
+    val got = java.util.Collections.synchronizedList(
+      new java.util.ArrayList[String]())
+    TestSink.records = got
+    land("f1.json.gz", gzip(envelope("1", "2")))
+    val cut = gzip(envelope("91", "92"))
+    land("f2.json.gz", cut.take(cut.length / 2))
+    land("f3.json.gz", envelope("93").getBytes("UTF-8"))
+    val q1 = CloudTrailPipeline.run(spark, dir.getAbsolutePath,
+      chk.getAbsolutePath, TestSink)
+    try {
+      q1.processAllAvailable()
+      assert(q1.isActive && q1.exception.isEmpty)
+    } finally q1.stop()
+    assert(got.toArray(Array.empty[String]).sorted.toSeq === Seq("1", "2"))
+    land("f4.json.gz", gzip(envelope("3")))
+    val q2 = CloudTrailPipeline.run(spark, dir.getAbsolutePath,
+      chk.getAbsolutePath, TestSink)
+    try {
+      q2.processAllAvailable()
+      assert(q2.isActive && q2.exception.isEmpty)
+    } finally q2.stop()
+    assert(got.toArray(Array.empty[String]).sorted.toSeq === Seq("1", "2", "3"))
+  }
+
   test("checkpoint restart does not redeliver committed files (exactly-once line)") {
     val dir = java.nio.file.Files.createTempDirectory("ct_in2").toFile
     val chk = java.nio.file.Files.createTempDirectory("ct_chk2").toFile

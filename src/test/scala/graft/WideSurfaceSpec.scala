@@ -6,17 +6,6 @@ import graft.queries.{DedupQueries, WideSurfaceQueries}
 /** Semantics tests for the wide-surface widening + dedup clustering. */
 class WideSurfaceSpec extends GraftSpecBase {
 
-  test("Bench's LPT front-load list names only live queries, no duplicates (round-10 hygiene)") {
-    val live = SparkEntry.queries.keySet
-    val stale = Bench.heavyFirstList.filterNot(live)
-    assert(stale.isEmpty,
-      s"heavyFirstList entries with no matching query (a rename silently " +
-        s"degrades the schedule): $stale")
-    val dups = Bench.heavyFirstList.groupBy(identity)
-      .collect { case (n, xs) if xs.size > 1 => n }
-    assert(dups.isEmpty, s"duplicate LPT entries: $dups")
-  }
-
   test("q_regex_extract_all splits every p_type word") {
     val df = WideSurfaceQueries.regexExtractAll(spark, sf)
     // word count equals whitespace-split count for these fixtures

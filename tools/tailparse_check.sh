@@ -52,7 +52,11 @@ for key in ("metric", "value", "unit", "queries", "sf",
             # headline-attestation self-flag; spill_mem/spill_disk =
             # the winning pass's task-metrics spill bytes (the
             # constrained-heap certification as a number)
-            "qsum", "attested", "spill_mem", "spill_disk"):
+            "qsum", "attested", "spill_mem", "spill_disk",
+            # the session shape that produced the numbers (cores,
+            # shuffle, AQE, scan split, layout, buckets, streams,
+            # codegen cache): the schedule and defaults depend on it
+            "posture"):
     if key not in obj:
         sys.exit(f"TAILPARSE FAIL: parsed JSON missing key {key!r}: {last[:200]}")
 # round-12 (verdict item 2): attested certifies repeatability AND
