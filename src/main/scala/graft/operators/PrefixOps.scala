@@ -31,10 +31,7 @@ import org.apache.spark.sql.functions._
   * boundary choice (equal keys always share a bucket), so the bucket
   * scheme never leaks into the output — only into load balance.
   * Equi-width is skew-sensitive in the worst case (a point-mass
-  * domain collapses to one bucket); for skewed domains pass an
-  * explicit `boundaries` cut vector to [[runningSums]] (e.g. sampled
-  * quantiles computed once per job, passed as literals) — the sweep
-  * math is unchanged, only the load balance improves.
+  * domain collapses to one bucket: still correct, but one task).
   *
   * `row_number`/`rank`/`ntile` over a total order are prefix counts:
   * ask for `sum(lit(1))` and derive the tile from the running count
@@ -73,47 +70,28 @@ object PrefixOps {
     *               should use an ordinary partitioned window — it is
     *               already parallel). NULL group keys are handled
     *               (null-safe joins throughout).
-    * @param boundaries optional explicit ASCENDING cut vector for the
-    *               bucketing (bucket = number of cuts ≤ key, so
-    *               |boundaries|+1 buckets): the skew-resistant path —
-    *               sample quantiles once per job and pass them as
-    *               literals when the key domain is point-massed and
-    *               equi-width would collapse to one bucket. Replaces
-    *               the (min, max) probe entirely (one fewer aggregate
-    *               + broadcast in the plan); `buckets` is ignored.
-    *               Any monotone cut choice yields identical output —
-    *               only load balance changes.
-    * @param materialize when true (default), the input is
-    *               materialized ONCE behind a lazy `localCheckpoint`
-    *               before fanning out to the bounds / within-window /
-    *               totals branches. Without it the sweep's plan tree
-    *               embeds a separate copy of the input subtree in
-    *               each branch (~6 references), and Spark re-executes
-    *               each copy from its scans — the round-8 scan census
-    *               measured up to 96 base-table scans in one query
-    *               this way (q_runs_test: chained prefix passes
-    *               multiply). At 100 TB a 6× re-read of a fact-scale
-    *               input dwarfs the cost of caching one narrow
-    *               projection that is provably reused. Lifecycle &
-    *               fault tolerance (round-8 ADVICE): the cached
-    *               blocks are released by [[CacheOps.scoped]] once
-    *               the query is consumed (Bench/Verify wrap every
-    *               query), and localCheckpoint's non-fault-tolerance
-    *               (an executor loss mid-query fails the job rather
-    *               than recompute) is the deployment trade a 100 TB
-    *               run flips by setting a checkpoint dir — same call
-    *               sites then write recoverable reliable checkpoints
-    *               (CacheOps.truncated). Callers whose
-    *               input is ALREADY a checkpoint leaf (e.g.
-    *               [[groupedCumCounts]]'s contracted grid) pass
-    *               false — re-deriving a bucket column from a cached
-    *               leaf is cheaper than a second cached copy.
+    *
+    * The input is materialized ONCE behind a lazy `localCheckpoint`
+    * before fanning out to the bounds / within-window / totals
+    * branches, unless it is already scan-free (a caller-checkpointed
+    * grid, e.g. [[groupedCumCounts]]'s). Without it the sweep's plan
+    * tree embeds a separate copy of the input subtree in each branch
+    * (~6 references), and Spark re-executes each copy from its scans —
+    * the round-8 scan census measured up to 96 base-table scans in one
+    * query this way (q_runs_test: chained prefix passes multiply). At
+    * 100 TB a 6× re-read of a fact-scale input dwarfs the cost of
+    * caching one narrow projection that is provably reused. Lifecycle &
+    * fault tolerance (round-8 ADVICE): the cached blocks are released
+    * by [[CacheOps.scoped]] once the query is consumed (Bench/Verify
+    * wrap every query), and localCheckpoint's non-fault-tolerance (an
+    * executor loss mid-query fails the job rather than recompute) is
+    * the deployment trade a 100 TB run flips by setting a checkpoint
+    * dir — same call sites then write recoverable reliable checkpoints
+    * (CacheOps.truncated).
     */
   def runningSums(df: DataFrame, key: Column, order: Seq[Column],
       sums: Seq[(String, Column)], buckets: Int = 64,
-      partitionBy: Seq[Column] = Nil,
-      boundaries: Seq[Double] = Nil,
-      materialize: Boolean = true): DataFrame = {
+      partitionBy: Seq[Column] = Nil): DataFrame = {
     import CacheOps.CheckpointSyntax
     // 0. materialize the group keys once under internal names so every
     //    later phase (bounds, totals, offsets) can reference them even
@@ -136,51 +114,10 @@ object PrefixOps {
     // the chained compute dominates, in which case the caller can
     // checkpoint explicitly between passes.
     val withP =
-      if (materialize && !CacheOps.scanFree(withP0))
-        withP0.truncatedCheckpoint()
-      else withP0
+      if (CacheOps.scanFree(withP0)) withP0 else withP0.truncatedCheckpoint()
     // 1. lazy equi-width buckets from a broadcast (min, max) — per
-    //    group when partitioned: exact, deterministic,
-    //    partial-aggregable — every plan branch derives the identical
-    //    bucket for a given key, and nothing executes until the query
-    //    runs.
-    val k = key.cast("double")
-    val parted = if (boundaries.nonEmpty) {
-      // explicit cut vector: bucket = #{cuts ≤ key} — monotone in the
-      // order, ties share a bucket, NULL key → bucket 0 (first,
-      // consistent with nulls-first orders); no (min, max) probe
-      // needed at all. Codegen'd binary search (BoundaryBucket) —
-      // the previous |cuts|-deep when-chain was O(cuts) per row and
-      // at the scaladoc's "thousands of sampled cuts" would have
-      // blown the 64 KB JIT method limit into interpreted fallback
-      // (round-7 ADVICE); semantics are bit-identical incl. the
-      // NULL→0 and Spark NaN-largest cases (BoundaryBucketSpec).
-      val b = graft.functions.expressions.BoundaryBucket.bucket(k, boundaries)
-      withP.withColumn("__pfx_bucket", b)
-    } else {
-      val bounded = if (pn.isEmpty) {
-        val bounds = withP.agg(min(k).as("__pfx_lo"), max(k).as("__pfx_hi"))
-        withP.crossJoin(broadcast(bounds))
-      } else {
-        val bounds = withP.groupBy(pn.map(col): _*)
-          .agg(min(k).as("__pfx_lo"), max(k).as("__pfx_hi"))
-        val renamed = bounds.select(
-          pn.map(n => col(n).as(s"__pfx_b_$n")) ++
-            Seq(col("__pfx_lo"), col("__pfx_hi")): _*)
-        val cond = pn.map(n => col(n) <=> col(s"__pfx_b_$n")).reduce(_ && _)
-        withP.join(broadcast(renamed), cond)
-          .drop(pn.map(n => s"__pfx_b_$n"): _*)
-      }
-      val width =
-        (col("__pfx_hi") - col("__pfx_lo")) / lit(buckets.toDouble)
-      val b = when(col("__pfx_hi") <= col("__pfx_lo"), lit(0)) // constant key
-        .otherwise(least(
-          floor((k - col("__pfx_lo")) / width).cast("int"),
-          lit(buckets - 1)))
-      bounded
-        .withColumn("__pfx_bucket", coalesce(b, lit(0))) // NULL key → first
-        .drop("__pfx_lo", "__pfx_hi")
-    }
+    //    group when partitioned
+    val parted = equiWidthBuckets(withP, key, buckets, pn)
     // 2. within-bucket running sums (window partitioned on
     //    (groups…, bucket) — buckets proceed in parallel)
     val w = Window.partitionBy(pn.map(col) :+ col("__pfx_bucket"): _*)
@@ -193,7 +130,7 @@ object PrefixOps {
     //    the group. Round-12 (guide §2.4): the offsets are an
     //    exclusive prefix over the TINY totals frame (≤
     //    |groups|·|buckets| rows by construction — the bucket column's
-    //    domain is [0, nBuckets) via least/boundary-count), so a
+    //    domain is [0, buckets) via least), so a
     //    window over it replaces the previous broadcast-self-join +
     //    re-aggregate, which executed the totals subtree twice more
     //    (once inside the `earlier` broadcast build, once in the
@@ -203,10 +140,9 @@ object PrefixOps {
     //    null-skipping (OrderStatsSpec's randomized equivalence trials
     //    pin it). Scale: when grouped, the window partitions by the
     //    group keys over an already-contracted aggregate (gate-clean);
-    //    ungrouped, the provable `limit(nBuckets)` no-op below the
-    //    window keeps the ≤nBuckets-row bound STRUCTURAL
+    //    ungrouped, the provable `limit(buckets)` no-op below the
+    //    window keeps the ≤buckets-row bound STRUCTURAL
     //    (GlobalWindowSpec's limit-rescue), not narrative.
-    val nBuckets = if (boundaries.nonEmpty) boundaries.size + 1 else buckets
     val totals = parted
       .groupBy(pn.map(col) :+ col("__pfx_bucket").as("__tb"): _*).agg(
         sums.head match { case (n, c) => sum(c).as(s"__t_$n") },
@@ -214,7 +150,7 @@ object PrefixOps {
     val wOff = Window.partitionBy(pn.map(col): _*).orderBy(col("__tb"))
       .rowsBetween(Window.unboundedPreceding, -1)
     val offsets = sums.foldLeft(
-        if (pn.isEmpty) totals.limit(nBuckets) else totals) {
+        if (pn.isEmpty) totals.limit(buckets) else totals) {
         case (acc, (n, _)) =>
           acc.withColumn(s"__o_$n", sum(col(s"__t_$n")).over(wOff))
       }
@@ -245,6 +181,40 @@ object PrefixOps {
         sums.flatMap { case (n, _) => Seq(s"__pfx_w_$n", s"__o_$n") }): _*)
   }
 
+  /** Adds `__pfx_bucket`, the equi-width range bucket in
+    * [0, `buckets`) of `key` between its (min, max) — per group of the
+    * `pn` columns when given — from a broadcast aggregate: exact,
+    * deterministic and partial-aggregable, so every plan branch derives
+    * the identical bucket for a given key, and nothing executes until
+    * the query runs. A NULL key goes to bucket 0 (first, consistent
+    * with nulls-first orders). */
+  private def equiWidthBuckets(df: DataFrame, key: Column, buckets: Int,
+      pn: Seq[String] = Nil): DataFrame = {
+    val k = key.cast("double")
+    val bounded = if (pn.isEmpty) {
+      val bounds = df.agg(min(k).as("__pfx_lo"), max(k).as("__pfx_hi"))
+      df.crossJoin(broadcast(bounds))
+    } else {
+      val bounds = df.groupBy(pn.map(col): _*)
+        .agg(min(k).as("__pfx_lo"), max(k).as("__pfx_hi"))
+      val renamed = bounds.select(
+        pn.map(n => col(n).as(s"__pfx_b_$n")) ++
+          Seq(col("__pfx_lo"), col("__pfx_hi")): _*)
+      val cond = pn.map(n => col(n) <=> col(s"__pfx_b_$n")).reduce(_ && _)
+      df.join(broadcast(renamed), cond)
+        .drop(pn.map(n => s"__pfx_b_$n"): _*)
+    }
+    val width =
+      (col("__pfx_hi") - col("__pfx_lo")) / lit(buckets.toDouble)
+    val b = when(col("__pfx_hi") <= col("__pfx_lo"), lit(0)) // constant key
+      .otherwise(least(
+        floor((k - col("__pfx_lo")) / width).cast("int"),
+        lit(buckets - 1)))
+    bounded
+      .withColumn("__pfx_bucket", coalesce(b, lit(0)))
+      .drop("__pfx_lo", "__pfx_hi")
+  }
+
   /** Contract-then-rank: the scale-safe replacement for
     * `row_number()/rank()/cume_dist() OVER (PARTITION BY g ORDER BY v)`
     * on a LOW-cardinality `g` over raw fact rows. Contracts the input
@@ -271,13 +241,12 @@ object PrefixOps {
     // groupBy). One lazy checkpoint of the grid (small: one row per
     // distinct (groups…, value)) makes every consumer read the same
     // materialization; runningSums then skips its own input
-    // materialization (the grid is already a leaf).
+    // materialization (the grid is already a leaf: CacheOps.scanFree).
     val grid = df.groupBy((groups :+ value).map(col): _*)
       .agg(count(lit(1)).as("c"))
       .truncatedCheckpoint()
     val cum = runningSums(grid, col(value), Seq(col(value)),
-      Seq("cum" -> col("c")), buckets, groups.map(col),
-      materialize = false)
+      Seq("cum" -> col("c")), buckets, groups.map(col))
     val totals = grid.groupBy(groups.map(col): _*)
       .agg(sum(col("c")).as("n"))
     val totalsR = totals.select(
@@ -326,17 +295,7 @@ object PrefixOps {
     // unless it is already scan-free (CacheOps.scanFree; see
     // runningSums for the round-9 A/B that kept this guard)
     val dfM = if (CacheOps.scanFree(df)) df else df.truncatedCheckpoint()
-    val k = key.cast("double")
-    val bounds = dfM.agg(min(k).as("__pfx_lo"), max(k).as("__pfx_hi"))
-    val width =
-      (col("__pfx_hi") - col("__pfx_lo")) / lit(buckets.toDouble)
-    val b = when(col("__pfx_hi") <= col("__pfx_lo"), lit(0))
-      .otherwise(least(
-        floor((k - col("__pfx_lo")) / width).cast("int"),
-        lit(buckets - 1)))
-    val parted = dfM.crossJoin(broadcast(bounds))
-      .withColumn("__pfx_bucket", coalesce(b, lit(0)))
-      .drop("__pfx_lo", "__pfx_hi")
+    val parted = equiWidthBuckets(dfM, key, buckets)
     val w = Window.partitionBy(col("__pfx_bucket")).orderBy(order: _*)
       .rowsBetween(Window.unboundedPreceding, -1)
     val within = parted.withColumn(s"__pfx_w_$name", max(value).over(w))

@@ -955,10 +955,6 @@ object ScaleRules {
           case Literal(m: Int, _) => m > 0 && m <= 65536
           case _ => false
         }
-      // boundary_bucket's image is {0..|cuts|} — cuts is a
-      // construction-time constant array (quantile grids ≤ ~100 cuts)
-      case b: graft.functions.expressions.BoundaryBucket =>
-        b.cuts.length + 1 <= 65536
       // Round-12 (verdict item 7, retiring `dig`): a FIXED-LENGTH
       // substring parsed to an integral type. Whatever the input
       // string, a ≤k-char slice parses to NULL or an integer in

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, StreamingQuery, TTLConfig, TimeMode, Trigger, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 /** Reference-equivalent streaming pipeline (SURVEY.md §2-A, §3.4).
@@ -30,10 +30,14 @@ import org.apache.spark.sql.types._
   *    `foreachBatch` + [[deliver]] (`foreachPartition` +
   *    [[drainPartition]]: `grouped(500)` and bounded exponential
   *    retry), the same path as the batch `format("cloudtrail-sink")`;
-  *  - redelivery dedup → `dropDuplicatesWithinWatermark("eventID")`.
+  *  - redelivery dedup → [[dedup]]: `dropDuplicatesWithinWatermark`
+  *    on `eventID`, or on a content hash for a record without one.
   *
   * The batch `spark.read.format("cloudtrail")` is [[decodeEnvelopes]]
   * over `spark.read.text`, so stream and batch share one decoder.
+  *
+  * [[run]] is the one entry from a landing dir to a sink, configured
+  * by a [[PipelineConfig]].
   *
   * Scale: parallelism = files × partitions (the reference's "many
   * Lambda instances" becomes executor tasks); state (dedup,
@@ -157,11 +161,20 @@ object CloudTrailPipeline {
       .select(col("value").as("bad_record"))
 
   /** Streaming dedup of CloudTrail redeliveries on the natural key
-    * (`eventID`), state bounded by the watermark. */
+    * (`eventID`), state bounded by the watermark. A record without an
+    * `eventID` is keyed by a hash of its whole content instead, so
+    * distinct such records all pass and only exact copies collapse
+    * (`dropDuplicatesWithinWatermark` on a null key would keep the
+    * first of them alone). The key column holds the `eventID` itself
+    * when there is one, so a checkpoint keyed on `eventID` alone
+    * restarts under this key and still drops its redeliveries. */
   def dedup(records: DataFrame, watermark: String = "10 minutes"): DataFrame =
     records
       .withWatermark("eventTime", watermark)
-      .dropDuplicatesWithinWatermark("eventID")
+      .withColumn("__dedup_key", coalesce(col("eventID"),
+        sha2(to_json(struct(records.columns.toIndexedSeq.map(col): _*)), 256)))
+      .dropDuplicatesWithinWatermark("__dedup_key")
+      .drop("__dedup_key")
 
   /** #47-compatible tumbling counts per eventSource with late-data
     * drop — identical expression to the batch-graded q_win_tumbling. */
@@ -249,15 +262,14 @@ object CloudTrailPipeline {
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
       "true")
 
-  /** [[run]] over a [[PipelineConfig]]. */
-  def run(spark: SparkSession, config: PipelineConfig,
-      sink: RecordSink): StreamingQuery =
-    run(spark, config.inPath, config.checkpoint, sink,
-      config.maxFilesPerTrigger)
-
   /** Full pipeline: gzip JSON landing dir → decode → dedup →
     * batched/retrying sink via foreachBatch, checkpointed, triggered
-    * every [[TriggerInterval]].
+    * every [[TriggerInterval]], admitting at most
+    * `config.maxFilesPerTrigger` files a trigger. This is the
+    * reference's one path from a landed file to Kinesis. Kinesis routes
+    * a record to its shard by partition key, so the sink takes the
+    * dedup output's partitions (one per core) as they come, whatever
+    * the shard count.
     *
     * A landed file Spark cannot read (a truncated gzip, bytes that are
     * not gzip under a `.gz` name) is logged with its path and skipped
@@ -271,33 +283,18 @@ object CloudTrailPipeline {
     * sets them, starts the query (which clones the session, confs
     * included) and restores the caller's values, unsetting those the
     * caller had not set. The caller's later queries keep their own
-    * shuffle width and state store.
-    *
-    * `sinkPartitions`: optional sink-side `repartition(n,
-    * partitionKey)` — the shard-count dial a deployment turns when
-    * the downstream stream is resharded. NOT part of the checkpointed
-    * state: a restart from the same checkpoint may use a DIFFERENT
-    * value (round-8 verdict item 6 — exactly-once must not depend on
-    * the replay landing in the same partition layout; the keyed
-    * idempotent sink contract is what carries it, StreamingSpec pins
-    * a crash-replay across a partitioning change). */
-  def run(spark: SparkSession, inPath: String, checkpoint: String,
-      sink: RecordSink, maxFilesPerTrigger: Int = 100,
-      sinkPartitions: Option[Int] = None): StreamingQuery = {
+    * shuffle width and state store. */
+  def run(spark: SparkSession, config: PipelineConfig,
+      sink: RecordSink): StreamingQuery = {
     val raw = spark.readStream
       .format("text")
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
+      .option("maxFilesPerTrigger", config.maxFilesPerTrigger)
       .option("ignoreCorruptFiles", "true")
-      .load(inPath)
-    val decoded = toSinkEntries(dedup(decodeEnvelopes(raw)))
-    val entries = sinkPartitions match {
-      case Some(n) => decoded.repartition(n, col("partitionKey"))
-      case None => decoded
-    }
-    val writer = entries.writeStream
+      .load(config.inPath)
+    val writer = toSinkEntries(dedup(decodeEnvelopes(raw))).writeStream
       .outputMode(OutputMode.Append)
       .trigger(TriggerInterval)
-      .option("checkpointLocation", checkpoint)
+      .option("checkpointLocation", config.checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) => deliver(batch, sink) }
     val confs = queryConfs(spark)
     val callers = spark.conf.getAll
@@ -320,32 +317,20 @@ object CloudTrailPipeline {
   case class SessionState(nEvents: Long, start: Long, lastTs: Long)
   case class SessionOut(userId: Long, nEvents: Long, durationMs: Long)
 
-  /** The session machine's step, shared by both operator APIs below:
-    * folds one key's new events, sorted by time, into its open session.
-    * An event less than `gapMs` after the last one extends the session;
-    * a longer gap closes it and opens a new one. Returns the sessions
-    * closed, oldest first, and the open session after the last event
-    * (`state` itself when there are no events). */
-  def sessionStep(state: Option[SessionState], sorted: Seq[UserEvent],
-      gapMs: Long): (Seq[SessionState], Option[SessionState]) =
-    sorted.foldLeft((Vector.empty[SessionState], state)) {
-      case ((closed, Some(s)), e) if e.ts.getTime - s.lastTs < gapMs =>
-        (closed, Some(s.copy(nEvents = s.nEvents + 1, lastTs = e.ts.getTime)))
-      case ((closed, cur), e) =>
-        val t = e.ts.getTime
-        (closed ++ cur, Some(SessionState(1, t, t)))
-    }
-
   private def summary(userId: Long, s: SessionState): SessionOut =
     SessionOut(userId, s.nEvents, s.lastTs - s.start)
 
   /** flatMapGroupsWithState session machine: emits a session summary
-    * when a user is silent past the gap. State is per-key and
-    * WATERMARK-bounded (EventTimeTimeout): sessions close when event
-    * time — not wall clock — passes lastTs+gap, which is replay-safe
-    * and deterministic at 100 TB. (ProcessingTimeTimeout is a trap
-    * here: its `shouldRunAnotherBatch` is unconditionally true, so
-    * the micro-batch engine spins batches nonstop even when idle.) */
+    * when a user is silent past the gap. An event less than `gapMs`
+    * after the last one extends the open session; a longer gap closes
+    * it and opens a new one. State is per-key and WATERMARK-bounded
+    * (EventTimeTimeout): sessions close when event time — not wall
+    * clock — passes lastTs+gap, which is replay-safe and deterministic
+    * at 100 TB. (ProcessingTimeTimeout is a trap here: its
+    * `shouldRunAnotherBatch` is unconditionally true, so the
+    * micro-batch engine spins batches nonstop even when idle.) The
+    * state store is the session's: HDFS-backed by default, RocksDB
+    * when the caller sets it. */
   def sessionize(events: Dataset[UserEvent],
       gapMs: Long = 5 * 60 * 1000): Dataset[SessionOut] = {
     import events.sparkSession.implicits._
@@ -366,7 +351,16 @@ object CloudTrailPipeline {
             // push it out forever and busy-loop the micro-batch engine.
             if (sorted.isEmpty) Iterator.empty
             else {
-              val (closed, cur) = sessionStep(state.getOption, sorted, gapMs)
+              // the sessions the new events close, oldest first, and
+              // the session open after the last event
+              val (closed, cur) =
+                sorted.foldLeft((Vector.empty[SessionState], state.getOption)) {
+                  case ((closed, Some(s)), e) if e.ts.getTime - s.lastTs < gapMs =>
+                    (closed, Some(s.copy(nEvents = s.nEvents + 1, lastTs = e.ts.getTime)))
+                  case ((closed, cur), e) =>
+                    val t = e.ts.getTime
+                    (closed ++ cur, Some(SessionState(1, t, t)))
+                }
               cur.foreach { s =>
                 state.update(s)
                 // must be strictly past the current watermark
@@ -377,64 +371,5 @@ object CloudTrailPipeline {
             }
           }
       }
-  }
-
-  /** Session machine on Spark 4's `transformWithState` — the
-    * arbitrary-state successor of flatMapGroupsWithState: typed state
-    * via `ValueState` + explicit event-time TIMERS instead of a
-    * single per-key timeout. Same semantics as [[sessionize]]; lives
-    * here as the forward API for 100 TB state (RocksDB provider,
-    * per-state TTL, multiple state variables per key).
-    *
-    * Timer discipline: one timer per (key, expected close time); a
-    * firing timer only closes the session if the state still says the
-    * session is idle past the gap (stale timers from superseded
-    * registrations are ignored — `deleteTimer` needs the exact old
-    * timestamp, tracking which costs more state than ignoring).
-    */
-  class SessionProcessor(gapMs: Long)
-      extends StatefulProcessor[Long, UserEvent, SessionOut] {
-    @transient private var state: ValueState[SessionState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[SessionState]("session",
-        org.apache.spark.sql.Encoders.product[SessionState], TTLConfig.NONE)
-
-    override def handleInputRows(userId: Long, rows: Iterator[UserEvent],
-        timers: TimerValues): Iterator[SessionOut] = {
-      val sorted = rows.toSeq.sortBy(_.ts.getTime)
-      if (sorted.isEmpty) Iterator.empty
-      else {
-        val (closed, cur) = sessionStep(
-          if (state.exists()) Some(state.get()) else None, sorted, gapMs)
-        cur.foreach { s =>
-          state.update(s)
-          getHandle.registerTimer(
-            math.max(timers.getCurrentWatermarkInMs() + 1, s.lastTs + gapMs))
-        }
-        closed.iterator.map(summary(userId, _))
-      }
-    }
-
-    override def handleExpiredTimer(userId: Long, timers: TimerValues,
-        expired: ExpiredTimerInfo): Iterator[SessionOut] =
-      if (state.exists() &&
-          state.get().lastTs + gapMs <= expired.getExpiryTimeInMs) {
-        val s = state.get()
-        state.clear()
-        Iterator(summary(userId, s))
-      } else Iterator.empty // stale timer for a superseded session
-  }
-
-  /** [[sessionize]] on the transformWithState API (requires the
-    * RocksDB state store provider — set by the caller/test). */
-  def sessionizeTws(events: Dataset[UserEvent],
-      gapMs: Long = 5 * 60 * 1000): Dataset[SessionOut] = {
-    import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", "1 second")
-      .groupByKey(_.userId)
-      .transformWithState(new SessionProcessor(gapMs),
-        TimeMode.EventTime(), OutputMode.Append())
   }
 }

@@ -10,11 +10,12 @@ import graft.Json.quote
   * and debug — SURVEY.md §2-A). Only what [[CloudTrailPipeline.run]]
   * reads is kept: the sink is passed to `run`, and the dedup watermark
   * is `dedup`'s constant. One immutable read at startup; no config
-  * lookups on the hot path. */
+  * lookups on the hot path. `maxFilesPerTrigger` is the admission
+  * cap: at most that many landed files per micro-batch. */
 case class PipelineConfig(
     inPath: String,
     checkpoint: String,
-    maxFilesPerTrigger: Int)
+    maxFilesPerTrigger: Int = 100)
 
 object PipelineConfig {
 
@@ -27,12 +28,13 @@ object PipelineConfig {
 
   /** Environment surface mirroring the reference's `CT_*` family;
     * other keys are ignored. */
-  def fromEnv(env: Map[String, String] = sys.env): PipelineConfig =
-    PipelineConfig(
+  def fromEnv(env: Map[String, String] = sys.env): PipelineConfig = {
+    val config = PipelineConfig(
       inPath = env.getOrElse("GRAFT_CT_IN_PATH", "/tmp/cloudtrail/landing"),
-      checkpoint = env.getOrElse("GRAFT_CT_CHECKPOINT", "/tmp/cloudtrail/chk"),
-      maxFilesPerTrigger =
-        env.getOrElse("GRAFT_CT_MAX_FILES_PER_TRIGGER", "100").toInt)
+      checkpoint = env.getOrElse("GRAFT_CT_CHECKPOINT", "/tmp/cloudtrail/chk"))
+    env.get("GRAFT_CT_MAX_FILES_PER_TRIGGER")
+      .fold(config)(n => config.copy(maxFilesPerTrigger = n.toInt))
+  }
 }
 
 /** Structured progress logging (reference operator A11: mozlog-format

@@ -235,44 +235,6 @@ class OrderStatsSpec extends GraftSpecBase {
       (None, 2.0, 2L, 2L, 3L), (None, 5.0, 1L, 3L, 3L)))
   }
 
-  test("PrefixOps.runningSums with explicit boundaries: skewed/point-mass domains, cuts outside the domain, unsorted cut input") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(77)
-    for (trial <- 1 to 5) {
-      val n = Seq(1, 9, 64, 200, 150)(trial - 1)
-      // trial 5 = point mass: every key identical (equi-width's worst
-      // case — the explicit cuts must still be correct, if useless)
-      val rows = (1 to n).map { i =>
-        (if (trial == 5) 3.0 else rnd.nextInt(20).toDouble,
-         rnd.nextInt(1001) - 500L, i.toLong)
-      }
-      val df = rows.toDF("k", "v", "id")
-      val cuts = Seq(14.0, -3.0, 3.0, 7.5, 100.0) // unsorted, some outside
-      val withPart = trial % 2 == 0
-      val got = (if (withPart)
-          PrefixOps.runningSums(df, col("k"),
-            Seq(col("k"), col("id")), Seq("rs" -> col("v")),
-            partitionBy = Seq(pmod(col("id"), lit(3L))),
-            boundaries = cuts)
-        else
-          PrefixOps.runningSums(df, col("k"),
-            Seq(col("k"), col("id")), Seq("rs" -> col("v")),
-            boundaries = cuts))
-        .select(col("id"), col("rs"))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val base = org.apache.spark.sql.expressions.Window
-      val w2 = if (withPart)
-          base.partitionBy(pmod(col("id"), lit(3L)))
-            .orderBy(col("k"), col("id"))
-            .rowsBetween(base.unboundedPreceding, base.currentRow)
-        else base.orderBy(col("k"), col("id"))
-          .rowsBetween(base.unboundedPreceding, base.currentRow)
-      val want = df.select(col("id"), sum(col("v")).over(w2).as("rs"))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(got == want, s"trial $trial (n=$n withPart=$withPart)")
-    }
-  }
-
   test("PrefixOps.exclusiveRunningMax: randomized equivalence trials (distinct keys, negatives)") {
     import spark.implicits._
     val rnd = new scala.util.Random(7)

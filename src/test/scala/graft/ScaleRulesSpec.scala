@@ -503,9 +503,8 @@ class ScaleRulesSpec extends GraftSpecBase {
       "agreeing union branches must keep the origin-grounded proof")
   }
 
-  test("md5_bucket / boundary_bucket grouping keys prove bounded STRUCTURALLY; a non-literal modulus does not (round-11, verdict item 2)") {
+  test("md5_bucket keys prove bounded by a literal modulus alone") {
     import graft.functions.expressions.Md5Bucket.md5Bucket
-    import graft.functions.expressions.BoundaryBucket
     val d = Tables.documents(spark, sf)
     // the SketchExactQueries shape, with the b0 vocabulary entry GONE:
     // the type-level image rule (md5_bucket(_, 1024) ∈ {0..1023}) must
@@ -522,15 +521,6 @@ class ScaleRulesSpec extends GraftSpecBase {
       .groupBy(col("zz_unvocabed")).agg(count(lit(1)).as("n"))
     assert(!ScaleRules.boundedLogical(bad.queryExecution.optimizedPlan),
       "md5_bucket with a column modulus must NOT prove bounded")
-    // boundary_bucket: image ⊆ {0..|cuts|}, cuts are construction-time
-    import org.apache.spark.sql.GraftSqlBridge
-    val bb = d.select(GraftSqlBridge.toColumn(
-        BoundaryBucket(GraftSqlBridge
-          .toExpression(col("n_chars").cast("double")),
-          Array(10.0, 100.0, 1000.0))).as("zz_bb"))
-      .groupBy(col("zz_bb")).agg(count(lit(1)).as("n"))
-    assert(ScaleRules.boundedLogical(bb.queryExecution.optimizedPlan),
-      "a boundary_bucket grid must prove bounded structurally")
   }
 
   test("the residual alias vocabulary is EMPTY — every computed grouping key proves structurally (round-12, verdict item 7)") {
@@ -539,7 +529,7 @@ class ScaleRulesSpec extends GraftSpecBase {
     assert(ScaleRules.boundedAliasNames.isEmpty,
       s"residual alias vocabulary re-opened: ${ScaleRules.boundedAliasNames}" +
         " — write a structural image rule instead (Md5Bucket /" +
-        " BoundaryBucket / BitOrAgg / substring-cast precedents)")
+        " BitOrAgg / substring-cast precedents)")
     // the structurally-retired entries must stay OUT: their proofs are
     // the Md5Bucket rule / origin-resolved lowCardNames / BitOrAgg
     // image rule / fixed-length substring-cast rule now

@@ -146,6 +146,13 @@ class StreamingSpec extends GraftSpecBase {
       mem.addData(("a", t)) // redelivery in a later batch
       q.processAllAvailable()
       assert(spark.table("dedup_out").count() === 2)
+      // no eventID: distinct records both pass, an exact copy does not
+      val t1 = Timestamp.valueOf("2024-01-01 00:01:00")
+      mem.addData((null, t), (null, t1), (null, t))
+      q.processAllAvailable()
+      val noId = spark.table("dedup_out").filter(col("eventID").isNull)
+        .select("eventTime").as[Timestamp].collect().sortBy(_.getTime)
+      assert(noId.toSeq === Seq(t, t1))
     } finally q.stop()
   }
 
@@ -202,47 +209,6 @@ class StreamingSpec extends GraftSpecBase {
       assert(out.exists(s => s.userId === 1 && s.nEvents === 1 && s.durationMs === 0))
       assert(out.exists(s => s.userId === 2 && s.nEvents === 1 && s.durationMs === 0))
     } finally q.stop()
-  }
-
-  test("transformWithState sessionization matches flatMapGroupsWithState semantics") {
-    // transformWithState requires the RocksDB state store provider
-    val prevProvider = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val mem = MemoryStream[UserEvent](spark)
-    val q = graft.streaming.CloudTrailPipeline.sessionizeTws(mem.toDS(), gapMs = 2000)
-      .writeStream.format("memory").queryName("sess_tws_out")
-      .outputMode(OutputMode.Append).start()
-    try {
-      val base = Timestamp.valueOf("2024-01-01 00:00:00").getTime
-      mem.addData(
-        UserEvent(1, "click", new Timestamp(base)),
-        UserEvent(1, "view", new Timestamp(base + 1000)),
-        UserEvent(1, "click", new Timestamp(base + 150000)))
-      q.processAllAvailable()
-      val first = spark.table("sess_tws_out").as[SessionOut].collect()
-      assert(first.length === 1)
-      assert(first.head.nEvents === 2 && first.head.durationMs === 1000)
-      // advance the watermark past the open session's gap → the
-      // event-time TIMER fires and closes it
-      mem.addData(UserEvent(2, "click", new Timestamp(base + 300000)))
-      q.processAllAvailable()
-      mem.addData(UserEvent(2, "click", new Timestamp(base + 400000)))
-      q.processAllAvailable()
-      val out = spark.table("sess_tws_out").as[SessionOut].collect()
-      assert(out.length === 3, out.mkString(","))
-      assert(out.exists(s => s.userId === 1 && s.nEvents === 1 && s.durationMs === 0))
-      assert(out.exists(s => s.userId === 2 && s.nEvents === 1 && s.durationMs === 0))
-    } finally {
-      q.stop()
-      prevProvider match {
-        case Some(p) =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
   }
 
   test("PipelineConfig reads the CT_* env surface with defaults (A12)") {
@@ -309,12 +275,21 @@ class StreamingSpec extends GraftSpecBase {
   private def lastStateOps(q: org.apache.spark.sql.streaming.StreamingQuery) =
     q.recentProgress.filter(_.numInputRows > 0).last.stateOperators.toSeq
 
+  /** Gzips `content` into the landing file `dir/name`. */
+  private def writeGz(dir: java.io.File, name: String, content: String): Unit = {
+    val os = new java.util.zip.GZIPOutputStream(
+      new java.io.FileOutputStream(new java.io.File(dir, name)))
+    os.write(content.getBytes("UTF-8")); os.close()
+  }
+
+  /** The pipeline over landing dir `dir`, checkpointed in `chk`. */
+  private def config(dir: java.io.File, chk: java.io.File) =
+    graft.streaming.PipelineConfig(dir.getAbsolutePath, chk.getAbsolutePath)
+
   test("run gives its own query state partitions = cores, RocksDB changelog commits and the 1 s trigger, and leaves the caller's session untouched") {
     val dir = java.nio.file.Files.createTempDirectory("ct_incfg").toFile
     val chk = java.nio.file.Files.createTempDirectory("ct_chkcfg").toFile
-    val os = new java.util.zip.GZIPOutputStream(
-      new java.io.FileOutputStream(new java.io.File(dir, "f1.json.gz")))
-    os.write(envelope("41", "42").getBytes("UTF-8")); os.close()
+    writeGz(dir, "f1.json.gz", envelope("41", "42"))
     val got = java.util.Collections.synchronizedList(
       new java.util.ArrayList[String]())
     TestSink.records = got
@@ -345,23 +320,21 @@ class StreamingSpec extends GraftSpecBase {
   test("an old 32-partition checkpoint restarts through run unchanged: a redelivered eventID is dropped, every other record arrives once") {
     val dir = java.nio.file.Files.createTempDirectory("ct_in_old").toFile
     val chk = java.nio.file.Files.createTempDirectory("ct_chk_old").toFile
-    def writeGz(name: String, content: String): Unit = {
-      val os = new java.util.zip.GZIPOutputStream(
-        new java.io.FileOutputStream(new java.io.File(dir, name)))
-      os.write(content.getBytes("UTF-8")); os.close()
-    }
     val got = java.util.Collections.synchronizedList(
       new java.util.ArrayList[String]())
     TestSink.records = got
-    writeGz("f1.json.gz", envelope("1", "2", "3"))
+    writeGz(dir, "f1.json.gz", envelope("1", "2", "3"))
     // the checkpoint as a run without the query's own confs wrote it:
-    // 32 state partitions, RocksDB snapshots, the default trigger
+    // 32 state partitions, RocksDB snapshots, the default trigger, and
+    // the dedup state keyed on `eventID` alone
     val q1 = keepingConfs(ShufflePartitions, StateStoreProvider) {
       spark.conf.set(ShufflePartitions, "32")
       spark.conf.set(StateStoreProvider,
         graft.streaming.PipelineConfig.RocksDbProvider)
-      toSinkEntries(dedup(decodeEnvelopes(
-          spark.readStream.format("text").load(dir.getAbsolutePath))))
+      toSinkEntries(decodeEnvelopes(
+          spark.readStream.format("text").load(dir.getAbsolutePath))
+          .withWatermark("eventTime", "10 minutes")
+          .dropDuplicatesWithinWatermark("eventID"))
         .writeStream
         .option("checkpointLocation", chk.getAbsolutePath)
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
@@ -371,9 +344,8 @@ class StreamingSpec extends GraftSpecBase {
     try q1.processAllAvailable() finally q1.stop()
     assert(lastStateOps(q1).head.numShufflePartitions === 32)
     assert(got.toArray(Array.empty[String]).sorted.toSeq === Seq("1", "2", "3"))
-    writeGz("f2.json.gz", envelope("3", "4"))
-    val q2 = CloudTrailPipeline.run(spark, dir.getAbsolutePath,
-      chk.getAbsolutePath, TestSink)
+    writeGz(dir, "f2.json.gz", envelope("3", "4"))
+    val q2 = CloudTrailPipeline.run(spark, config(dir, chk), TestSink)
     try q2.processAllAvailable() finally q2.stop()
     // the offset log's partition count wins over defaultParallelism
     assert(lastStateOps(q2).head.numShufflePartitions === 32)
@@ -399,16 +371,14 @@ class StreamingSpec extends GraftSpecBase {
     val cut = gzip(envelope("91", "92"))
     land("f2.json.gz", cut.take(cut.length / 2))
     land("f3.json.gz", envelope("93").getBytes("UTF-8"))
-    val q1 = CloudTrailPipeline.run(spark, dir.getAbsolutePath,
-      chk.getAbsolutePath, TestSink)
+    val q1 = CloudTrailPipeline.run(spark, config(dir, chk), TestSink)
     try {
       q1.processAllAvailable()
       assert(q1.isActive && q1.exception.isEmpty)
     } finally q1.stop()
     assert(got.toArray(Array.empty[String]).sorted.toSeq === Seq("1", "2"))
     land("f4.json.gz", gzip(envelope("3")))
-    val q2 = CloudTrailPipeline.run(spark, dir.getAbsolutePath,
-      chk.getAbsolutePath, TestSink)
+    val q2 = CloudTrailPipeline.run(spark, config(dir, chk), TestSink)
     try {
       q2.processAllAvailable()
       assert(q2.isActive && q2.exception.isEmpty)
@@ -419,23 +389,16 @@ class StreamingSpec extends GraftSpecBase {
   test("checkpoint restart does not redeliver committed files (exactly-once line)") {
     val dir = java.nio.file.Files.createTempDirectory("ct_in2").toFile
     val chk = java.nio.file.Files.createTempDirectory("ct_chk2").toFile
-    def writeGz(name: String, content: String): Unit = {
-      val os = new java.util.zip.GZIPOutputStream(
-        new java.io.FileOutputStream(new java.io.File(dir, name)))
-      os.write(content.getBytes("UTF-8")); os.close()
-    }
     val got = java.util.Collections.synchronizedList(
       new java.util.ArrayList[String]())
     TestSink.records = got
-    writeGz("f1.json.gz", envelope("1", "2"))
-    val q1 = CloudTrailPipeline.run(spark, dir.getAbsolutePath,
-      chk.getAbsolutePath, TestSink)
+    writeGz(dir, "f1.json.gz", envelope("1", "2"))
+    val q1 = CloudTrailPipeline.run(spark, config(dir, chk), TestSink)
     try q1.processAllAvailable() finally q1.stop()
     assert(got.toArray(Array.empty[String]).sorted.toSeq === Seq("1", "2"))
     // restart from the same checkpoint with a new file present
-    writeGz("f2.json.gz", envelope("8"))
-    val q2 = CloudTrailPipeline.run(spark, dir.getAbsolutePath,
-      chk.getAbsolutePath, TestSink)
+    writeGz(dir, "f2.json.gz", envelope("8"))
+    val q2 = CloudTrailPipeline.run(spark, config(dir, chk), TestSink)
     try q2.processAllAvailable() finally q2.stop()
     // f1's records were committed in the offset log → only "8" is new
     assert(got.toArray(Array.empty[String]).sorted.toSeq === Seq("1", "2", "8"))
@@ -453,18 +416,12 @@ class StreamingSpec extends GraftSpecBase {
     // RecordSink's scaladoc demands of implementations.
     val dir = java.nio.file.Files.createTempDirectory("ct_in3").toFile
     val chk = java.nio.file.Files.createTempDirectory("ct_chk3").toFile
-    def writeGz(name: String, content: String): Unit = {
-      val os = new java.util.zip.GZIPOutputStream(
-        new java.io.FileOutputStream(new java.io.File(dir, name)))
-      os.write(content.getBytes("UTF-8")); os.close()
-    }
-    writeGz("f1.json.gz", envelope("1", "2", "3"))
+    writeGz(dir, "f1.json.gz", envelope("1", "2", "3"))
     CrashingSink.delivered =
       java.util.Collections.synchronizedSet(new java.util.HashSet[String]())
     CrashingSink.rawDeliveries = new java.util.concurrent.atomic.AtomicInteger(0)
     CrashingSink.crashOnce = new java.util.concurrent.atomic.AtomicBoolean(true)
-    val q1 = CloudTrailPipeline.run(spark, dir.getAbsolutePath,
-      chk.getAbsolutePath, CrashingSink)
+    val q1 = CloudTrailPipeline.run(spark, config(dir, chk), CrashingSink)
     val crashed = try { q1.processAllAvailable(); false }
       catch { case _: Throwable => true } finally q1.stop()
     assert(crashed, "the injected mid-batch crash must fail the first query")
@@ -475,8 +432,7 @@ class StreamingSpec extends GraftSpecBase {
     assert(CrashingSink.rawDeliveries.get() >= 1,
       "at least one record must land before the crash")
     // restart from the same checkpoint: the uncommitted batch replays
-    val q2 = CloudTrailPipeline.run(spark, dir.getAbsolutePath,
-      chk.getAbsolutePath, CrashingSink)
+    val q2 = CloudTrailPipeline.run(spark, config(dir, chk), CrashingSink)
     try q2.processAllAvailable() finally q2.stop()
     import scala.jdk.CollectionConverters._
     assert(CrashingSink.delivered.asScala.toSeq.sorted === Seq("1", "2", "3"),
@@ -487,69 +443,64 @@ class StreamingSpec extends GraftSpecBase {
       s"replay must redeliver the whole file (raw=${CrashingSink.rawDeliveries.get()})")
   }
 
-  test("crash-replay across a PARTITIONING change: restart with a different sink repartition, still no dupes/losses") {
-    // Round-9 (verdict item 6): the mid-batch-crash test above replays
-    // into the SAME sink partitioning; a real redeployment often
-    // restarts with a resharded sink (different repartition / stream
-    // count). Exactly-once must come from the keyed idempotent sink,
-    // not from records landing in the same partition layout — so:
-    // crash mid-batch at 1 sink partition, restart the SAME checkpoint
-    // at 4, assert no dupes and no losses.
+  test("crash-replay across a maxFilesPerTrigger change: exactly once") {
+    // A restart may change the admission cap. The batch that crashed
+    // replays with the files its offset log names, not with the new
+    // cap's share of the landing dir, and the files after it arrive
+    // under the new cap: crash mid-batch at 1 file a trigger, restart
+    // the SAME checkpoint at 100.
     val dir = java.nio.file.Files.createTempDirectory("ct_in4").toFile
     val chk = java.nio.file.Files.createTempDirectory("ct_chk4").toFile
-    def writeGz(name: String, content: String): Unit = {
-      val os = new java.util.zip.GZIPOutputStream(
-        new java.io.FileOutputStream(new java.io.File(dir, name)))
-      os.write(content.getBytes("UTF-8")); os.close()
+    // the file source admits files oldest first: f1, then f2, then f3
+    val t0 = System.currentTimeMillis() - 60000
+    Seq("f1" -> envelope("1", "2", "3"), "f2" -> envelope("4", "5"),
+        "f3" -> envelope("6")).zipWithIndex.foreach { case ((f, env), i) =>
+      writeGz(dir, s"$f.json.gz", env)
+      new java.io.File(dir, s"$f.json.gz").setLastModified(t0 + i * 1000)
     }
-    writeGz("f1.json.gz", envelope("1", "2", "3", "4", "5"))
     CrashingSink.delivered =
       java.util.Collections.synchronizedSet(new java.util.HashSet[String]())
     CrashingSink.rawDeliveries = new java.util.concurrent.atomic.AtomicInteger(0)
     CrashingSink.crashOnce = new java.util.concurrent.atomic.AtomicBoolean(true)
-    val q1 = CloudTrailPipeline.run(spark, dir.getAbsolutePath,
-      chk.getAbsolutePath, CrashingSink, sinkPartitions = Some(1))
+    val q1 = CloudTrailPipeline.run(spark,
+      config(dir, chk).copy(maxFilesPerTrigger = 1), CrashingSink)
     val crashed = try { q1.processAllAvailable(); false }
       catch { case _: Throwable => true } finally q1.stop()
     assert(crashed, "the injected mid-batch crash must fail the first query")
-    assert(CrashingSink.rawDeliveries.get() >= 1)
-    // restart from the SAME checkpoint with a different partitioning
-    val q2 = CloudTrailPipeline.run(spark, dir.getAbsolutePath,
-      chk.getAbsolutePath, CrashingSink, sinkPartitions = Some(4))
-    try q2.processAllAvailable() finally q2.stop()
+    // the failed job's other tasks may still be draining: wait for them
+    // before counting what arrived before the restart
+    val deadline = System.currentTimeMillis() + 10000
+    while (spark.sparkContext.statusTracker.getActiveJobIds().nonEmpty &&
+           System.currentTimeMillis() < deadline) Thread.sleep(50)
+    val rawBefore = CrashingSink.rawDeliveries.get()
+    assert(rawBefore >= 1, "at least one record must land before the crash")
     import scala.jdk.CollectionConverters._
+    assert(CrashingSink.delivered.asScala.forall(Set("1", "2", "3")),
+      "only the first file's records can land before the crash")
+    val q2 = CloudTrailPipeline.run(spark, config(dir, chk), CrashingSink)
+    try q2.processAllAvailable() finally q2.stop()
+    // one text line per file: the replayed batch keeps its one file,
+    // then the new cap takes the other two in one batch
+    val batchRows = q2.recentProgress.map(_.numInputRows).filter(_ > 0).toSeq
+    assert(batchRows === Seq(1L, 2L), batchRows)
     assert(CrashingSink.delivered.asScala.toSeq.sorted ===
-      Seq("1", "2", "3", "4", "5"),
-      "no losses after replaying into a resharded sink")
-    assert(CrashingSink.rawDeliveries.get() > 5,
-      s"replay must redeliver the whole file " +
-        s"(raw=${CrashingSink.rawDeliveries.get()})")
-    // a fresh file through the NEW partitioning proves steady-state
-    // delivery after the reshard (not just the replayed batch)
-    writeGz("f2.json.gz", envelope("9"))
-    val q3 = CloudTrailPipeline.run(spark, dir.getAbsolutePath,
-      chk.getAbsolutePath, CrashingSink, sinkPartitions = Some(4))
-    try q3.processAllAvailable() finally q3.stop()
-    assert(CrashingSink.delivered.asScala.toSeq.sorted ===
-      Seq("1", "2", "3", "4", "5", "9"))
+      Seq("1", "2", "3", "4", "5", "6"), "no losses after the replay")
+    // after the restart every record arrives once: the replay resends
+    // the first file's 3 records and nothing else is sent twice
+    assert(CrashingSink.rawDeliveries.get() - rawBefore === 6,
+      s"raw deliveries after the restart: ${CrashingSink.rawDeliveries.get() - rawBefore}")
   }
 
   test("end-to-end file pipeline: gzip envelope files → sink (A1-A10)") {
     val dir = java.nio.file.Files.createTempDirectory("ct_in").toFile
     val chk = java.nio.file.Files.createTempDirectory("ct_chk").toFile
     // two gzipped landing files, 3 + 1 records, one duplicated eventID
-    def writeGz(name: String, content: String): Unit = {
-      val os = new java.util.zip.GZIPOutputStream(
-        new java.io.FileOutputStream(new java.io.File(dir, name)))
-      os.write(content.getBytes("UTF-8")); os.close()
-    }
-    writeGz("f1.json.gz", envelope("1", "2", "3"))
-    writeGz("f2.json.gz", envelope("3", "4"))
+    writeGz(dir, "f1.json.gz", envelope("1", "2", "3"))
+    writeGz(dir, "f2.json.gz", envelope("3", "4"))
     val got = java.util.Collections.synchronizedList(
       new java.util.ArrayList[String]())
     TestSink.records = got
-    val q = CloudTrailPipeline.run(spark, dir.getAbsolutePath,
-      chk.getAbsolutePath, TestSink)
+    val q = CloudTrailPipeline.run(spark, config(dir, chk), TestSink)
     try q.processAllAvailable() finally q.stop()
     val keys = got.toArray(Array.empty[String]).toSeq
     assert(keys.sorted === Seq("1", "2", "3", "4")) // dedup dropped one "3"
@@ -558,19 +509,14 @@ class StreamingSpec extends GraftSpecBase {
   test("maxFilesPerTrigger bounds admission: one landing file per micro-batch") {
     val dir = java.nio.file.Files.createTempDirectory("ct_mft_in").toFile
     val chk = java.nio.file.Files.createTempDirectory("ct_mft_chk").toFile
-    def writeGz(name: String, content: String): Unit = {
-      val os = new java.util.zip.GZIPOutputStream(
-        new java.io.FileOutputStream(new java.io.File(dir, name)))
-      os.write(content.getBytes("UTF-8")); os.close()
-    }
-    writeGz("f1.json.gz", envelope("1", "2"))
-    writeGz("f2.json.gz", envelope("3", "4", "5"))
-    writeGz("f3.json.gz", envelope("6"))
+    writeGz(dir, "f1.json.gz", envelope("1", "2"))
+    writeGz(dir, "f2.json.gz", envelope("3", "4", "5"))
+    writeGz(dir, "f3.json.gz", envelope("6"))
     val got = java.util.Collections.synchronizedList(
       new java.util.ArrayList[String]())
     TestSink.records = got
-    val q = CloudTrailPipeline.run(spark, dir.getAbsolutePath,
-      chk.getAbsolutePath, TestSink, maxFilesPerTrigger = 1)
+    val q = CloudTrailPipeline.run(spark,
+      config(dir, chk).copy(maxFilesPerTrigger = 1), TestSink)
     try q.processAllAvailable() finally q.stop()
     // Each envelope file is one text line, so with admission capped at
     // 1 file/trigger every non-empty micro-batch reads exactly 1 input
